@@ -9,7 +9,7 @@ Our engine models that catalog as a set of small DataFrames/views — the
 
 The same fixture rows are rendered two ways so every catalog operator is
 hash-checkable by the driver:
-  * `ensure_catalog_views(spark)` — Spark temp views via createDataFrame;
+  * `ensure_catalog_views(spark)` — Spark temp views over `local_frame`s;
   * `duckdb_with_prefix(tables)`  — a `WITH t(...) AS (VALUES ...)` SQL
     prefix so the DuckDB oracle evaluates the *same* query body over the
     *same* rows.
@@ -22,10 +22,14 @@ DuckDB uses double quotes — a shared query body must avoid quoting.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import SparkSession
 from pyspark.sql.types import (
     DoubleType, IntegerType, LongType, StringType, StructField, StructType,
 )
+
+from iq_to_hdl_migration_spark.session import local_frame
 
 # name -> (columns: [(col, kind)], rows); kind in {int, long, str, double}
 CATALOG_FIXTURE: dict[str, tuple[list[tuple[str, str]], list[tuple]]] = {
@@ -341,21 +345,21 @@ def _spark_schema(cols: list[tuple[str, str]]) -> StructType:
     return StructType([StructField(n, _SPARK_TYPES[k], True) for n, k in cols])
 
 
-_REGISTERED: set[int] = set()  # SparkSession ids with views installed
+# Sessions with the views installed. Weak, and keyed on the session
+# itself: a recycled id() of a collected session must not count.
+_REGISTERED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
 
 
 def ensure_catalog_views(spark: SparkSession) -> None:
     """Register every fixture table as a temp view (idempotent, cheap)."""
-    key = id(spark)
-    if key in _REGISTERED:
+    if spark in _REGISTERED:
         return
     for name, (cols, rows) in CATALOG_FIXTURE.items():
-        df = spark.createDataFrame(rows, schema=_spark_schema(cols))
-        # Catalog snapshots are broadcast-size by definition (SURVEY
-        # §2.3): hint it, because createDataFrame relations carry no
-        # size statistics and would otherwise plan sort-merge joins.
-        df.hint("broadcast").createOrReplaceTempView(name)
-    _REGISTERED.add(key)
+        # LocalRelations carry size statistics, so joins against these
+        # broadcast-size snapshots (SURVEY §2.3) broadcast by stats
+        local_frame(spark, rows, _spark_schema(cols)) \
+            .createOrReplaceTempView(name)
+    _REGISTERED.add(spark)
 
 
 def _duck_lit(v, kind: str) -> str:

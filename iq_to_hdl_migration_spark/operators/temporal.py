@@ -114,17 +114,8 @@ def bin_range_join(
         ),
     )
     fact_binned = fact.withColumn("_bin", F.floor(point_col / bin_width))
-    joined = fact_binned.join(
-        F.broadcast(binned_ranges)
-        if _is_small(ranges) else binned_ranges,
-        on="_bin",
-    )
+    joined = fact_binned.join(binned_ranges, on="_bin")
     return joined.filter(
         (point_col >= F.col(lo)) & (point_col < F.col(hi))
     ).drop("_bin")
 
-
-def _is_small(df: DataFrame) -> bool:
-    """Heuristic: a createDataFrame/local-relation interval table has no
-    file source and should be broadcast (no stats → Spark would SMJ)."""
-    return "LocalRelation" in df._jdf.queryExecution().logical().toString()

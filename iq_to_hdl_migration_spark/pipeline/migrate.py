@@ -23,18 +23,21 @@ UNSIGNED BIGINT (migration.py:1471); Spark's LongType is signed
 
 from __future__ import annotations
 
-import time
 import uuid
 
 from dataclasses import dataclass
+from decimal import Decimal
 from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-STATUS_SCHEMA = ("table_key string, rowcount decimal(20,0), "
+from iq_to_hdl_migration_spark.session import local_frame
+
+_EVENT_SCHEMA = ("table_key string, rowcount decimal(20,0), "
                  "size_bytes bigint, state string, attempt int, "
-                 "run_id string, ts timestamp")
+                 "run_id string")
+STATUS_SCHEMA = _EVENT_SCHEMA + ", ts timestamp"
 
 
 class MigrationStatus:
@@ -49,23 +52,26 @@ class MigrationStatus:
         self.spark = spark
         self.path = str(path)
 
+    def event(self, table_key: str, state: str, rowcount: int = 0,
+              size_bytes: int = 0, attempt: int = 0,
+              run_id: str = "") -> DataFrame:
+        """One ledger event as a one-row frame in STATUS_SCHEMA."""
+        row = [(table_key, Decimal(rowcount), size_bytes, state, attempt,
+                run_id or uuid.uuid4().hex[:8])]
+        return (local_frame(self.spark, row, _EVENT_SCHEMA)
+                .withColumn("ts", F.current_timestamp()))
+
     def append(self, table_key: str, state: str, rowcount: int = 0,
                size_bytes: int = 0, attempt: int = 0,
                run_id: str = "") -> None:
-        row = [(table_key, rowcount, size_bytes, state, attempt,
-                run_id or uuid.uuid4().hex[:8])]
-        df = (self.spark.createDataFrame(
-                row, "table_key string, rowcount long, size_bytes long, "
-                     "state string, attempt int, run_id string")
-              .withColumn("rowcount", F.col("rowcount").cast("decimal(20,0)"))
-              .withColumn("ts", F.current_timestamp()))
-        df.coalesce(1).write.mode("append").parquet(self.path)
+        self.event(table_key, state, rowcount, size_bytes, attempt, run_id) \
+            .coalesce(1).write.mode("append").parquet(self.path)
 
     def all_events(self) -> DataFrame:
         try:
             return self.spark.read.schema(STATUS_SCHEMA).parquet(self.path)
         except Exception:
-            return self.spark.createDataFrame([], STATUS_SCHEMA)
+            return local_frame(self.spark, [], STATUS_SCHEMA)
 
     def current(self) -> DataFrame:
         """Latest state per table (window over event log)."""
@@ -209,9 +215,9 @@ def listing_reconcile(spark: SparkSession, source_dir: str,
                 if p.is_file() and not p.name.startswith((".", "_"))]
 
     schema = "path string, size_bytes long"
-    src = spark.createDataFrame(listing(source_dir) or [], schema) \
+    src = local_frame(spark, listing(source_dir), schema) \
         .withColumnRenamed("size_bytes", "src_size")
-    tgt = spark.createDataFrame(listing(target_dir) or [], schema) \
+    tgt = local_frame(spark, listing(target_dir), schema) \
         .withColumnRenamed("size_bytes", "tgt_size")
     joined = src.join(tgt, "path", "full_outer")
     return joined.select(

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from iq_to_hdl_migration_spark.operators.dimjoin import scaled_dim
 from iq_to_hdl_migration_spark.queries import register
 from iq_to_hdl_migration_spark.queries import dedup_oracles as _dedup_oracles
+from iq_to_hdl_migration_spark.session import local_frame
 from iq_to_hdl_migration_spark.sources.tables import load_table
 
 _TOKS_SPARK = r"split(lower(trim(text)), '\\s+')"
@@ -1412,7 +1413,7 @@ def text_vocab_coverage_curve(spark: SparkSession,
          .rowsBetween(Window.unboundedPreceding, -1))
     ranked = hist.withColumn(
         "cum_before", F.coalesce(F.sum("m").over(w), F.lit(0)))
-    ks = spark.createDataFrame([(k,) for k in _VOCAB_KS], "k bigint")
+    ks = local_frame(spark, [(k,) for k in _VOCAB_KS], "k bigint")
     take = F.least(F.col("m"),
                    F.greatest(F.col("k") - F.col("cum_before"), F.lit(0)))
     return (ranked.crossJoin(F.broadcast(ks))

@@ -18,6 +18,7 @@ from iq_to_hdl_migration_spark.catalog.fixture import ensure_catalog_views
 from iq_to_hdl_migration_spark.ddl import engine as E
 from iq_to_hdl_migration_spark.ddl import rules as R
 from iq_to_hdl_migration_spark.queries import register
+from iq_to_hdl_migration_spark.session import local_frame
 
 _FIXTURE = Path(__file__).resolve().parents[1] / "ddl/fixtures/reload_fixture.sql"
 _CACHE: dict[str, E.RewriteResult] = {}
@@ -86,8 +87,7 @@ def ddl_rule_hit_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         key = (h["rule"], h["action"])
         rows[key] = rows.get(key, 0) + 1
     data = [(r, a, n) for (r, a), n in sorted(rows.items())]
-    return spark.createDataFrame(data, ["rule", "action", "n"]) \
-        .selectExpr("rule", "action", "CAST(n AS BIGINT) AS n")
+    return local_frame(spark, data, "rule string, action string, n bigint")
 
 
 @register(
@@ -101,11 +101,9 @@ def ddl_rule_hit_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ddl_output_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = _result(spark)
     md5 = hashlib.md5(res.text().encode()).hexdigest()
-    return spark.createDataFrame(
-        [(md5, len(res.lines), len(res.fk_statements))],
-        ["text_md5", "n_lines", "n_fk_statements"]) \
-        .selectExpr("text_md5", "CAST(n_lines AS BIGINT) AS n_lines",
-                    "CAST(n_fk_statements AS BIGINT) AS n_fk_statements")
+    return local_frame(
+        spark, [(md5, len(res.lines), len(res.fk_statements))],
+        "text_md5 string, n_lines bigint, n_fk_statements bigint")
 
 
 @register(
@@ -123,5 +121,4 @@ def ddl_output_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ddl_fk_statements(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = _result(spark)
     data = [(i + 1, s) for i, s in enumerate(res.fk_statements)]
-    return spark.createDataFrame(data, ["line_no", "stmt_line"]) \
-        .selectExpr("CAST(line_no AS BIGINT) AS line_no", "stmt_line")
+    return local_frame(spark, data, "line_no bigint, stmt_line string")

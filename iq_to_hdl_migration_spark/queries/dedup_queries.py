@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from iq_to_hdl_migration_spark.operators import dedup
 from iq_to_hdl_migration_spark.queries import register
+from iq_to_hdl_migration_spark.session import local_frame
 from iq_to_hdl_migration_spark.queries.dedup_oracles import (
     _MINHASH_PREFIX,
     cluster_quality_oracle,
@@ -978,8 +979,8 @@ def dedup_method_agreement_matrix(spark: SparkSession,
     pairs = (ex.withColumn("m", F.lit("exact"))
              .unionByName(mh.withColumn("m", F.lit("minhash_lsh")))
              .unionByName(sh.withColumn("m", F.lit("simhash"))))
-    spine = spark.createDataFrame(
-        [("exact",), ("minhash_lsh",), ("simhash",)], "m string")
+    spine = local_frame(
+        spark, [("exact",), ("minhash_lsh",), ("simhash",)], "m string")
     sizes = (spine.join(pairs.groupBy("m")
                         .agg(F.count(F.lit(1)).cast("bigint").alias("cn")),
                         "m", "left")

@@ -13,6 +13,7 @@ from iq_to_hdl_migration_spark.catalog.fixture import (
     CATALOG_FIXTURE, duckdb_with_prefix, ensure_catalog_views)
 from iq_to_hdl_migration_spark.operators.planning import lpt_assign
 from iq_to_hdl_migration_spark.queries import register
+from iq_to_hdl_migration_spark.session import local_frame
 
 
 def _shared(name: str, tables: list[str], body: str, doc: str) -> None:
@@ -55,8 +56,8 @@ def o2_lpt_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = [(tid, size)
              for tid, _rc, size in CATALOG_FIXTURE["table_stats"][1]]
     rows = lpt_assign(stats, n_buckets=3)
-    return spark.createDataFrame(
-        rows, "table_id int, size_bytes long, bucket int, "
+    return local_frame(
+        spark, rows, "table_id int, size_bytes long, bucket int, "
               "order_in_bucket int")
 
 

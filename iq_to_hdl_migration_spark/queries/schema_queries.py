@@ -14,6 +14,7 @@ from iq_to_hdl_migration_spark.catalog.fixture import (
 from iq_to_hdl_migration_spark.config import validate_config
 from iq_to_hdl_migration_spark.queries import register
 from iq_to_hdl_migration_spark.schema.generate import generate_spark_ddl
+from iq_to_hdl_migration_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # S7: generated DDL digest (deterministic over the catalog fixture).
@@ -49,8 +50,8 @@ def s7_generated_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [(k, ddl.count("`") // 2,
              hashlib.md5(ddl.encode()).hexdigest())
             for k, ddl in generate_spark_ddl(spark)]
-    return spark.createDataFrame(
-        rows, "owner_table string, n_idents int, ddl_md5 string")
+    return local_frame(
+        spark, rows, "owner_table string, n_idents int, ddl_md5 string")
 
 
 # ---------------------------------------------------------------------------
@@ -80,8 +81,8 @@ _FIXTURE_CFG = {
 )
 def s12_config_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = validate_config(_FIXTURE_CFG)
-    return spark.createDataFrame(
-        rows, "field string, value string, verdict string, detail string")
+    return local_frame(spark, rows, "field string, value string, "
+                                    "verdict string, detail string")
 
 
 # ---------------------------------------------------------------------------

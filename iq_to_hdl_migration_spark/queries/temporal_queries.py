@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from iq_to_hdl_migration_spark.operators.temporal import asof_join, bin_range_join
 from iq_to_hdl_migration_spark.queries import register
+from iq_to_hdl_migration_spark.session import local_frame
 from iq_to_hdl_migration_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -92,7 +93,7 @@ _BRACKET_VALUES = ", ".join(
 def range_join_price_bracket(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_extendedprice", "l_discount")
-    ranges = spark.createDataFrame(_BRACKETS, "label string, lo double, hi double")
+    ranges = local_frame(spark, _BRACKETS, "label string, lo double, hi double")
     joined = bin_range_join(li, ranges, point="l_extendedprice")
     rev = (F.col("l_extendedprice").cast("decimal(12,2)")
            * (F.lit(1) - F.col("l_discount").cast("decimal(4,2)")))

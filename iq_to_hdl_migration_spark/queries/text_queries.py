@@ -15,6 +15,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from iq_to_hdl_migration_spark.queries import register
+from iq_to_hdl_migration_spark.session import local_frame
 from iq_to_hdl_migration_spark.sources.tables import load_table
 
 _STOPWORDS = ["the", "a", "and", "of", "to", "in", "is"]
@@ -685,8 +686,8 @@ def text_contamination_incremental(spark: SparkSession,
     cut = docs.agg(F.floor(F.max("doc_id") * 0.6).cast("bigint")
                    ).first()[0]
     if cut is None:
-        return spark.createDataFrame(
-            [], "id_batch bigint, id_base bigint, n_shared bigint")
+        return local_frame(
+            spark, [], "id_batch bigint, id_base bigint, n_shared bigint")
     # at scale: the base fps are the persisted index (one-time build);
     # here both sides derive from the memoized whole-corpus index —
     # fingerprints are per-document, so subsetting commutes

@@ -9,7 +9,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from collections.abc import Iterable, Sequence
+
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _make_type_verifier
 
 
 def get_spark(app_name: str = "iq_to_hdl_migration_spark",
@@ -54,3 +59,33 @@ def get_spark(app_name: str = "iq_to_hdl_migration_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Sequence],
+                schema: str | StructType) -> DataFrame:
+    """DataFrame over driver-side rows, as a JVM `LocalRelation`.
+
+    `createDataFrame(<list>)` is `parallelize` + a Python-RDD scan:
+    every scan of the frame starts Python-worker tasks, and the plan
+    carries no size statistics. An Arrow table instead lands in the JVM
+    as a `LocalRelation` (up to
+    `spark.sql.execution.arrow.localRelationThreshold`, above it a JVM
+    scan of the Arrow batches): no Python worker, real statistics, and
+    filter/project-only lookups fold to a local result at plan time.
+
+    `schema` is a DDL string or a StructType; the frame's schema is
+    exactly that one. Every row is checked against it first, as
+    `createDataFrame`'s `verifySchema` does, so a wrong-typed value or
+    a None in a non-nullable field still raises.
+    """
+    struct = (schema if isinstance(schema, StructType)
+              else StructType.fromDDL(schema))
+    rows = list(rows)
+    verify = _make_type_verifier(struct)
+    for row in rows:
+        verify(row)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(struct.fields)
+    table = pa.table([pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+                     schema=arrow)
+    return spark.createDataFrame(table, schema=struct)

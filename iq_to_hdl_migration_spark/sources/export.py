@@ -20,6 +20,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from iq_to_hdl_migration_spark.session import local_frame
+
 # The reference probes the source DB charset and remaps the one name
 # Python can't decode (Common/common.py:342-347). Spark's csv reader
 # takes any java.nio charset name; this remap table keeps the same
@@ -167,8 +169,8 @@ def export_jsonl_sharded(df: DataFrame, path: str,
     rows = [(f, counts.get(f, 0), size)
             for f, size in _hadoop_listing(spark, path)
             if f.startswith("part-")]
-    return spark.createDataFrame(
-        rows, "file string, n_rows bigint, n_bytes bigint")
+    return local_frame(
+        spark, rows, "file string, n_rows bigint, n_bytes bigint")
 
 
 def _hadoop_listing(spark, path: str) -> list[tuple[str, int]]:

@@ -15,6 +15,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from iq_to_hdl_migration_spark.session import local_frame
+
 _DATA = Path(__file__).resolve().parent / "data"
 
 
@@ -38,5 +40,5 @@ def load_login_policy_defaults(
 
 def options_rules_df(spark: SparkSession,
                      name: str = "dbopts_noncustomer.csv") -> DataFrame:
-    return spark.createDataFrame(
-        [(n,) for n in load_option_names(name)], ["option_name"])
+    return local_frame(spark, [(n,) for n in load_option_names(name)],
+                       "option_name string")

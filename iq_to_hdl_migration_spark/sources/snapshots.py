@@ -36,6 +36,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from iq_to_hdl_migration_spark.session import local_frame
+
 __all__ = ["write_snapshot", "read_snapshot", "versions", "rollback",
            "vacuum", "current_version", "diff_snapshots"]
 
@@ -131,7 +133,7 @@ def read_snapshot(spark: SparkSession, table_dir: str,
     m = _load_manifest(table_dir, v)
     root = _local_dir(table_dir)
     if not m["files"]:
-        return spark.createDataFrame([], m["schema"])
+        return local_frame(spark, [], m["schema"])
     return spark.read.parquet(*(str(root / f) for f in m["files"]))
 
 
@@ -203,7 +205,7 @@ def diff_snapshots(spark: SparkSession, table_dir: str,
     def _read(files: list[str], schema: str) -> DataFrame:
         root = _local_dir(table_dir)
         if not files:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         return spark.read.parquet(*(str(root / f) for f in files))
 
     # Manifest fast path (round 14, guide §6: manifests make change

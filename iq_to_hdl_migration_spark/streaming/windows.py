@@ -26,6 +26,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from iq_to_hdl_migration_spark.session import local_frame
+
 # Canonical post-normalization schema (what every operator below sees).
 EVENTS_SCHEMA = ("event_id bigint, ts timestamp, user_id bigint, "
                  "event_type string, value double, props string")
@@ -407,8 +409,8 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
     if cut is None:
         # empty corpus: no arrivals to stream — return the empty pair
         # frame the batch twin would produce (same schema)
-        return spark.createDataFrame(
-            [], "id_a bigint, id_b bigint, est_jaccard double")
+        return local_frame(
+            spark, [], "id_a bigint, id_b bigint, est_jaccard double")
     batch1 = docs.where(F.col("doc_id") <= cut)
     batch2 = docs.where(F.col("doc_id") > cut)
 
@@ -845,8 +847,8 @@ def streaming_market_basket(spark: SparkSession, sf_dir: str,
     os.makedirs(arrivals_dir)
     os.makedirs(snap_dir)
 
-    empty = spark.createDataFrame(
-        [], "part_a bigint, part_b bigint, n bigint")
+    empty = local_frame(
+        spark, [], "part_a bigint, part_b bigint, n bigint")
     empty.write.parquet(os.path.join(snap_dir, "00000_init"))
 
     lo, hi = _id_span(li, "l_orderkey")
@@ -964,7 +966,7 @@ def streaming_ab_test(spark: SparkSession, sf_dir: str,
     os.makedirs(snap_dir)
     atexit.register(shutil.rmtree, work, ignore_errors=True)
 
-    empty = spark.createDataFrame([], "user_id bigint, is_conv int")
+    empty = local_frame(spark, [], "user_id bigint, is_conv int")
     empty.write.parquet(os.path.join(snap_dir, "00000_init"))
 
     lo, hi = _id_span(ev, "event_id")
@@ -1069,8 +1071,8 @@ def streaming_boilerplate_gate(spark: SparkSession, sf_dir: str,
     os.makedirs(arrivals_dir)
     os.makedirs(snap_dir)
 
-    empty = spark.createDataFrame(
-        [], "source string, n_docs_kept bigint, n_tokens_kept bigint")
+    empty = local_frame(
+        spark, [], "source string, n_docs_kept bigint, n_tokens_kept bigint")
     empty.write.parquet(os.path.join(snap_dir, "00000_init"))
 
     lo, hi = _id_span(docs, "doc_id")
@@ -1192,7 +1194,7 @@ def streaming_user_activity_gini(spark: SparkSession, sf_dir: str,
     os.makedirs(snap_dir)
     atexit.register(shutil.rmtree, work, ignore_errors=True)
 
-    empty = spark.createDataFrame([], "user_id bigint, n_events bigint")
+    empty = local_frame(spark, [], "user_id bigint, n_events bigint")
     empty.write.parquet(os.path.join(snap_dir, "00000_init"))
 
     lo, hi = _id_span(ev, "event_id")
@@ -1374,7 +1376,7 @@ def _run_masked_fold(spark: SparkSession, sf_dir: str, key_tag: str,
     os.makedirs(snap_dir)
     atexit.register(shutil.rmtree, work, ignore_errors=True)
 
-    empty = spark.createDataFrame([], RETENTION_STATE_SCHEMA)
+    empty = local_frame(spark, [], RETENTION_STATE_SCHEMA)
     empty.write.parquet(os.path.join(snap_dir, "00000_init"))
 
     lo, hi = _id_span(ev, "event_id")
@@ -1571,7 +1573,7 @@ def streaming_bot_score(spark: SparkSession, sf_dir: str,
     os.makedirs(snap_dir)
     atexit.register(shutil.rmtree, work, ignore_errors=True)
 
-    empty = spark.createDataFrame([], BOT_STATE_SCHEMA)
+    empty = local_frame(spark, [], BOT_STATE_SCHEMA)
     empty.write.parquet(os.path.join(snap_dir, "00000_init"))
 
     lo, hi = _id_span(ev, "event_id")
@@ -1667,8 +1669,8 @@ def streaming_type_diversity(spark: SparkSession, sf_dir: str,
     os.makedirs(snap_dir)
     atexit.register(shutil.rmtree, work, ignore_errors=True)
 
-    empty = spark.createDataFrame(
-        [], "user_id bigint, event_type string, n_events bigint")
+    empty = local_frame(
+        spark, [], "user_id bigint, event_type string, n_events bigint")
     empty.write.parquet(os.path.join(snap_dir, "00000_init"))
 
     lo, hi = _id_span(ev, "event_id")
@@ -1825,7 +1827,7 @@ def streaming_gap_histogram(spark: SparkSession, sf_dir: str,
     os.makedirs(snap_dir)
     atexit.register(shutil.rmtree, work, ignore_errors=True)
 
-    empty = spark.createDataFrame([], GAP_HIST_STATE_SCHEMA)
+    empty = local_frame(spark, [], GAP_HIST_STATE_SCHEMA)
     empty.write.parquet(os.path.join(snap_dir, "00000_init"))
 
     lo, hi = _id_span(ev, "event_id")
@@ -1980,7 +1982,7 @@ def streaming_funnel_counts(spark: SparkSession, sf_dir: str,
     os.makedirs(snap_dir)
     atexit.register(shutil.rmtree, work, ignore_errors=True)
 
-    empty = spark.createDataFrame([], FUNNEL_STATE_SCHEMA)
+    empty = local_frame(spark, [], FUNNEL_STATE_SCHEMA)
     empty.write.parquet(os.path.join(snap_dir, "00000_init"))
 
     lo, hi = _id_span(ev, "event_id")
@@ -2032,8 +2034,8 @@ def streaming_dau_wau(spark: SparkSession, sf_dir: str,
     os.makedirs(snap_dir)
     atexit.register(shutil.rmtree, work, ignore_errors=True)
 
-    empty = spark.createDataFrame(
-        [], "user_id bigint, day date, n_events bigint")
+    empty = local_frame(
+        spark, [], "user_id bigint, day date, n_events bigint")
     empty.write.parquet(os.path.join(snap_dir, "00000_init"))
 
     lo, hi = _id_span(ev, "event_id")
@@ -2090,8 +2092,8 @@ def streaming_type_mix_drift(spark: SparkSession, sf_dir: str,
     os.makedirs(snap_dir)
     atexit.register(shutil.rmtree, work, ignore_errors=True)
 
-    empty = spark.createDataFrame(
-        [], "week int, event_type string, n_events bigint")
+    empty = local_frame(
+        spark, [], "week int, event_type string, n_events bigint")
     empty.write.parquet(os.path.join(snap_dir, "00000_init"))
 
     lo, hi = _id_span(ev, "event_id")
@@ -2150,8 +2152,8 @@ def streaming_haar_energy(spark: SparkSession, sf_dir: str,
     os.makedirs(snap_dir)
     atexit.register(shutil.rmtree, work, ignore_errors=True)
 
-    empty = spark.createDataFrame(
-        [], "event_type string, h bigint, n_events bigint")
+    empty = local_frame(
+        spark, [], "event_type string, h bigint, n_events bigint")
     empty.write.parquet(os.path.join(snap_dir, "00000_init"))
 
     lo, hi = _id_span(ev, "event_id")
@@ -2209,8 +2211,8 @@ def streaming_fano_factor(spark: SparkSession, sf_dir: str,
     os.makedirs(snap_dir)
     atexit.register(shutil.rmtree, work, ignore_errors=True)
 
-    empty = spark.createDataFrame(
-        [], "event_type string, h bigint, n_events bigint")
+    empty = local_frame(
+        spark, [], "event_type string, h bigint, n_events bigint")
     empty.write.parquet(os.path.join(snap_dir, "00000_init"))
 
     lo, hi = _id_span(ev, "event_id")

@@ -26,6 +26,9 @@ import time
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 
+# registry size, pinned: change these only with a deliberate registry change
+N_QUERIES, N_ORACLES = 405, 402
+
 
 def run(label: str, cmd: list[str], env: dict | None = None) -> None:
     print(f"\n=== {label}: {' '.join(cmd)}", flush=True)
@@ -42,11 +45,19 @@ def run(label: str, cmd: list[str], env: dict | None = None) -> None:
 
 def main() -> None:
     fast = "--fast" in sys.argv
-    # 1. contract shape (pure import, seconds)
+    # 1. contract shape (pure import, seconds). Strict load: a module
+    # that fails to import raises here instead of silently dropping its
+    # queries; the pinned counts make any change to the registry size
+    # a deliberate edit of this file.
     sys.path.insert(0, str(ROOT))
+    from iq_to_hdl_migration_spark.queries import load_all
+    load_all(strict=True)
     import __spark_entry__ as entry_mod
     qs, osql = entry_mod.queries(), entry_mod.oracle_sql()
-    assert len(qs) >= 200 and set(osql) <= set(qs), "contract shape"
+    assert (len(qs), len(osql)) == (N_QUERIES, N_ORACLES), \
+        f"registry has {len(qs)} queries / {len(osql)} oracles, " \
+        f"pinned {N_QUERIES} / {N_ORACLES}"
+    assert set(osql) <= set(qs), "contract shape"
     print(f"contract: {len(qs)} queries, {len(osql)} oracles")
 
     # 1a. README registry counts must match the registry (r10 judge:

@@ -7,8 +7,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from iq_to_hdl_migration_spark.catalog.fixture import (
+    CATALOG_FIXTURE, ensure_catalog_views)
 from iq_to_hdl_migration_spark.pipeline.migrate import (
-    MigrationStatus, migrate_table, migrate_tables, reconcile)
+    MigrationStatus, listing_reconcile, migrate_table, migrate_tables,
+    reconcile)
 from iq_to_hdl_migration_spark.sources.tables import load_table
 
 
@@ -88,3 +91,25 @@ def test_resume_skips_loaded(spark, sf_dir, dirs):
                                 ["table_key"])
     missing = reconcile(status, inv).collect()
     assert [r.table_key for r in missing] == ["ghost"]
+
+
+def _python_rdd_free(df) -> bool:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return "LogicalRDD" not in plan and "ExistingRDD" not in plan
+
+
+def test_driver_side_frames_stay_in_the_jvm(spark, dirs, tmp_path):
+    """Catalog views, ledger events and listings are LocalRelations: a
+    frame built with createDataFrame(list) would scan a Python RDD and
+    start Python-worker tasks on every use."""
+    staging, target, status_path = dirs
+    ensure_catalog_views(spark)
+    bad = [t for t in CATALOG_FIXTURE if not _python_rdd_free(spark.table(t))]
+    assert bad == []
+
+    status = MigrationStatus(spark, status_path)
+    assert _python_rdd_free(status.event("nation", "loaded", 25, 100))
+    assert _python_rdd_free(status.all_events())  # no ledger yet
+
+    (tmp_path / "staging" / "f.parquet").write_bytes(b"x")
+    assert _python_rdd_free(listing_reconcile(spark, staging, target))
