@@ -568,7 +568,7 @@ def stream_boilerplate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
               .where(F.col("c") >= _BP_MIN_DOCS)
               .select("g").localCheckpoint())
     return W.streaming_boilerplate_gate(spark, sf_dir, boiler, _BP_N,
-                                        _BP_MIN_DOCS, 50, name)
+                                        50, name)
 
 
 @register(

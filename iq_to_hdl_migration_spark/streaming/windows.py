@@ -11,6 +11,9 @@ stream) can be processed incrementally.
   * sessionization: applyInPandasWithState keyed by user_id — the
     stateful 30-minute-gap session counter; state carries (last seen
     timestamp, open session count) across micro-batches.
+  * snapshot folds: the id-sliced twins of batch reports, each a pure
+    step over one checkpointed foreachBatch drain (`fold_twin`,
+    `run_fold`; see the section comment).
 
 Tests run with trigger(availableNow=True) against the static events
 parquet and assert equality with the batch twins — the semantics
@@ -19,14 +22,19 @@ contract between the two implementations.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
+import atexit
+import os
+import shutil
+import tempfile
+from collections.abc import Callable, Iterator
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from iq_to_hdl_migration_spark.session import local_frame
+from iq_to_hdl_migration_spark.sources.tables import load_table
 
 # Canonical post-normalization schema (what every operator below sees).
 EVENTS_SCHEMA = ("event_id bigint, ts timestamp, user_id bigint, "
@@ -213,7 +221,6 @@ def streaming_sessionization(spark: SparkSession, sf_dir: str,
     events = read_events_stream(spark, sf_dir)
     run_to_memory(sessionize_stream(events), _query_name, "update")
     # update-mode sink may hold several emissions per key; keep the last
-    from pyspark.sql import Window
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (spark.table(_query_name)
             .withColumn("_rn", F.row_number().over(w))
@@ -241,7 +248,6 @@ def streaming_enriched_counts(spark: SparkSession, sf_dir: str,
     """End-to-end: event stream x static per-user segment dim (the
     user's first-ever event type — derived from the same parquet, so
     the batch oracle can reproduce it) -> per-segment rollup."""
-    from iq_to_hdl_migration_spark.sources.tables import load_table
     ev_static = load_table(spark, sf_dir, "events")
     user_dim = (ev_static.groupBy("user_id")
                 .agg(F.min_by("event_type", "ts").alias("segment")))
@@ -317,10 +323,48 @@ def streaming_curation_counts(spark: SparkSession, sf_dir: str,
     return spark.table(_query_name)
 
 
-# live work dir per (applicationId, query, source dir) for the
-# incremental-dedup stream — re-invocations replace (and remove) the
-# previous invocation's dir instead of accumulating one per call
+# ---------------------------------------------------------------------------
+# Snapshot folds: the streaming form of the reference's resume ledger.
+# A twin's source is staged as FOLD_BATCHES id-contiguous parquet
+# arrivals, drained one file per micro-batch (availableNow), and batch
+# i writes snapshot snap_dir/{i+1:05d}_b computed by a pure
+# `step(prev_snap, batch_df) -> DataFrame` from the newest snapshot
+# OLDER than its own. That invalidation rule lives in `_latest_before`
+# alone: a batch never reads its own snapshot, so a replayed batch
+# (snapshot written, checkpoint commit lost) recomputes from the same
+# inputs and rewrites its snapshot with the same rows. State lives in
+# the snapshot chain and the checkpoint, not in the process, so a
+# stopped fold resumes where it left off.
+# ---------------------------------------------------------------------------
+
+FOLD_BATCHES = 4
+
+# live work dir per (applicationId, source dir, tag), see _work_dir
 _STREAM_WORK_DIRS: dict = {}
+
+
+def _work_dir(spark: SparkSession, sf_dir: str, tag: str,
+              prefix: str) -> str:
+    """Fresh work dir for one (application, source dir, tag).
+
+    The dir must outlive the call (the returned DataFrame reads its
+    parquet lazily) but not the process, and a long-lived session that
+    re-invokes a twin (bench + correctness + retries) must not
+    accumulate one copy of the source per invocation. So a second call
+    for the same key deletes the first call's dir — including the files
+    backing the frame it returned: callers must materialize an old
+    result before re-invoking if they still need it. atexit covers
+    process exit. NOT keyed on the query name: the registry wrapper
+    mints a fresh name per invocation (q_stream_<twin>_<seq>), which
+    would make every call a distinct key and resurrect the leak."""
+    wkey = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), tag)
+    prev = _STREAM_WORK_DIRS.pop(wkey, None)
+    if prev is not None:
+        shutil.rmtree(prev, ignore_errors=True)
+    work = tempfile.mkdtemp(prefix=f"{prefix}_")
+    _STREAM_WORK_DIRS[wkey] = work
+    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    return work
 
 
 def _id_span(df: DataFrame, id_col: str) -> tuple[int | None, int | None]:
@@ -343,19 +387,13 @@ def _id_span(df: DataFrame, id_col: str) -> tuple[int | None, int | None]:
 
 
 def _stage_id_sliced_arrivals(df, id_col: str, lo: int, hi: int,
-                              n_batches: int, work: str,
+                              n_files: int, work: str,
                               arrivals_dir: str) -> None:
-    """Write `df` as `n_batches` id-contiguous single-file parquet
+    """Write `df` as `n_files` id-contiguous single-file parquet
     arrivals with strictly increasing mtimes, so the file source
-    drains them in arrival order. ONE implementation shared by every
-    snapshot-fold twin — the r10 review found the same slicing loop
-    pasted five times (and the r9 negative-id fix applied four times);
-    any future slicing change lands here once."""
-    import os
-    import shutil
-
-    span = max(1, (hi - lo + n_batches) // n_batches)
-    for i in range(n_batches):
+    drains them in arrival order."""
+    span = max(1, (hi - lo + n_files) // n_files)
+    for i in range(n_files):
         lo_i = lo + i * span
         hi_i = min(hi, lo_i + span - 1)
         slice_df = df.where(F.col(id_col).between(lo_i, hi_i))
@@ -369,9 +407,83 @@ def _stage_id_sliced_arrivals(df, id_col: str, lo: int, hi: int,
         shutil.rmtree(tmp_i)
 
 
+def _drain(spark: SparkSession, src_dir: str, ckpt_dir: str,
+           process: Callable[[DataFrame, int], None],
+           name: str) -> StreamingQuery:
+    """The one foreachBatch drain: the parquet files under `src_dir`,
+    one file per micro-batch in mtime order, each handed to
+    `process(batch_df, batch_id)` until the input available now is
+    used up, as stream `name`. Resumes from `ckpt_dir`; returns the
+    terminated query."""
+    schema = spark.read.parquet(src_dir).schema
+    q = (spark.readStream.schema(schema)
+         .option("maxFilesPerTrigger", 1).parquet(src_dir)
+         .writeStream.foreachBatch(process).queryName(name)
+         .option("checkpointLocation", ckpt_dir)
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    return q
+
+
+def _latest_before(snap_dir: str, batch_id: int) -> str:
+    """The newest snapshot strictly older than batch `batch_id`'s own
+    (`00000_init` sorts before every numbered one)."""
+    subs = sorted(d for d in os.listdir(snap_dir)
+                  if d < f"{batch_id + 1:05d}_b")
+    return os.path.join(snap_dir, subs[-1])
+
+
+def run_fold(spark: SparkSession, arrivals_dir: str, snap_dir: str,
+             ckpt_dir: str, step: Callable[[DataFrame, DataFrame],
+                                           DataFrame],
+             name: str) -> StreamingQuery:
+    """Drain `arrivals_dir` folding each batch into the snapshot chain
+    under `snap_dir` (which must hold `00000_init`). A later call with
+    the same `ckpt_dir` resumes where the stream left off. Returns the
+    terminated query (its recentProgress shows what each batch read)."""
+    def _process(batch_df: DataFrame, batch_id: int) -> None:
+        prev = spark.read.parquet(_latest_before(snap_dir, batch_id))
+        (step(prev, batch_df).write.mode("overwrite")
+         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
+
+    return _drain(spark, arrivals_dir, ckpt_dir, _process, name)
+
+
+def fold_twin(spark: SparkSession, sf_dir: str, tag: str, src: DataFrame,
+              id_col: str, state_schema: str,
+              step: Callable[[DataFrame, DataFrame], DataFrame],
+              name: str) -> DataFrame:
+    """Fold `src` through `step` and return the final snapshot.
+
+    Stages `src` as FOLD_BATCHES `id_col`-contiguous arrivals in a
+    fresh work dir (superseding the previous call's for the same
+    (sf_dir, tag), see `_work_dir`), seeds the chain with an empty
+    `state_schema` snapshot and drains it as stream `name`. An empty
+    source starts no stream and returns the empty init snapshot."""
+    work = _work_dir(spark, sf_dir, tag, name)
+    arrivals_dir, snap_dir, ckpt_dir = (
+        os.path.join(work, d) for d in ("arrivals", "snaps", "ckpt"))
+    os.makedirs(arrivals_dir)
+    os.makedirs(snap_dir)
+    local_frame(spark, [], state_schema).write.parquet(
+        os.path.join(snap_dir, "00000_init"))
+    lo, hi = _id_span(src, id_col)
+    if hi is not None:
+        _stage_id_sliced_arrivals(src, id_col, lo, hi, FOLD_BATCHES,
+                                  work, arrivals_dir)
+        run_fold(spark, arrivals_dir, snap_dir, ckpt_dir, step, name)
+    final = sorted(os.listdir(snap_dir))[-1]
+    return spark.read.parquet(os.path.join(snap_dir, final))
+
+
+# arrival files of the incremental-dedup twin: its own split, kept
+# apart from FOLD_BATCHES
+_INC_DEDUP_BATCHES = 3
+
+
 def streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
-                                _query_name: str = "stream_inc_dedup",
-                                n_batches: int = 3) -> DataFrame:
+                                _query_name: str = "stream_inc_dedup"
+                                ) -> DataFrame:
     """Continuously-deduped corpus: a documents ARRIVAL stream deduped
     per micro-batch against a persisted LSH index that each batch then
     extends — the streaming form of dedup_incremental_pairs, and the
@@ -380,8 +492,8 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
 
     Harness: split documents at the same 60%-of-max-doc_id cut as the
     batch query; batch1 seeds the on-disk index; batch2 is written as
-    `n_batches` id-contiguous parquet files drained one per micro-batch
-    (maxFilesPerTrigger=1, availableNow). foreachBatch runs
+    `_INC_DEDUP_BATCHES` id-contiguous parquet files drained one per
+    micro-batch (maxFilesPerTrigger=1, availableNow). foreachBatch runs
     operators.dedup.lsh_batch_deltas: emit the batch's pairs, append
     the index deltas. Because pair emission is first-seen-wins on
     monotone ids and estimates come from the same stored minhash
@@ -389,21 +501,16 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
     equals the single-shot batch result — that equality is the
     registered oracle check (and tests/test_streaming.py locks it
     against the batch operator directly)."""
-    import os
-    import shutil
-    import tempfile
+    import math
 
     from iq_to_hdl_migration_spark.operators.dedup import (
         build_lsh_index, lsh_batch_deltas)
-    from iq_to_hdl_migration_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     # one aggregate serves both the NULL-id guard and the cut (the
     # fail-loud check would otherwise be a second full scan). The cut
     # must equal the batch twin's floor(max * 0.6D) BIT-for-bit, so it
     # is computed with the same IEEE double multiply, just driver-side.
-    import math
-
     _lo, _hi = _id_span(docs, "doc_id")
     cut = None if _hi is None else int(math.floor(_hi * 0.6))
     if cut is None:
@@ -414,26 +521,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
     batch1 = docs.where(F.col("doc_id") <= cut)
     batch2 = docs.where(F.col("doc_id") > cut)
 
-    import atexit
-
-    # the work dir must outlive this call (the returned DataFrame reads
-    # the pairs parquet lazily) but not the process — and a long-lived
-    # session that re-invokes this query (bench + correctness + retries)
-    # must not accumulate one arrival-copy-of-40%-of-documents dir per
-    # invocation. Keyed per (app, query, source): a re-invocation for
-    # the same source removes the previous invocation's dir (its lazily
-    # returned frame is superseded by the fresh one), so at most one
-    # work dir per key exists at any time; atexit covers process exit.
-    # NOT keyed on _query_name: the registry wrapper mints a fresh
-    # stream name per invocation (q_stream_incdedup_<seq>), which would
-    # make every call a distinct key and resurrect the leak
-    wkey = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = _work_dir(spark, sf_dir, "inc_dedup", _query_name)
     bands_dir = os.path.join(work, "bands")
     digests_dir = os.path.join(work, "digests")
     arrivals_dir = os.path.join(work, "arrivals")
@@ -460,9 +548,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
     # id-contiguous arrival files via the shared staging helper; _hi
     # from the _id_span guard above replaces a redundant max() scan
     _stage_id_sliced_arrivals(batch2, "doc_id", cut + 1, _hi,
-                              n_batches, work, arrivals_dir)
-
-    schema = spark.read.parquet(arrivals_dir).schema
+                              _INC_DEDUP_BATCHES, work, arrivals_dir)
 
     def _process(batch_df, batch_id) -> None:
         # exclude_batch makes replay deterministic: the index read never
@@ -488,15 +574,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
             os.path.join(digests_dir, f"b{batch_id}"))
         bands_delta.unpersist()
 
-    q = (spark.readStream.schema(schema)
-         .option("maxFilesPerTrigger", 1)
-         .parquet(arrivals_dir)
-         .writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True)
-         .queryName(_query_name)
-         .start())
-    q.awaitTermination()
+    _drain(spark, arrivals_dir, ckpt_dir, _process, _query_name)
     return _read_parts(pairs_dir)
 
 
@@ -693,117 +771,71 @@ def streaming_dsir_gate(spark: SparkSession, sf_dir: str,
     run_to_memory(agg, _query_name, "complete")
     return spark.table(_query_name)
 
-
-def streaming_bottomk_sample(spark: SparkSession, sf_dir: str, k: int,
-                             _query_name: str = "stream_bottomk",
-                             n_batches: int = 4) -> DataFrame:
-    """Streaming twin of the consistent bottom-k-by-hash sampler: the
-    documents corpus arrives as id-contiguous micro-batches; each
-    batch folds into an on-disk per-lang bottom-k snapshot (merge =
-    bottom-k of previous-snapshot ∪ batch's bottom-k — the
-    mergeability property the batch query advertises and
-    tests/test_properties.py locks for KMV, exercised here end-to-end
-    with real micro-batch state).  Replay-safe: batch i always
-    recomputes from snapshot i-1 (never its own half-written output),
-    so re-execution is a byte-identical rewrite; state per lang is k
-    rows forever, independent of stream length.  The final snapshot
-    equals the single-shot batch sample — that equality is the
-    registered oracle check.
-
-    Supersede-on-reinvoke contract: a second call for the same
-    (application, sf_dir) deletes the previous call's work dir —
-    including the snapshot files backing the previously returned
-    lazily-read DataFrame. Callers must not hold two live frames from
-    successive invocations; materialize (collect/write) before
-    re-invoking if the old result is still needed."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
-    from iq_to_hdl_migration_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "lang", F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.expr("CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 15), "
-               "16, 10) AS BIGINT)").alias("hv"))
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "bottomk")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-
-    # empty initial snapshot (sorts before every numbered one)
-    docs.limit(0).write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    # id-contiguous arrival files with increasing mtimes so the file
-    # source drains them in arrival order
-    lo, hi = _id_span(docs, "doc_id")
-    if hi is None:
-        # empty corpus: nothing to stream — the empty init snapshot
-        # IS the final state (matches the batch sampler on 0 rows)
-        return spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-    _stage_id_sliced_arrivals(docs, "doc_id", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_bottomk_fold(spark, arrivals_dir, snap_dir, ckpt_dir, k)
-    final = sorted(os.listdir(snap_dir))[-1]
-    return spark.read.parquet(os.path.join(snap_dir, final))
-
-
-def run_bottomk_fold(spark: SparkSession, arrivals_dir: str,
-                     snap_dir: str, ckpt_dir: str, k: int) -> None:
-    """Drain the arrivals dir (one file per micro-batch, availableNow)
-    folding each batch into the per-lang bottom-k snapshot chain under
-    snap_dir. Resumable: a later call with the same checkpoint dir
-    picks up where the stream left off (the restart test locks this),
-    and a replayed batch recomputes from the PRIOR snapshot, so
-    re-execution rewrites its own snapshot byte-identically."""
-    import os
-
-    from pyspark.sql import Window
-
-    schema = spark.read.parquet(arrivals_dir).schema
+def bottomk_step(k: int) -> Callable[[DataFrame, DataFrame], DataFrame]:
+    """Per-lang bottom-k by (hv, doc_id): merge = bottom-k of the prior
+    snapshot ∪ the batch's bottom-k."""
     w = Window.partitionBy("lang").orderBy("hv", "doc_id")
 
     def _bottomk(df: DataFrame) -> DataFrame:
         return (df.withColumn("_rn", F.row_number().over(w))
                 .where(F.col("_rn") <= k).drop("_rn"))
 
-    def _latest_before(batch_id: int) -> str:
-        subs = sorted(d for d in os.listdir(snap_dir)
-                      if d < f"{batch_id + 1:05d}_b")
-        return os.path.join(snap_dir, subs[-1])
-
-    def _process(batch_df, batch_id) -> None:
-        prev_snap = spark.read.parquet(_latest_before(batch_id))
-        merged = _bottomk(prev_snap.unionByName(
+    def step(prev: DataFrame, batch_df: DataFrame) -> DataFrame:
+        return _bottomk(prev.unionByName(
             _bottomk(batch_df.select("lang", "doc_id", "hv"))))
-        (merged.write.mode("overwrite")
-         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
+    return step
 
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
-    q = (stream.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+
+def streaming_bottomk_sample(spark: SparkSession, sf_dir: str, k: int,
+                             _query_name: str = "stream_bottomk"
+                             ) -> DataFrame:
+    """Streaming twin of the consistent bottom-k-by-hash sampler: the
+    documents corpus arrives as id-contiguous micro-batches; each
+    batch folds into an on-disk per-lang bottom-k snapshot (merge =
+    bottom-k of previous-snapshot ∪ batch's bottom-k — the
+    mergeability property the batch query advertises and
+    tests/test_properties.py locks for KMV, exercised here end-to-end
+    with real micro-batch state). State per lang is k rows forever,
+    independent of stream length. The final snapshot equals the
+    single-shot batch sample — that equality is the registered oracle
+    check."""
+    docs = load_table(spark, sf_dir, "documents").select(
+        "lang", F.col("doc_id").cast("bigint").alias("doc_id"),
+        F.expr("CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 15), "
+               "16, 10) AS BIGINT)").alias("hv"))
+    return fold_twin(spark, sf_dir, "bottomk", docs, "doc_id",
+                     "lang string, doc_id bigint, hv bigint",
+                     bottomk_step(k), _query_name)
+
+
+def basket_step(prev: DataFrame, batch_df: DataFrame) -> DataFrame:
+    """Fold a batch's pair/item/total basket supports into the unified
+    additive snapshot (merge = sum per key)."""
+    from iq_to_hdl_migration_spark.queries.cooccurrence_queries import (
+        basket_pair_supports)
+
+    baskets = (batch_df.groupBy("l_orderkey")
+               .agg(F.sort_array(F.collect_set("l_partkey"))
+                    .alias("parts")))
+    pairs = basket_pair_supports(baskets).select(
+        "part_a", "part_b", F.col("n_ab").alias("n"))
+    items = (baskets.select(F.explode("parts").alias("part_a"))
+             .groupBy("part_a")
+             .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+             .select("part_a", F.lit(None).cast("bigint")
+                     .alias("part_b"), "n"))
+    tot = (baskets.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+           .select(F.lit(None).cast("bigint").alias("part_a"),
+                   F.lit(None).cast("bigint").alias("part_b"), "n"))
+    delta = pairs.unionByName(items).unionByName(tot)
+    return (prev.unionByName(delta)
+            .groupBy("part_a", "part_b")
+            .agg(F.sum("n").cast("bigint").alias("n")))
 
 
 def streaming_market_basket(spark: SparkSession, sf_dir: str,
-                            _query_name: str = "stream_basket",
-                            n_batches: int = 4) -> DataFrame:
+                            _query_name: str = "stream_basket"
+                            ) -> DataFrame:
     """Streaming twin of orders_market_basket_lift: lineitem arrives as
     orderkey-contiguous micro-batches (a basket is an atomic order
     event, so every order lands whole in exactly one batch) and each
@@ -812,55 +844,18 @@ def streaming_market_basket(spark: SparkSession, sf_dir: str,
     and both-NULL the order total. Merge = groupBy(keys).sum(n): pair/
     item/total supports are all additive across disjoint order sets,
     which is the mergeability the batch query's one-pass design
-    advertises. Replay-safe like the bottom-k fold (batch i recomputes
-    from snapshot i-1); the final report equals the single-shot batch
-    result (shared oracle). State grows with distinct pairs — the
-    production variant prunes below min-support with a lossy-counting
-    bound; at this corpus the pair domain is orders x width^2.
-
-    Supersede-on-reinvoke contract: same as streaming_bottomk_sample —
-    a second call for the same (application, sf_dir) deletes the
-    previous call's snapshot files."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    advertises. The final report equals the single-shot batch result
+    (shared oracle). State grows with distinct pairs — the production
+    variant prunes below min-support with a lossy-counting bound; at
+    this corpus the pair domain is orders x width^2."""
     from iq_to_hdl_migration_spark.queries.cooccurrence_queries import (
-        _BASKET_MIN_SUP, basket_lift_report, basket_pair_supports)
-    from iq_to_hdl_migration_spark.sources.tables import load_table
+        _BASKET_MIN_SUP, basket_lift_report)
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey")
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "basket")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-
-    empty = local_frame(
-        spark, [], "part_a bigint, part_b bigint, n bigint")
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(li, "l_orderkey")
-    if hi is None:
-        return spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-    _stage_id_sliced_arrivals(li, "l_orderkey", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_basket_fold(spark, arrivals_dir, snap_dir, ckpt_dir)
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
+    snap = fold_twin(spark, sf_dir, "basket", li, "l_orderkey",
+                     "part_a bigint, part_b bigint, n bigint",
+                     basket_step, _query_name)
     pair_sup = (snap.where(F.col("part_b").isNotNull())
                 .select("part_a", "part_b", F.col("n").alias("n_ab"))
                 .where(F.col("n_ab") >= _BASKET_MIN_SUP))
@@ -872,59 +867,19 @@ def streaming_market_basket(spark: SparkSession, sf_dir: str,
     return basket_lift_report(pair_sup, item_sup, tot)
 
 
-def run_basket_fold(spark: SparkSession, arrivals_dir: str,
-                    snap_dir: str, ckpt_dir: str) -> None:
-    """Drain the arrivals dir folding each batch's basket supports into
-    the unified additive snapshot chain. Resumable under the same
-    checkpoint dir; a replayed batch recomputes from the PRIOR
-    snapshot, so re-execution rewrites its snapshot byte-identically."""
-    import os
-
-    from iq_to_hdl_migration_spark.queries.cooccurrence_queries import (
-        basket_pair_supports)
-
-    schema = spark.read.parquet(arrivals_dir).schema
-
-    def _latest_before(batch_id: int) -> str:
-        subs = sorted(d for d in os.listdir(snap_dir)
-                      if d < f"{batch_id + 1:05d}_b")
-        return os.path.join(snap_dir, subs[-1])
-
-    def _delta(batch_df: DataFrame) -> DataFrame:
-        baskets = (batch_df.groupBy("l_orderkey")
-                   .agg(F.sort_array(F.collect_set("l_partkey"))
-                        .alias("parts")))
-        pairs = basket_pair_supports(baskets).select(
-            "part_a", "part_b", F.col("n_ab").alias("n"))
-        items = (baskets.select(F.explode("parts").alias("part_a"))
-                 .groupBy("part_a")
-                 .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-                 .select("part_a", F.lit(None).cast("bigint")
-                         .alias("part_b"), "n"))
-        tot = (baskets.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-               .select(F.lit(None).cast("bigint").alias("part_a"),
-                       F.lit(None).cast("bigint").alias("part_b"), "n"))
-        return pairs.unionByName(items).unionByName(tot)
-
-    def _process(batch_df, batch_id) -> None:
-        prev_snap = spark.read.parquet(_latest_before(batch_id))
-        merged = (prev_snap.unionByName(_delta(batch_df))
-                  .groupBy("part_a", "part_b")
-                  .agg(F.sum("n").cast("bigint").alias("n")))
-        (merged.write.mode("overwrite")
-         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
-    q = (stream.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+def ab_test_step(prev: DataFrame, batch_df: DataFrame) -> DataFrame:
+    """Fold a batch's per-user conversion flags (merge = max per user,
+    the idempotent OR-monoid)."""
+    delta = (batch_df.groupBy("user_id")
+             .agg(F.max(F.when(F.col("event_type") == "purchase", 1)
+                        .otherwise(0)).cast("int").alias("is_conv")))
+    return (prev.unionByName(delta)
+            .groupBy("user_id")
+            .agg(F.max("is_conv").cast("int").alias("is_conv")))
 
 
 def streaming_ab_test(spark: SparkSession, sf_dir: str,
-                      _query_name: str = "stream_ab",
-                      n_batches: int = 4) -> DataFrame:
+                      _query_name: str = "stream_ab") -> DataFrame:
     """Streaming twin of events_ab_test_report: events arrive as
     event_id-contiguous micro-batches (a user's events deliberately
     SPAN batches) and each batch folds into a per-user conversion
@@ -933,53 +888,16 @@ def streaming_ab_test(spark: SparkSession, sf_dir: str,
     aggregate needs. Variant assignment is a stateless md5 hash of the
     user id (content-addressed — no assignment table in state), so
     snapshot state is exactly one row per distinct user, the minimum
-    any exact per-user metric can hold. Replay-safe like the other
-    folds (batch i recomputes from snapshot i-1); the final report
-    equals the single-shot batch result bit-for-bit (shared oracle).
-
-    Supersede-on-reinvoke contract: same as streaming_bottomk_sample —
-    a second call for the same (application, sf_dir) deletes the
-    previous call's snapshot files."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    any exact per-user metric can hold. The final report equals the
+    single-shot batch result bit-for-bit (shared oracle)."""
     from iq_to_hdl_migration_spark.queries.cooccurrence_queries import (
         ab_test_report_tail)
-    from iq_to_hdl_migration_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type")
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "ab_test")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = local_frame(spark, [], "user_id bigint, is_conv int")
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is None:
-        snap = spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-        return ab_test_report_tail(_ab_assign(snap))
-    _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_ab_test_fold(spark, arrivals_dir, snap_dir, ckpt_dir)
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
+    snap = fold_twin(spark, sf_dir, "ab_test", ev, "event_id",
+                     "user_id bigint, is_conv int", ab_test_step,
+                     _query_name)
     return ab_test_report_tail(_ab_assign(snap))
 
 
@@ -992,126 +910,20 @@ def _ab_assign(snap: DataFrame) -> DataFrame:
         F.col("is_conv"))
 
 
-def run_ab_test_fold(spark: SparkSession, arrivals_dir: str,
-                     snap_dir: str, ckpt_dir: str) -> None:
-    """Drain the arrivals dir folding each batch's per-user conversion
-    flags into the unified snapshot chain. Resumable under the same
-    checkpoint dir; a replayed batch recomputes from the PRIOR
-    snapshot, so re-execution rewrites its snapshot byte-identically."""
-    import os
-
-    schema = spark.read.parquet(arrivals_dir).schema
-
-    def _latest_before(batch_id: int) -> str:
-        subs = sorted(d for d in os.listdir(snap_dir)
-                      if d < f"{batch_id + 1:05d}_b")
-        return os.path.join(snap_dir, subs[-1])
-
-    def _delta(batch_df: DataFrame) -> DataFrame:
-        return (batch_df.groupBy("user_id")
-                .agg(F.max(F.when(F.col("event_type") == "purchase", 1)
-                           .otherwise(0)).cast("int").alias("is_conv")))
-
-    def _process(batch_df, batch_id) -> None:
-        prev_snap = spark.read.parquet(_latest_before(batch_id))
-        merged = (prev_snap.unionByName(_delta(batch_df))
-                  .groupBy("user_id")
-                  .agg(F.max("is_conv").cast("int").alias("is_conv")))
-        (merged.write.mode("overwrite")
-         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
-    q = (stream.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-
-def streaming_boilerplate_gate(spark: SparkSession, sf_dir: str,
-                               boiler_set: DataFrame, n: int,
-                               min_docs: int, max_ratio_pct: int,
-                               _query_name: str = "stream_bp",
-                               n_batches: int = 4) -> DataFrame:
-    """Streaming boilerplate gate: documents arrive as doc_id-contiguous
-    micro-batches (a document is atomic) and each batch admits docs
-    whose boilerplate-shingle fraction is <= max_ratio_pct% against a
-    FROZEN boilerplate set — the offline-built index (distinct n-gram
-    shingles recurring in >= min_docs base docs) that an ingest path
-    ships, exactly like the DSIR gate's bucket tables but vocabulary-
-    sized, so it stays a DataFrame joined ON THE SHINGLE KEY rather
-    than a baked-in literal. Per-source kept counts fold ADDITIVELY
-    into a snapshot chain (disjoint doc sets — the basket-fold
-    mergeability); the final report equals the single-shot batch
-    result (shared oracle). Replay-safe: batch i recomputes from
-    snapshot i-1.
-
-    Supersede-on-reinvoke contract: same as streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from iq_to_hdl_migration_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "text")
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "bp_gate")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-
-    empty = local_frame(
-        spark, [], "source string, n_docs_kept bigint, n_tokens_kept bigint")
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(docs, "doc_id")
-    if hi is None:
-        return spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-    _stage_id_sliced_arrivals(docs, "doc_id", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_boilerplate_gate_fold(spark, arrivals_dir, snap_dir, ckpt_dir,
-                              boiler_set, n, max_ratio_pct)
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    return spark.read.parquet(os.path.join(snap_dir, final))
-
-
-def run_boilerplate_gate_fold(spark: SparkSession, arrivals_dir: str,
-                              snap_dir: str, ckpt_dir: str,
-                              boiler_set: DataFrame, n: int,
-                              max_ratio_pct: int) -> None:
-    """Drain the arrivals dir: per batch, score each document's
-    boilerplate fraction against the frozen shingle set (stream-side
-    shingles join the static index on the shingle key), admit docs at
-    <= max_ratio_pct%, and fold per-source kept counts additively into
-    the snapshot chain. Resumable under the same checkpoint dir."""
-    import os
-
-    schema = spark.read.parquet(arrivals_dir).schema
+def boilerplate_gate_step(boiler_set: DataFrame, n: int,
+                          max_ratio_pct: int
+                          ) -> Callable[[DataFrame, DataFrame], DataFrame]:
+    """Per batch, score each document's boilerplate fraction against
+    the frozen shingle set (stream-side shingles join the static index
+    on the shingle key), admit docs at <= max_ratio_pct%, and fold
+    per-source kept counts additively into the snapshot."""
     toks = r"split(lower(trim(text)), '\\s+')"
     gs = (f"CASE WHEN size(t) >= {n} THEN "
           f"array_distinct(transform(sequence(1, size(t) - {n} + 1), "
           f"i -> concat_ws(' ', slice(t, i, {n})))) "
           f"ELSE array() END")
 
-    def _latest_before(batch_id: int) -> str:
-        subs = sorted(d for d in os.listdir(snap_dir)
-                      if d < f"{batch_id + 1:05d}_b")
-        return os.path.join(snap_dir, subs[-1])
-
-    def _delta(batch_df: DataFrame) -> DataFrame:
+    def step(prev: DataFrame, batch_df: DataFrame) -> DataFrame:
         g = (batch_df
              .withColumn("t", F.expr(toks))
              .withColumn("nt", F.size("t").cast("bigint"))
@@ -1131,32 +943,58 @@ def run_boilerplate_gate_fold(spark: SparkSession, arrivals_dir: str,
         # have zero boilerplate and are admitted)
         kept = per_doc.where(F.col("n_boiler") * 100
                              <= F.col("n_sh") * max_ratio_pct)
-        return (kept.groupBy("source")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs_kept"),
-                     F.sum("nt").cast("bigint").alias("n_tokens_kept")))
+        delta = (kept.groupBy("source")
+                 .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs_kept"),
+                      F.sum("nt").cast("bigint").alias("n_tokens_kept")))
+        return (prev.unionByName(delta)
+                .groupBy("source")
+                .agg(F.sum("n_docs_kept").cast("bigint")
+                     .alias("n_docs_kept"),
+                     F.sum("n_tokens_kept").cast("bigint")
+                     .alias("n_tokens_kept")))
+    return step
 
-    def _process(batch_df, batch_id) -> None:
-        prev_snap = spark.read.parquet(_latest_before(batch_id))
-        merged = (prev_snap.unionByName(_delta(batch_df))
-                  .groupBy("source")
-                  .agg(F.sum("n_docs_kept").cast("bigint")
-                       .alias("n_docs_kept"),
-                       F.sum("n_tokens_kept").cast("bigint")
-                       .alias("n_tokens_kept")))
-        (merged.write.mode("overwrite")
-         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
 
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
-    q = (stream.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+def streaming_boilerplate_gate(spark: SparkSession, sf_dir: str,
+                               boiler_set: DataFrame, n: int,
+                               max_ratio_pct: int,
+                               _query_name: str = "stream_bp"
+                               ) -> DataFrame:
+    """Streaming boilerplate gate: documents arrive as doc_id-contiguous
+    micro-batches (a document is atomic) and each batch admits docs
+    whose boilerplate-shingle fraction is <= max_ratio_pct% against a
+    FROZEN boilerplate set — the offline-built index (distinct n-gram
+    shingles recurring in >= _BP_MIN_DOCS base docs) that an ingest path
+    ships, exactly like the DSIR gate's bucket tables but vocabulary-
+    sized, so it stays a DataFrame joined ON THE SHINGLE KEY rather
+    than a baked-in literal. Per-source kept counts fold ADDITIVELY
+    into a snapshot chain (disjoint doc sets — the basket-fold
+    mergeability); the final report equals the single-shot batch
+    result (shared oracle)."""
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text")
+    return fold_twin(
+        spark, sf_dir, "bp_gate", docs, "doc_id",
+        "source string, n_docs_kept bigint, n_tokens_kept bigint",
+        boilerplate_gate_step(boiler_set, n, max_ratio_pct), _query_name)
+
+
+def keyed_count_step(keys: list[str]
+                     ) -> Callable[[DataFrame, DataFrame], DataFrame]:
+    """Fold a batch's per-key row counts into the snapshot (merge = sum
+    per key — the additive count monoid)."""
+    def step(prev: DataFrame, batch_df: DataFrame) -> DataFrame:
+        delta = (batch_df.groupBy(*keys)
+                 .agg(F.count(F.lit(1)).cast("bigint").alias("n_events")))
+        return (prev.unionByName(delta)
+                .groupBy(*keys)
+                .agg(F.sum("n_events").cast("bigint").alias("n_events")))
+    return step
 
 
 def streaming_user_activity_gini(spark: SparkSession, sf_dir: str,
-                                 _query_name: str = "stream_gini",
-                                 n_batches: int = 4) -> DataFrame:
+                                 _query_name: str = "stream_gini"
+                                 ) -> DataFrame:
     """Streaming twin of events_poweruser_gini: events arrive as
     event_id-contiguous micro-batches (a user's events deliberately
     SPAN batches) and each batch folds per-user event counts into a
@@ -1165,86 +1003,15 @@ def streaming_user_activity_gini(spark: SparkSession, sf_dir: str,
     Gini itself is NOT computed incrementally (rank sums are not
     mergeable); the final snapshot feeds the SAME closed-form
     histogram tail as the batch query, so the report equals the
-    single-shot batch result bit-for-bit (shared oracle). Replay-safe:
-    batch i recomputes from snapshot i-1.
-
-    Supersede-on-reinvoke contract: same as streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    single-shot batch result bit-for-bit (shared oracle)."""
     from iq_to_hdl_migration_spark.queries.events_queries import (
         gini_from_user_counts)
-    from iq_to_hdl_migration_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "user_gini")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = local_frame(spark, [], "user_id bigint, n_events bigint")
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is None:
-        snap = spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-        return gini_from_user_counts(snap)
-    _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_user_count_fold(spark, arrivals_dir, snap_dir, ckpt_dir)
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
+    snap = fold_twin(spark, sf_dir, "user_gini", ev, "event_id",
+                     "user_id bigint, n_events bigint",
+                     keyed_count_step(["user_id"]), _query_name)
     return gini_from_user_counts(snap)
-
-
-def run_user_count_fold(spark: SparkSession, arrivals_dir: str,
-                        snap_dir: str, ckpt_dir: str) -> None:
-    """Drain the arrivals dir folding each batch's per-user event
-    counts into the snapshot chain (merge = sum per user). Resumable
-    under the same checkpoint dir; a replayed batch recomputes from
-    the PRIOR snapshot, so re-execution rewrites its snapshot
-    byte-identically."""
-    import os
-
-    schema = spark.read.parquet(arrivals_dir).schema
-
-    def _latest_before(batch_id: int) -> str:
-        subs = sorted(d for d in os.listdir(snap_dir)
-                      if d < f"{batch_id + 1:05d}_b")
-        return os.path.join(snap_dir, subs[-1])
-
-    def _delta(batch_df: DataFrame) -> DataFrame:
-        return (batch_df.groupBy("user_id")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("n_events")))
-
-    def _process(batch_df, batch_id) -> None:
-        prev_snap = spark.read.parquet(_latest_before(batch_id))
-        merged = (prev_snap.unionByName(_delta(batch_df))
-                  .groupBy("user_id")
-                  .agg(F.sum("n_events").cast("bigint").alias("n_events")))
-        (merged.write.mode("overwrite")
-         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
-    q = (stream.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
 
 
 # ---------------------------------------------------------------------------
@@ -1290,38 +1057,13 @@ def _retention_delta(batch_df: DataFrame) -> DataFrame:
                  .alias("week_mask")))
 
 
-def run_retention_fold(spark: SparkSession, arrivals_dir: str,
-                       snap_dir: str, ckpt_dir: str) -> None:
-    """Drain the arrivals dir folding per-user (MIN cohort week,
-    OR week mask) into the snapshot chain. Resumable under the same
-    checkpoint dir; a replayed batch recomputes from the PRIOR
-    snapshot."""
-    import os
-
-    schema = spark.read.parquet(arrivals_dir).schema
-
-    def _latest_before(batch_id: int) -> str:
-        subs = sorted(d for d in os.listdir(snap_dir)
-                      if d < f"{batch_id + 1:05d}_b")
-        return os.path.join(snap_dir, subs[-1])
-
-    def _process(batch_df, batch_id) -> None:
-        prev_snap = spark.read.parquet(_latest_before(batch_id))
-        merged = (prev_snap.unionByName(_retention_delta(batch_df))
-                  .groupBy("user_id")
-                  .agg(F.min("cohort_week").cast("int")
-                       .alias("cohort_week"),
-                       F.expr("bit_or(week_mask)").cast("bigint")
-                       .alias("week_mask")))
-        (merged.write.mode("overwrite")
-         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
-    q = (stream.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+def retention_step(prev: DataFrame, batch_df: DataFrame) -> DataFrame:
+    """Fold per-user (MIN cohort week, OR week mask)."""
+    return (prev.unionByName(_retention_delta(batch_df))
+            .groupBy("user_id")
+            .agg(F.min("cohort_week").cast("int").alias("cohort_week"),
+                 F.expr("bit_or(week_mask)").cast("bigint")
+                 .alias("week_mask")))
 
 
 def retention_from_state(snap: DataFrame) -> DataFrame:
@@ -1343,68 +1085,28 @@ def retention_from_state(snap: DataFrame) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_users")))
 
 
-def _run_masked_fold(spark: SparkSession, sf_dir: str, key_tag: str,
-                     _query_name: str, n_batches: int) -> DataFrame:
-    """Shared driver for the MIN/OR mask-fold twins (retention,
-    lifecycle — r11 review: the workdir/staging/drain dance was pasted
-    twice): stage event_id-contiguous arrivals, drain the fold, return
-    the FINAL per-user (cohort_week, week_mask) snapshot. Each twin
-    applies its own tail to the same state shape.
-
-    Supersede-on-reinvoke contract: same as streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from iq_to_hdl_migration_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
+def _retention_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type")
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), key_tag)
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = local_frame(spark, [], RETENTION_STATE_SCHEMA)
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is not None:
-        _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                                  work, arrivals_dir)
-        run_retention_fold(spark, arrivals_dir, snap_dir, ckpt_dir)
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    return spark.read.parquet(os.path.join(snap_dir, final))
 
 
 def streaming_retention_cohorts(spark: SparkSession, sf_dir: str,
-                                _query_name: str = "stream_retention",
-                                n_batches: int = 4) -> DataFrame:
+                                _query_name: str = "stream_retention"
+                                ) -> DataFrame:
     """Streaming twin of events_retention_cohorts: events arrive as
     event_id-contiguous micro-batches (a user's signup and activity
     deliberately SPAN batches); per-user state folds with the MIN/OR
     monoid pair above, and the final snapshot feeds the same cohort
     tail as the batch query — bit-for-bit equality (shared oracle)."""
-    snap = _run_masked_fold(spark, sf_dir, "retention", _query_name,
-                            n_batches)
+    snap = fold_twin(spark, sf_dir, "retention",
+                     _retention_events(spark, sf_dir), "event_id",
+                     RETENTION_STATE_SCHEMA, retention_step, _query_name)
     return retention_from_state(snap)
 
 
 def streaming_lifecycle_stages(spark: SparkSession, sf_dir: str,
-                               _query_name: str = "stream_lifecycle",
-                               n_batches: int = 4) -> DataFrame:
+                               _query_name: str = "stream_lifecycle"
+                               ) -> DataFrame:
     """Streaming twin of events_lifecycle_stages (17th twin): the SAME
     per-user (MIN cohort week, OR active-week bitmask) fold as the
     retention twin — growth accounting needs only the mask half — with
@@ -1417,8 +1119,9 @@ def streaming_lifecycle_stages(spark: SparkSession, sf_dir: str,
     from iq_to_hdl_migration_spark.queries.events_queries import (
         lifecycle_from_user_weeks)
 
-    snap = _run_masked_fold(spark, sf_dir, "lifecycle", _query_name,
-                            n_batches)
+    snap = fold_twin(spark, sf_dir, "lifecycle",
+                     _retention_events(spark, sf_dir), "event_id",
+                     RETENTION_STATE_SCHEMA, retention_step, _query_name)
     return lifecycle_from_user_weeks(user_weeks_from_state(snap))
 
 
@@ -1452,10 +1155,8 @@ BOT_STATE_SCHEMA = ("user_id bigint, n_events bigint, n_gaps bigint, "
 def _bot_batch_delta(batch_df: DataFrame) -> DataFrame:
     """Per-user within-batch cadence stats + the batch's first/last
     event micros (for the boundary gap against the carried state)."""
-    from pyspark.sql import Window as W_
-
     us = F.unix_micros(F.col("ts"))
-    w = W_.partitionBy("user_id").orderBy("ts", "event_id")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag(us).over(w)
     o = batch_df.select("user_id", us.alias("us"),
                         prev.alias("prev_us"))
@@ -1474,218 +1175,62 @@ def _bot_batch_delta(batch_df: DataFrame) -> DataFrame:
                  F.max("us").cast("bigint").alias("d_last_us")))
 
 
-def run_bot_count_fold(spark: SparkSession, arrivals_dir: str,
-                       snap_dir: str, ckpt_dir: str) -> None:
-    """Drain the arrivals dir folding per-user cadence counts with the
-    boundary-gap carry. Resumable under the same checkpoint dir."""
-    import os
-
-    schema = spark.read.parquet(arrivals_dir).schema
-
-    def _latest_before(batch_id: int) -> str:
-        subs = sorted(d for d in os.listdir(snap_dir)
-                      if d < f"{batch_id + 1:05d}_b")
-        return os.path.join(snap_dir, subs[-1])
-
-    def _process(batch_df, batch_id) -> None:
-        prev_snap = spark.read.parquet(_latest_before(batch_id))
-        delta = _bot_batch_delta(batch_df)
-        # the ordered-fold contract: a batch's events must all be
-        # LATER than the carried last_us (id-contiguous arrivals over
-        # time-ordered ids guarantee it; anything else corrupts the
-        # boundary gap, so refuse loudly)
-        joined = prev_snap.join(delta, "user_id", "full")
-        guarded = joined.withColumn(
-            "first_us",
-            F.when(F.col("last_us").isNotNull()
-                   & F.col("first_us").isNotNull()
-                   & (F.col("first_us") <= F.col("last_us")),
-                   F.raise_error(F.concat(
-                       F.lit("bot fold: batch not time-contiguous "
-                             "for user_id="),
-                       F.col("user_id").cast("string"))))
-            .otherwise(F.col("first_us")))
-        boundary = (F.col("last_us").isNotNull()
-                    & F.col("first_us").isNotNull())
-        bgap_subsec = F.when(
-            boundary & ((F.col("first_us") - F.col("last_us"))
-                        < 1_000_000), 1).otherwise(0)
-        merged = guarded.select(
-            "user_id",
-            (F.coalesce("n_events", F.lit(0))
-             + F.coalesce("d_events", F.lit(0))).cast("bigint")
-            .alias("n_events"),
-            (F.coalesce("n_gaps", F.lit(0))
-             + F.coalesce("d_gaps", F.lit(0))
-             + F.when(boundary, 1).otherwise(0)).cast("bigint")
-            .alias("n_gaps"),
-            (F.coalesce("n_subsec", F.lit(0))
-             + F.coalesce("d_subsec", F.lit(0)) + bgap_subsec)
-            .cast("bigint").alias("n_subsec"),
-            (F.coalesce("n_night", F.lit(0))
-             + F.coalesce("d_night", F.lit(0))).cast("bigint")
-            .alias("n_night"),
-            F.coalesce("d_last_us", "last_us").cast("bigint")
-            .alias("last_us"))
-        (merged.write.mode("overwrite")
-         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
-    q = (stream.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+def bot_step(prev: DataFrame, batch_df: DataFrame) -> DataFrame:
+    """Fold per-user cadence counts with the boundary-gap carry."""
+    delta = _bot_batch_delta(batch_df)
+    # the ordered-fold contract: a batch's events must all be LATER
+    # than the carried last_us (id-contiguous arrivals over time-ordered
+    # ids guarantee it; anything else corrupts the boundary gap, so
+    # refuse loudly)
+    joined = prev.join(delta, "user_id", "full")
+    guarded = joined.withColumn(
+        "first_us",
+        F.when(F.col("last_us").isNotNull()
+               & F.col("first_us").isNotNull()
+               & (F.col("first_us") <= F.col("last_us")),
+               F.raise_error(F.concat(
+                   F.lit("bot fold: batch not time-contiguous "
+                         "for user_id="),
+                   F.col("user_id").cast("string"))))
+        .otherwise(F.col("first_us")))
+    boundary = (F.col("last_us").isNotNull()
+                & F.col("first_us").isNotNull())
+    bgap_subsec = F.when(
+        boundary & ((F.col("first_us") - F.col("last_us"))
+                    < 1_000_000), 1).otherwise(0)
+    return guarded.select(
+        "user_id",
+        (F.coalesce("n_events", F.lit(0))
+         + F.coalesce("d_events", F.lit(0))).cast("bigint")
+        .alias("n_events"),
+        (F.coalesce("n_gaps", F.lit(0))
+         + F.coalesce("d_gaps", F.lit(0))
+         + F.when(boundary, 1).otherwise(0)).cast("bigint")
+        .alias("n_gaps"),
+        (F.coalesce("n_subsec", F.lit(0))
+         + F.coalesce("d_subsec", F.lit(0)) + bgap_subsec)
+        .cast("bigint").alias("n_subsec"),
+        (F.coalesce("n_night", F.lit(0))
+         + F.coalesce("d_night", F.lit(0))).cast("bigint")
+        .alias("n_night"),
+        F.coalesce("d_last_us", "last_us").cast("bigint")
+        .alias("last_us"))
 
 
 def streaming_bot_score(spark: SparkSession, sf_dir: str,
-                        _query_name: str = "stream_bot",
-                        n_batches: int = 4) -> DataFrame:
+                        _query_name: str = "stream_bot") -> DataFrame:
     """Streaming twin of events_bot_score_report (18th twin): the
     seam-carrying cadence fold above, with the final snapshot fed
     through the shared report tail — equal to the single-shot batch
-    report bit-for-bit (shared oracle).
-
-    Supersede-on-reinvoke contract: same as streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    report bit-for-bit (shared oracle)."""
     from iq_to_hdl_migration_spark.queries.events_queries import (
         bot_report_from_counts)
-    from iq_to_hdl_migration_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts")
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "bot_score")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = local_frame(spark, [], BOT_STATE_SCHEMA)
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is not None:
-        _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                                  work, arrivals_dir)
-        run_bot_count_fold(spark, arrivals_dir, snap_dir, ckpt_dir)
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
+    snap = fold_twin(spark, sf_dir, "bot_score", ev, "event_id",
+                     BOT_STATE_SCHEMA, bot_step, _query_name)
     return bot_report_from_counts(snap.drop("last_us"))
-
-
-# ---------------------------------------------------------------------------
-# Type-diversity twin: per-user-per-type counts are the same additive
-# count monoid as the Gini fold, just keyed on (user_id, event_type)
-# — state is one BIGINT per (user, type) pair, bounded by the type
-# vocabulary (small and fixed), so the snapshot grows with distinct
-# users, not with events. The Simpson-concentration banding is NOT
-# incremental (a ratio of sums of squares is not mergeable); the final
-# snapshot feeds the same integer-exact tail as the batch query.
-# ---------------------------------------------------------------------------
-
-def run_keyed_count_fold(spark: SparkSession, arrivals_dir: str,
-                         snap_dir: str, ckpt_dir: str,
-                         keys: list[str]) -> None:
-    """run_user_count_fold generalized to a composite key: drain the
-    arrivals dir folding each batch's per-key row counts into the
-    snapshot chain (merge = sum per key — the additive count monoid).
-    Replay-safe: a replayed batch recomputes from the PRIOR snapshot,
-    so re-execution rewrites its snapshot byte-identically."""
-    import os
-
-    schema = spark.read.parquet(arrivals_dir).schema
-
-    def _latest_before(batch_id: int) -> str:
-        subs = sorted(d for d in os.listdir(snap_dir)
-                      if d < f"{batch_id + 1:05d}_b")
-        return os.path.join(snap_dir, subs[-1])
-
-    def _process(batch_df, batch_id) -> None:
-        prev_snap = spark.read.parquet(_latest_before(batch_id))
-        delta = (batch_df.groupBy(*keys)
-                 .agg(F.count(F.lit(1)).cast("bigint").alias("n_events")))
-        merged = (prev_snap.unionByName(delta)
-                  .groupBy(*keys)
-                  .agg(F.sum("n_events").cast("bigint").alias("n_events")))
-        (merged.write.mode("overwrite")
-         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
-    q = (stream.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-
-def streaming_type_diversity(spark: SparkSession, sf_dir: str,
-                             _query_name: str = "stream_diversity",
-                             n_batches: int = 4) -> DataFrame:
-    """Streaming twin of events_user_type_diversity: events arrive as
-    event_id-contiguous micro-batches (a user's events deliberately
-    SPAN batches) and each batch folds per-(user, type) counts into a
-    snapshot via run_keyed_count_fold. The final snapshot feeds the
-    SAME integer-exact Simpson-concentration tail as the batch query,
-    so the report equals the single-shot result bit-for-bit (shared
-    oracle). Supersede-on-reinvoke contract: same as
-    streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from iq_to_hdl_migration_spark.queries.events_queries import (
-        diversity_from_type_counts)
-    from iq_to_hdl_migration_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type")
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "type_diversity")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = local_frame(
-        spark, [], "user_id bigint, event_type string, n_events bigint")
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is None:
-        snap = spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-        return diversity_from_type_counts(snap)
-    _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_keyed_count_fold(spark, arrivals_dir, snap_dir, ckpt_dir,
-                         ["user_id", "event_type"])
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
-    return diversity_from_type_counts(snap)
 
 
 # ---------------------------------------------------------------------------
@@ -1707,137 +1252,74 @@ _GAP_BUCKET_SQL = ("CAST(CASE WHEN gap_us <= 0 THEN 0 "
                    "ELSE length(bin(gap_us div 1000000)) END AS INT)")
 
 
-def run_gap_hist_fold(spark: SparkSession, arrivals_dir: str,
-                      snap_dir: str, ckpt_dir: str) -> None:
-    """Drain the arrivals dir folding per-(user, type) gap-bucket
-    histograms with the boundary-gap carry. Resumable under the same
-    checkpoint dir; a replayed batch recomputes from the PRIOR
-    snapshot, so re-execution rewrites its snapshot byte-identically."""
-    import os
+def gap_hist_step(prev: DataFrame, batch_df: DataFrame) -> DataFrame:
+    """Fold per-(user, type) gap-bucket histograms with the
+    boundary-gap carry."""
+    prev_hist = (prev.where(F.col("gap_bucket").isNotNull())
+                 .select("user_id", "event_type", "gap_bucket", "n_gaps"))
+    prev_seam = (prev.where(F.col("gap_bucket").isNull())
+                 .select("user_id", "event_type", "last_us"))
 
-    from pyspark.sql import Window as W_
+    us = F.unix_micros(F.col("ts"))
+    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
+    o = batch_df.select("user_id", "event_type", us.alias("us"),
+                        F.lag(us).over(w).alias("prev_us"))
+    d_hist = (o.where(F.col("prev_us").isNotNull())
+              .withColumn("gap_us", F.col("us") - F.col("prev_us"))
+              .select("user_id", "event_type",
+                      F.expr(_GAP_BUCKET_SQL).alias("gap_bucket"))
+              .groupBy("user_id", "event_type", "gap_bucket")
+              .agg(F.count(F.lit(1)).cast("bigint").alias("n_gaps")))
+    spans = (o.groupBy("user_id", "event_type")
+             .agg(F.min("us").cast("bigint").alias("first_us"),
+                  F.max("us").cast("bigint").alias("d_last_us")))
 
-    schema = spark.read.parquet(arrivals_dir).schema
+    # ordered-fold contract: refuse non-contiguous arrivals loudly
+    joined = prev_seam.join(spans, ["user_id", "event_type"], "full")
+    guarded = joined.withColumn(
+        "first_us",
+        F.when(F.col("last_us").isNotNull()
+               & F.col("first_us").isNotNull()
+               & (F.col("first_us") <= F.col("last_us")),
+               F.raise_error(F.concat(
+                   F.lit("gap fold: batch not time-contiguous "
+                         "for user_id="),
+                   F.col("user_id").cast("string"))))
+        .otherwise(F.col("first_us")))
+    boundary = (guarded
+                .where(F.col("last_us").isNotNull()
+                       & F.col("first_us").isNotNull())
+                .withColumn("gap_us", F.col("first_us") - F.col("last_us"))
+                .select("user_id", "event_type",
+                        F.expr(_GAP_BUCKET_SQL).alias("gap_bucket"),
+                        F.lit(1).cast("bigint").alias("n_gaps")))
+    new_hist = (prev_hist.unionByName(d_hist).unionByName(boundary)
+                .groupBy("user_id", "event_type", "gap_bucket")
+                .agg(F.sum("n_gaps").cast("bigint").alias("n_gaps")))
+    new_seam = guarded.select(
+        "user_id", "event_type",
+        F.coalesce("d_last_us", "last_us").cast("bigint").alias("last_us"))
 
-    def _latest_before(batch_id: int) -> str:
-        subs = sorted(d for d in os.listdir(snap_dir)
-                      if d < f"{batch_id + 1:05d}_b")
-        return os.path.join(snap_dir, subs[-1])
-
-    def _process(batch_df, batch_id) -> None:
-        prev = spark.read.parquet(_latest_before(batch_id))
-        prev_hist = (prev.where(F.col("gap_bucket").isNotNull())
-                     .select("user_id", "event_type", "gap_bucket",
-                             "n_gaps"))
-        prev_seam = (prev.where(F.col("gap_bucket").isNull())
-                     .select("user_id", "event_type", "last_us"))
-
-        us = F.unix_micros(F.col("ts"))
-        w = W_.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-        o = batch_df.select("user_id", "event_type", us.alias("us"),
-                            F.lag(us).over(w).alias("prev_us"))
-        d_hist = (o.where(F.col("prev_us").isNotNull())
-                  .withColumn("gap_us", F.col("us") - F.col("prev_us"))
-                  .select("user_id", "event_type",
-                          F.expr(_GAP_BUCKET_SQL).alias("gap_bucket"))
-                  .groupBy("user_id", "event_type", "gap_bucket")
-                  .agg(F.count(F.lit(1)).cast("bigint").alias("n_gaps")))
-        spans = (o.groupBy("user_id", "event_type")
-                 .agg(F.min("us").cast("bigint").alias("first_us"),
-                      F.max("us").cast("bigint").alias("d_last_us")))
-
-        # ordered-fold contract: refuse non-contiguous arrivals loudly
-        joined = prev_seam.join(spans, ["user_id", "event_type"], "full")
-        guarded = joined.withColumn(
-            "first_us",
-            F.when(F.col("last_us").isNotNull()
-                   & F.col("first_us").isNotNull()
-                   & (F.col("first_us") <= F.col("last_us")),
-                   F.raise_error(F.concat(
-                       F.lit("gap fold: batch not time-contiguous "
-                             "for user_id="),
-                       F.col("user_id").cast("string"))))
-            .otherwise(F.col("first_us")))
-        boundary = (guarded
-                    .where(F.col("last_us").isNotNull()
-                           & F.col("first_us").isNotNull())
-                    .withColumn("gap_us",
-                                F.col("first_us") - F.col("last_us"))
-                    .select("user_id", "event_type",
-                            F.expr(_GAP_BUCKET_SQL).alias("gap_bucket"),
-                            F.lit(1).cast("bigint").alias("n_gaps")))
-        new_hist = (prev_hist.unionByName(d_hist).unionByName(boundary)
-                    .groupBy("user_id", "event_type", "gap_bucket")
-                    .agg(F.sum("n_gaps").cast("bigint").alias("n_gaps")))
-        new_seam = guarded.select(
-            "user_id", "event_type",
-            F.coalesce("d_last_us", "last_us").cast("bigint")
-            .alias("last_us"))
-
-        snap = (new_hist
-                .withColumn("last_us", F.lit(None).cast("bigint"))
-                .unionByName(new_seam
-                             .withColumn("gap_bucket",
-                                         F.lit(None).cast("int"))
-                             .withColumn("n_gaps",
-                                         F.lit(None).cast("bigint"))
-                             .select("user_id", "event_type",
-                                     "gap_bucket", "n_gaps", "last_us")))
-        (snap.write.mode("overwrite")
-         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
-    q = (stream.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    return (new_hist
+            .withColumn("last_us", F.lit(None).cast("bigint"))
+            .unionByName(new_seam
+                         .withColumn("gap_bucket", F.lit(None).cast("int"))
+                         .withColumn("n_gaps", F.lit(None).cast("bigint"))
+                         .select("user_id", "event_type",
+                                 "gap_bucket", "n_gaps", "last_us")))
 
 
 def streaming_gap_histogram(spark: SparkSession, sf_dir: str,
-                            _query_name: str = "stream_gap_hist",
-                            n_batches: int = 4) -> DataFrame:
+                            _query_name: str = "stream_gap_hist"
+                            ) -> DataFrame:
     """Streaming twin of events_gap_powerlaw_histogram: the
     seam-carrying histogram fold above; the final snapshot's histogram
     rows collapse onto (event_type, bucket) — the same report as the
-    single-shot batch query, bit-for-bit (shared oracle).
-
-    Supersede-on-reinvoke contract: same as streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from iq_to_hdl_migration_spark.sources.tables import load_table
-
+    single-shot batch query, bit-for-bit (shared oracle)."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts")
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "gap_hist")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = local_frame(spark, [], GAP_HIST_STATE_SCHEMA)
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is not None:
-        _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                                  work, arrivals_dir)
-        run_gap_hist_fold(spark, arrivals_dir, snap_dir, ckpt_dir)
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
+    snap = fold_twin(spark, sf_dir, "gap_hist", ev, "event_id",
+                     GAP_HIST_STATE_SCHEMA, gap_hist_step, _query_name)
     return (snap.where(F.col("gap_bucket").isNotNull())
             .groupBy("event_type",
                      F.col("gap_bucket").alias("gap_bucket_log2s"))
@@ -1861,82 +1343,58 @@ FUNNEL_STATE_SCHEMA = ("user_id bigint, t_view_us bigint, "
                        "t_click_us bigint, t_buy_us bigint, last_us bigint")
 
 
-def run_funnel_fold(spark: SparkSession, arrivals_dir: str,
-                    snap_dir: str, ckpt_dir: str) -> None:
-    """Drain the arrivals dir folding per-user ordered-funnel stage
-    times. Replay-safe: a replayed batch recomputes from the PRIOR
-    snapshot; refuses non-contiguous arrivals loudly."""
-    import os
-
-    schema = spark.read.parquet(arrivals_dir).schema
-
-    def _latest_before(batch_id: int) -> str:
-        subs = sorted(d for d in os.listdir(snap_dir)
-                      if d < f"{batch_id + 1:05d}_b")
-        return os.path.join(snap_dir, subs[-1])
-
-    def _process(batch_df, batch_id) -> None:
-        prev = spark.read.parquet(_latest_before(batch_id))
-        us = F.unix_micros(F.col("ts"))
-        b = batch_df.select("user_id", "event_type", us.alias("us"))
-        per_user = (b.groupBy("user_id")
-                    .agg(F.min(F.when(F.col("event_type") == "view",
-                                      F.col("us"))).alias("bv"),
-                         F.min("us").cast("bigint").alias("first_us"),
-                         F.max("us").cast("bigint").alias("d_last_us")))
-        joined = prev.join(per_user, "user_id", "full")
-        # the guard must ride a column the fold actually consumes
-        # (d_last_us feeds every snapshot row's last_us), or column
-        # pruning would silently drop the raise_error
-        guarded = joined.withColumn(
-            "d_last_us",
-            F.when(F.col("last_us").isNotNull()
-                   & F.col("first_us").isNotNull()
-                   & (F.col("first_us") <= F.col("last_us")),
-                   F.raise_error(F.concat(
-                       F.lit("funnel fold: batch not time-contiguous "
-                             "for user_id="),
-                       F.col("user_id").cast("string"))))
-            .otherwise(F.col("d_last_us")))
-        s1 = guarded.select(
-            "user_id", "t_click_us", "t_buy_us",
-            F.coalesce("t_view_us", "bv").cast("bigint")
-            .alias("t_view_us"),
-            F.coalesce("d_last_us", "last_us").cast("bigint")
-            .alias("last_us"))
-        # stage 2: first click strictly after the resolved view time
-        clicks = (b.where(F.col("event_type") == "click")
-                  .join(s1.select("user_id", "t_view_us"), "user_id")
-                  .where(F.col("t_view_us").isNotNull()
-                         & (F.col("us") > F.col("t_view_us")))
-                  .groupBy("user_id")
-                  .agg(F.min("us").cast("bigint").alias("bc")))
-        s2 = (s1.join(clicks, "user_id", "left")
-              .select("user_id", "t_view_us", "t_buy_us", "last_us",
-                      F.coalesce("t_click_us", "bc").cast("bigint")
-                      .alias("t_click_us")))
-        buys = (b.where(F.col("event_type") == "purchase")
-                .join(s2.select("user_id", "t_click_us"), "user_id")
-                .where(F.col("t_click_us").isNotNull()
-                       & (F.col("us") > F.col("t_click_us")))
-                .groupBy("user_id")
-                .agg(F.min("us").cast("bigint").alias("bb")))
-        s3 = (s2.join(buys, "user_id", "left")
-              .select("user_id", "t_view_us", "t_click_us",
-                      F.coalesce("t_buy_us", "bb").cast("bigint")
-                      .alias("t_buy_us"),
-                      "last_us"))
-        (s3.select("user_id", "t_view_us", "t_click_us", "t_buy_us",
-                   "last_us")
-         .write.mode("overwrite")
-         .parquet(os.path.join(snap_dir, f"{batch_id + 1:05d}_b")))
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(arrivals_dir))
-    q = (stream.writeStream.foreachBatch(_process)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+def funnel_step(prev: DataFrame, batch_df: DataFrame) -> DataFrame:
+    """Fold per-user ordered-funnel stage times; refuses non-contiguous
+    arrivals loudly."""
+    us = F.unix_micros(F.col("ts"))
+    b = batch_df.select("user_id", "event_type", us.alias("us"))
+    per_user = (b.groupBy("user_id")
+                .agg(F.min(F.when(F.col("event_type") == "view",
+                                  F.col("us"))).alias("bv"),
+                     F.min("us").cast("bigint").alias("first_us"),
+                     F.max("us").cast("bigint").alias("d_last_us")))
+    joined = prev.join(per_user, "user_id", "full")
+    # the guard must ride a column the fold actually consumes
+    # (d_last_us feeds every snapshot row's last_us), or column
+    # pruning would silently drop the raise_error
+    guarded = joined.withColumn(
+        "d_last_us",
+        F.when(F.col("last_us").isNotNull()
+               & F.col("first_us").isNotNull()
+               & (F.col("first_us") <= F.col("last_us")),
+               F.raise_error(F.concat(
+                   F.lit("funnel fold: batch not time-contiguous "
+                         "for user_id="),
+                   F.col("user_id").cast("string"))))
+        .otherwise(F.col("d_last_us")))
+    s1 = guarded.select(
+        "user_id", "t_click_us", "t_buy_us",
+        F.coalesce("t_view_us", "bv").cast("bigint").alias("t_view_us"),
+        F.coalesce("d_last_us", "last_us").cast("bigint").alias("last_us"))
+    # stage 2: first click strictly after the resolved view time
+    clicks = (b.where(F.col("event_type") == "click")
+              .join(s1.select("user_id", "t_view_us"), "user_id")
+              .where(F.col("t_view_us").isNotNull()
+                     & (F.col("us") > F.col("t_view_us")))
+              .groupBy("user_id")
+              .agg(F.min("us").cast("bigint").alias("bc")))
+    s2 = (s1.join(clicks, "user_id", "left")
+          .select("user_id", "t_view_us", "t_buy_us", "last_us",
+                  F.coalesce("t_click_us", "bc").cast("bigint")
+                  .alias("t_click_us")))
+    buys = (b.where(F.col("event_type") == "purchase")
+            .join(s2.select("user_id", "t_click_us"), "user_id")
+            .where(F.col("t_click_us").isNotNull()
+                   & (F.col("us") > F.col("t_click_us")))
+            .groupBy("user_id")
+            .agg(F.min("us").cast("bigint").alias("bb")))
+    s3 = (s2.join(buys, "user_id", "left")
+          .select("user_id", "t_view_us", "t_click_us",
+                  F.coalesce("t_buy_us", "bb").cast("bigint")
+                  .alias("t_buy_us"),
+                  "last_us"))
+    return s3.select("user_id", "t_view_us", "t_click_us", "t_buy_us",
+                     "last_us")
 
 
 def funnel_counts_from_state(snap: DataFrame) -> DataFrame:
@@ -1952,283 +1410,134 @@ def funnel_counts_from_state(snap: DataFrame) -> DataFrame:
 
 
 def streaming_funnel_counts(spark: SparkSession, sf_dir: str,
-                            _query_name: str = "stream_funnel",
-                            n_batches: int = 4) -> DataFrame:
+                            _query_name: str = "stream_funnel"
+                            ) -> DataFrame:
     """Streaming twin of events_funnel_counts: the ordered-funnel fold
     above; equal to the single-shot batch report bit-for-bit (shared
-    oracle). Supersede-on-reinvoke contract: same as
-    streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from iq_to_hdl_migration_spark.sources.tables import load_table
-
+    oracle)."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts")
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "funnel")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = local_frame(spark, [], FUNNEL_STATE_SCHEMA)
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is not None:
-        _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                                  work, arrivals_dir)
-        run_funnel_fold(spark, arrivals_dir, snap_dir, ckpt_dir)
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
+    snap = fold_twin(spark, sf_dir, "funnel", ev, "event_id",
+                     FUNNEL_STATE_SCHEMA, funnel_step, _query_name)
     return funnel_counts_from_state(snap)
 
 
-def streaming_dau_wau(spark: SparkSession, sf_dir: str,
-                      _query_name: str = "stream_dau_wau",
-                      n_batches: int = 4) -> DataFrame:
-    """Streaming twin of events_dau_wau, riding the generalized
-    composite-key count fold: per-(user, day) counts are the additive
-    count monoid, and DAU/WAU need only the DISTINCT (user, day)
-    presence — which the count snapshot carries for free (count >= 1).
-    State is one row per active (user, day) pair — the same frame the
-    batch query shuffles once. Final snapshot feeds the shared tail,
-    so the report equals the single-shot batch result bit-for-bit
-    (shared oracle). Supersede-on-reinvoke contract: same as
-    streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
+# ---------------------------------------------------------------------------
+# Composite-key count twins (type diversity, DAU/WAU, type-mix drift,
+# Haar, Fano): per-key counts are the same additive count monoid as the
+# Gini fold, keyed on (user_id, event_type), (user_id, day),
+# (week, event_type) or (event_type, epoch-hour). State is one BIGINT
+# per key, bounded by the key domain, not by the events. The reports
+# themselves (Simpson concentration, distinct presence, TVD, Haar
+# energy, Fano dispersion) are NOT incremental; the final snapshot
+# feeds the same integer-exact tail as the batch query.
+# ---------------------------------------------------------------------------
 
+def streaming_type_diversity(spark: SparkSession, sf_dir: str,
+                             _query_name: str = "stream_diversity"
+                             ) -> DataFrame:
+    """Streaming twin of events_user_type_diversity: events arrive as
+    event_id-contiguous micro-batches (a user's events deliberately
+    SPAN batches) and each batch folds per-(user, type) counts into a
+    snapshot. The final snapshot feeds the SAME integer-exact
+    Simpson-concentration tail as the batch query, so the report
+    equals the single-shot result bit-for-bit (shared oracle)."""
+    from iq_to_hdl_migration_spark.queries.events_queries import (
+        diversity_from_type_counts)
+
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type")
+    snap = fold_twin(spark, sf_dir, "type_diversity", ev, "event_id",
+                     "user_id bigint, event_type string, n_events bigint",
+                     keyed_count_step(["user_id", "event_type"]),
+                     _query_name)
+    return diversity_from_type_counts(snap)
+
+
+def streaming_dau_wau(spark: SparkSession, sf_dir: str,
+                      _query_name: str = "stream_dau_wau") -> DataFrame:
+    """Streaming twin of events_dau_wau, riding the composite-key count
+    fold: per-(user, day) counts are the additive count monoid, and
+    DAU/WAU need only the DISTINCT (user, day) presence — which the
+    count snapshot carries for free (count >= 1). State is one row per
+    active (user, day) pair — the same frame the batch query shuffles
+    once. Final snapshot feeds the shared tail, so the report equals
+    the single-shot batch result bit-for-bit (shared oracle)."""
     from iq_to_hdl_migration_spark.queries.events_queries import (
         dau_wau_from_user_days)
-    from iq_to_hdl_migration_spark.sources.tables import load_table
 
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", "user_id", F.to_date("ts").alias("day")))
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "dau_wau")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = local_frame(
-        spark, [], "user_id bigint, day date, n_events bigint")
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is None:
-        snap = spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-        return dau_wau_from_user_days(snap.select("user_id", "day"))
-    _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_keyed_count_fold(spark, arrivals_dir, snap_dir, ckpt_dir,
-                         ["user_id", "day"])
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
+    snap = fold_twin(spark, sf_dir, "dau_wau", ev, "event_id",
+                     "user_id bigint, day date, n_events bigint",
+                     keyed_count_step(["user_id", "day"]), _query_name)
     return dau_wau_from_user_days(snap.select("user_id", "day"))
 
 
 def streaming_type_mix_drift(spark: SparkSession, sf_dir: str,
-                             _query_name: str = "stream_mix_drift",
-                             n_batches: int = 4) -> DataFrame:
+                             _query_name: str = "stream_mix_drift"
+                             ) -> DataFrame:
     """Streaming twin of events_type_mix_drift_tvd, riding the
-    generalized composite-key count fold on (week, event_type): the
-    weekly type-count matrix is the additive count monoid, bounded by
-    weeks x the fixed type vocabulary — the cheapest state of any twin.
-    The final snapshot feeds the SAME exact-integer TVD tail as the
-    batch query, so the drift report equals the single-shot result
-    bit-for-bit (shared oracle). Supersede-on-reinvoke contract: same
-    as streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    composite-key count fold on (week, event_type): the weekly
+    type-count matrix is the additive count monoid, bounded by weeks x
+    the fixed type vocabulary — the cheapest state of any twin. The
+    final snapshot feeds the SAME exact-integer TVD tail as the batch
+    query, so the drift report equals the single-shot result
+    bit-for-bit (shared oracle)."""
     from iq_to_hdl_migration_spark.queries.events_queries import (
         type_mix_drift_from_counts)
-    from iq_to_hdl_migration_spark.sources.tables import load_table
 
     week = (F.datediff(F.to_date("ts"), F.lit("2024-01-01").cast("date"))
             / 7).cast("int")
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", week.alias("week"), "event_type"))
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "type_mix_drift")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = local_frame(
-        spark, [], "week int, event_type string, n_events bigint")
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is None:
-        snap = spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-        return type_mix_drift_from_counts(
-            snap.select("week", "event_type",
-                        F.col("n_events").alias("o")))
-    _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_keyed_count_fold(spark, arrivals_dir, snap_dir, ckpt_dir,
-                         ["week", "event_type"])
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
+    snap = fold_twin(spark, sf_dir, "type_mix_drift", ev, "event_id",
+                     "week int, event_type string, n_events bigint",
+                     keyed_count_step(["week", "event_type"]), _query_name)
     return type_mix_drift_from_counts(
         snap.select("week", "event_type", F.col("n_events").alias("o")))
 
 
-def streaming_haar_energy(spark: SparkSession, sf_dir: str,
-                          _query_name: str = "stream_haar",
-                          n_batches: int = 4) -> DataFrame:
-    """Streaming twin of events_haar_energy_profile, riding the
-    generalized composite-key count fold on (event_type, epoch-hour):
-    the hourly count spine is the additive count monoid bounded by
-    hours x the fixed type vocabulary, and the final snapshot feeds
-    the SAME exact-integer Haar tail, so the multi-resolution energy
-    spectrum equals the single-shot result bit-for-bit (shared
-    oracle). Supersede-on-reinvoke contract: same as
-    streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from iq_to_hdl_migration_spark.queries.events_queries import (
-        haar_energy_from_hourly)
-    from iq_to_hdl_migration_spark.sources.tables import load_table
-
+def _hourly_type_counts(spark: SparkSession, sf_dir: str, tag: str,
+                        name: str) -> DataFrame:
+    """Final (event_type, epoch-hour, c) count snapshot of the
+    composite-key count fold shared by the Haar and Fano twins."""
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", "event_type",
                   F.expr("unix_micros(ts) div 3600000000").alias("h")))
+    snap = fold_twin(spark, sf_dir, tag, ev, "event_id",
+                     "event_type string, h bigint, n_events bigint",
+                     keyed_count_step(["event_type", "h"]), name)
+    return snap.select("event_type", "h", F.col("n_events").alias("c"))
 
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "haar_energy")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
 
-    empty = local_frame(
-        spark, [], "event_type string, h bigint, n_events bigint")
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
+def streaming_haar_energy(spark: SparkSession, sf_dir: str,
+                          _query_name: str = "stream_haar") -> DataFrame:
+    """Streaming twin of events_haar_energy_profile, riding the
+    composite-key count fold on (event_type, epoch-hour): the hourly
+    count spine is the additive count monoid bounded by hours x the
+    fixed type vocabulary, and the final snapshot feeds the SAME
+    exact-integer Haar tail, so the multi-resolution energy spectrum
+    equals the single-shot result bit-for-bit (shared oracle)."""
+    from iq_to_hdl_migration_spark.queries.events_queries import (
+        haar_energy_from_hourly)
 
-    lo, hi = _id_span(ev, "event_id")
-    if hi is None:
-        snap = spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-        return haar_energy_from_hourly(
-            snap.select("event_type", "h", F.col("n_events").alias("c")))
-    _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_keyed_count_fold(spark, arrivals_dir, snap_dir, ckpt_dir,
-                         ["event_type", "h"])
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
     return haar_energy_from_hourly(
-        snap.select("event_type", "h", F.col("n_events").alias("c")))
+        _hourly_type_counts(spark, sf_dir, "haar_energy", _query_name))
 
 
 def streaming_fano_factor(spark: SparkSession, sf_dir: str,
-                          _query_name: str = "stream_fano",
-                          n_batches: int = 4) -> DataFrame:
+                          _query_name: str = "stream_fano") -> DataFrame:
     """Streaming twin of events_fano_factor_hourly, riding the SAME
-    generalized composite-key count fold as the Haar twin (the
-    (event_type, epoch-hour) count spine is the additive count
-    monoid): the final snapshot feeds the shared exact-integer Fano
-    tail (`fano_from_hourly`), whose spine bounds derive from the
-    counts themselves, so the dispersion report equals the single-shot
-    result bit-for-bit. Supersede-on-reinvoke contract: same as
-    streaming_bottomk_sample."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    composite-key count fold as the Haar twin (the (event_type,
+    epoch-hour) count spine is the additive count monoid): the final
+    snapshot feeds the shared exact-integer Fano tail
+    (`fano_from_hourly`), whose spine bounds derive from the counts
+    themselves, so the dispersion report equals the single-shot result
+    bit-for-bit."""
     from iq_to_hdl_migration_spark.queries.events_queries import (
         fano_from_hourly)
-    from iq_to_hdl_migration_spark.sources.tables import load_table
 
-    ev = (load_table(spark, sf_dir, "events")
-          .select("event_id", "event_type",
-                  F.expr("unix_micros(ts) div 3600000000").alias("h")))
-
-    wkey = (spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir), "fano_factor")
-    prev = _STREAM_WORK_DIRS.pop(wkey, None)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    work = tempfile.mkdtemp(prefix=f"{_query_name}_")
-    _STREAM_WORK_DIRS[wkey] = work
-    arrivals_dir = os.path.join(work, "arrivals")
-    snap_dir = os.path.join(work, "snaps")
-    ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(snap_dir)
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-
-    empty = local_frame(
-        spark, [], "event_type string, h bigint, n_events bigint")
-    empty.write.parquet(os.path.join(snap_dir, "00000_init"))
-
-    lo, hi = _id_span(ev, "event_id")
-    if hi is None:
-        snap = spark.read.parquet(os.path.join(snap_dir, "00000_init"))
-        return fano_from_hourly(
-            snap.select("event_type", "h",
-                        F.col("n_events").alias("c")), step=1)
-    _stage_id_sliced_arrivals(ev, "event_id", lo, hi, n_batches,
-                              work, arrivals_dir)
-
-    run_keyed_count_fold(spark, arrivals_dir, snap_dir, ckpt_dir,
-                         ["event_type", "h"])
-
-    final = sorted(os.listdir(snap_dir))[-1]
-    snap = spark.read.parquet(os.path.join(snap_dir, final))
     return fano_from_hourly(
-        snap.select("event_type", "h", F.col("n_events").alias("c")),
+        _hourly_type_counts(spark, sf_dir, "fano_factor", _query_name),
         step=1)

@@ -7,11 +7,14 @@ ships, in the order that fails fastest.
   3. full pytest suite at sf0.01 — the driver's gate scale; this is
      where scale-dependent breakage (int64 checksum overflow, sketch
      accuracy cliffs) hides if you only test the default sf
-  4. registry-wide physical-plan audit (cartesians, generator-filter
+  4. benchmark smoke (perfbench/smoke.py: every workload untraced and
+     traced at sf0.001, result shape, a wrong digest counted as failed)
+  5. registry-wide physical-plan audit (cartesians, generator-filter
      inlining, double-regex filters)
 
 Usage: python scripts/check.py [--fast]
-  --fast skips step 3 (the sf0.01 suite, ~9 min) for inner-loop use.
+  --fast skips steps 3 and 4 (the sf0.01 suite, ~9 min, and the
+  benchmark smoke, ~5 min) for inner-loop use.
 Exit code 0 = all green.
 """
 
@@ -79,7 +82,12 @@ def main() -> None:
             [sys.executable, "-m", "pytest", "tests/", "-x", "-q"],
             env={"SPARK_GRAFT_TEST_SF_DIR": "/root/testdata/sf0.01"})
 
-    # 4. plan audit — JSON handed off via a temp file, not stdout (a
+    # 4. the benchmark still runs, checks its answers and reports every
+    # metric it declares
+    if not fast:
+        run("bench smoke", [sys.executable, "perfbench/smoke.py"])
+
+    # 5. plan audit — JSON handed off via a temp file, not stdout (a
     # live SparkSession can interleave log lines with the payload)
     import tempfile
     with tempfile.NamedTemporaryFile(suffix=".json", delete=False) as tf:

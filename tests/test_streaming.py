@@ -3,17 +3,28 @@ semantics contract (SURVEY §2.10 streaming plan)."""
 
 from __future__ import annotations
 
+import ast
+import os
+import pathlib
+from collections.abc import Callable
+from dataclasses import dataclass
+
 import pyspark.sql.functions as F
+import pytest
+from pyspark.sql import Window
+from pyspark.sql.types import StructType
 
 from iq_to_hdl_migration_spark.queries import load_all
+from iq_to_hdl_migration_spark.queries.events_queries import (
+    bot_report_from_counts)
+from iq_to_hdl_migration_spark.session import local_frame
+from iq_to_hdl_migration_spark.sources.tables import load_table
 from iq_to_hdl_migration_spark.streaming import windows as W
 
 REGISTRY = load_all()
 
 
 def test_streaming_hourly_matches_batch(spark, sf_dir):
-    import pyspark.sql.functions as F
-
     # compare on epoch micros server-side: collecting a raw TIMESTAMP
     # renders it in the client OS timezone (round-5 TZ sweep finding)
     stream = (W.streaming_hourly_counts(spark, sf_dir, "t_hourly")
@@ -34,7 +45,6 @@ def test_streaming_sessionization_matches_batch(spark, sf_dir):
 
 
 def test_streaming_dedup_matches_batch_distinct(spark, sf_dir):
-    from iq_to_hdl_migration_spark.sources.tables import load_table
     from iq_to_hdl_migration_spark.streaming.windows import (
         streaming_dedup_count)
     streamed = streaming_dedup_count(spark, sf_dir)
@@ -47,13 +57,10 @@ def test_checkpoint_resume_exactly_once(spark, sf_dir, tmp_path):
     """Two-phase arrival with a re-send of old rows: the second run
     resumes from the checkpoint, emits only the genuinely-new rows,
     and the sink ends with zero duplicates."""
-    import pyspark.sql.functions as F
-
     src = str(tmp_path / "src")
     sink = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
 
-    from iq_to_hdl_migration_spark.sources.tables import load_table
     raw = load_table(spark, sf_dir, "events")
     split_id = raw.approxQuantile("event_id", [0.5], 0.0)[0]
     phase1 = raw.filter(F.col("event_id") <= split_id)
@@ -78,9 +85,6 @@ def test_checkpoint_resume_exactly_once(spark, sf_dir, tmp_path):
 def test_stream_stream_join_matches_batch(spark, sf_dir):
     """Stream-stream interval join == the same predicate as a batch
     join (every purchase x same-user clicks in the prior hour)."""
-    import pyspark.sql.functions as F
-    from iq_to_hdl_migration_spark.sources.tables import load_table
-
     got = W.streaming_purchase_click_join(spark, sf_dir)
 
     ev = load_table(spark, sf_dir, "events")
@@ -106,8 +110,6 @@ def test_streaming_incremental_dedup_equals_batch(spark, sf_dir):
     arrival stream, index extended per batch) must emit EXACTLY the
     single-shot batch result — pair set and estimates — regardless of
     micro-batch partitioning (3 files here vs one batch)."""
-    from iq_to_hdl_migration_spark.queries import load_all
-
     reg = load_all()
     got = sorted(
         tuple(r) for r in
@@ -123,13 +125,9 @@ def test_tws_user_spend_equals_batch(spark, sf_dir):
     """transformWithStateInPandas twin == batch per-user purchase
     totals. Skips where the protobuf runtime the state server needs is
     absent (this container); runs on a full install."""
-    import pytest
-
     if not W.tws_available():
         pytest.skip("protobuf runtime absent: transformWithState "
                     "state server cannot start in this container")
-    import pyspark.sql.functions as F
-    from iq_to_hdl_migration_spark.sources.tables import load_table
 
     got = sorted(map(tuple, W.streaming_user_spend_tws(spark, sf_dir)
                      .collect()))
@@ -149,10 +147,6 @@ def test_scd2_state_survives_restart(spark, sf_dir, tmp_path):
     must carry across the restart in state, so the union of both
     drains' closed rows equals the batch SCD2 history's closed rows
     over the full dataset — no duplicates, no holes at the seam."""
-    import pyspark.sql.functions as F
-
-    from iq_to_hdl_migration_spark.queries import load_all
-    from iq_to_hdl_migration_spark.sources.tables import load_table
     from iq_to_hdl_migration_spark.streaming.windows import scd2_stream
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -197,358 +191,399 @@ def test_scd2_state_survives_restart(spark, sf_dir, tmp_path):
         "restarted streaming history must equal the batch history"
 
 
-def test_bottomk_snapshot_survives_restart(spark, sf_dir, tmp_path):
-    """Two separate stream starts over one checkpoint: half the corpus
-    arrives, the stream drains and STOPS; the rest arrives and a fresh
-    start resumes from the checkpoint. The final snapshot must equal
-    the single-shot batch bottom-k over the whole corpus — the
-    snapshot chain, not the process, is the state."""
-    import os
+# ---------------------------------------------------------------------------
+# Snapshot folds. Every step runs through the one drain (`W.run_fold`);
+# each case below names the source frame, its id column, the state
+# schema, the step, a view of the final snapshot and the single-shot
+# batch frame that view must equal.
 
-    import pyspark.sql.functions as F
+@dataclass(frozen=True)
+class Fold:
+    src: Callable      # (spark, sf_dir) -> source frame
+    id_col: str
+    state: str
+    step: Callable     # source frame -> step
+    view: Callable     # final snapshot -> compared frame
+    want: Callable     # (spark, sf_dir, source frame) -> batch frame
 
-    from iq_to_hdl_migration_spark.sources.tables import load_table
 
-    k = 5
-    docs = load_table(spark, sf_dir, "documents").select(
+def _events(*cols):
+    return lambda spark, sf_dir: load_table(spark, sf_dir, "events").select(
+        "event_id", *cols)
+
+
+def _docs_hv(spark, sf_dir):
+    return load_table(spark, sf_dir, "documents").select(
         "lang", F.col("doc_id").cast("bigint").alias("doc_id"),
         F.expr("CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 15), "
                "16, 10) AS BIGINT)").alias("hv"))
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    docs.limit(0).write.parquet(os.path.join(snaps, "00000_init"))
 
-    cut = docs.agg(F.expr("CAST(max(doc_id) / 2 AS BIGINT)")).first()[0]
 
-    def arrive(df, name, mtime):
-        tmp = str(tmp_path / f"slice_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = os.path.join(arrivals, f"{name}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
+def _docs_text(spark, sf_dir):
+    return load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text")
 
-    arrive(docs.where(F.col("doc_id") <= cut), "arr_000", 1_000_000)
-    W.run_bottomk_fold(spark, arrivals, snaps, ckpt, k)
-    mid = sorted(os.listdir(snaps))[-1]
-    assert mid != "00000_init", "first drain must write a snapshot"
 
-    arrive(docs.where(F.col("doc_id") > cut), "arr_001", 1_000_001)
-    W.run_bottomk_fold(spark, arrivals, snaps, ckpt, k)  # resumes
+def _lineitem(spark, sf_dir):
+    return load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey")
 
-    final = spark.read.parquet(
-        os.path.join(snaps, sorted(os.listdir(snaps))[-1]))
-    from pyspark.sql import Window
+
+_BK = 5
+
+
+def _bottomk_batch(spark, sf_dir, docs):
     w = Window.partitionBy("lang").orderBy("hv", "doc_id")
-    expect = (docs.withColumn("_rn", F.row_number().over(w))
-              .where(F.col("_rn") <= k).drop("_rn"))
-    got = sorted(tuple(r) for r in final.collect())
-    want = sorted(tuple(r) for r in expect.collect())
-    assert got == want, "restarted fold must equal the batch sample"
+    return (docs.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") <= _BK).drop("_rn"))
 
 
-def test_basket_fold_survives_restart(spark, sf_dir, tmp_path):
-    """Additive-support restart contract: half the ORDERS arrive (whole
-    baskets — the atomicity the fold requires), the stream drains and
-    STOPS; the rest arrives and a fresh start resumes from the same
-    checkpoint. The folded supports must equal the single-shot batch
-    supports over all orders — sums across disjoint order sets, no
-    double counting at the seam."""
-    import os
-
-    import pyspark.sql.functions as F
-
+def _basket_batch(spark, sf_dir, li):
+    """Pair supports plus the one order-total row (both keys NULL)."""
     from iq_to_hdl_migration_spark.queries.cooccurrence_queries import (
         basket_pair_supports)
-    from iq_to_hdl_migration_spark.sources.tables import load_table
 
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey")
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    spark.createDataFrame(
-        [], "part_a bigint, part_b bigint, n bigint"
-    ).write.parquet(os.path.join(snaps, "00000_init"))
-
-    cut = li.agg(F.expr("CAST(max(l_orderkey) / 2 AS BIGINT)")).first()[0]
-
-    def arrive(df, name, mtime):
-        tmp = str(tmp_path / f"slice_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = os.path.join(arrivals, f"{name}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
-
-    arrive(li.where(F.col("l_orderkey") <= cut), "arr_000", 1_000_000)
-    W.run_basket_fold(spark, arrivals, snaps, ckpt)
-    assert sorted(os.listdir(snaps))[-1] != "00000_init"
-
-    arrive(li.where(F.col("l_orderkey") > cut), "arr_001", 1_000_001)
-    W.run_basket_fold(spark, arrivals, snaps, ckpt)  # resumes
-
-    snap = spark.read.parquet(
-        os.path.join(snaps, sorted(os.listdir(snaps))[-1]))
-    got_pairs = sorted(
-        tuple(r) for r in snap.where(F.col("part_b").isNotNull())
-        .select("part_a", "part_b", "n").collect())
     baskets = (li.groupBy("l_orderkey")
-               .agg(F.sort_array(F.collect_set("l_partkey"))
-                    .alias("parts")))
-    want_pairs = sorted(
-        tuple(r) for r in basket_pair_supports(baskets)
-        .select("part_a", "part_b", F.col("n_ab").alias("n")).collect())
-    assert got_pairs == want_pairs, (
-        "restarted fold's pair supports must equal the batch supports")
-    tot = snap.where(F.col("part_a").isNull()
-                     & F.col("part_b").isNull()).collect()
-    assert len(tot) == 1 and tot[0]["n"] == baskets.count(), (
-        "order total must fold additively across the restart seam")
+               .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts")))
+    tot = baskets.agg(F.count(F.lit(1)).alias("n")).select(
+        F.lit(None).cast("bigint").alias("part_a"),
+        F.lit(None).cast("bigint").alias("part_b"), "n")
+    return (basket_pair_supports(baskets)
+            .select("part_a", "part_b", F.col("n_ab").alias("n"))
+            .unionByName(tot))
 
 
-def test_ab_test_fold_survives_restart(spark, sf_dir, tmp_path):
-    """OR-monoid restart contract: the first half of EVENTS arrives
-    (users' purchases may sit in either half), the stream drains and
-    STOPS; the rest arrives and a fresh start resumes from the same
-    checkpoint. The folded per-user conversion state must equal the
-    single-shot batch per-user state — max(is_conv) across the seam,
-    no user lost or double-toggled."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from iq_to_hdl_migration_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type")
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    spark.createDataFrame(
-        [], "user_id bigint, is_conv int"
-    ).write.parquet(os.path.join(snaps, "00000_init"))
-
-    cut = ev.agg(F.expr("CAST(max(event_id) / 2 AS BIGINT)")).first()[0]
-
-    def arrive(df, name, mtime):
-        tmp = str(tmp_path / f"slice_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = os.path.join(arrivals, f"{name}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
-
-    arrive(ev.where(F.col("event_id") <= cut), "arr_000", 1_000_000)
-    W.run_ab_test_fold(spark, arrivals, snaps, ckpt)
-    assert sorted(os.listdir(snaps))[-1] != "00000_init"
-
-    arrive(ev.where(F.col("event_id") > cut), "arr_001", 1_000_001)
-    W.run_ab_test_fold(spark, arrivals, snaps, ckpt)  # resumes
-
-    snap = spark.read.parquet(
-        os.path.join(snaps, sorted(os.listdir(snaps))[-1]))
-    got = sorted(tuple(r) for r in snap.collect())
-    want = sorted(tuple(r) for r in
-                  ev.groupBy("user_id")
-                  .agg(F.max(F.when(F.col("event_type") == "purchase", 1)
-                             .otherwise(0)).cast("int").alias("is_conv"))
-                  .collect())
-    assert got == want, (
-        "restarted fold's per-user conversion state must equal batch")
-
-
-def test_boilerplate_gate_fold_survives_restart(spark, sf_dir, tmp_path):
-    """Additive kept-count restart contract for the boilerplate gate:
-    half the DOCUMENTS arrive (whole docs), the stream drains and
-    STOPS; the rest arrives and a fresh start resumes from the same
-    checkpoint. The folded per-source kept counts must equal the
-    single-shot batch gate over all documents."""
-    import os
-
-    import pyspark.sql.functions as F
-
+def _shingles(docs):
     from iq_to_hdl_migration_spark.queries.corpus_queries import (
-        _BP_MIN_DOCS, _BP_N, _TOKS_SPARK)
-    from iq_to_hdl_migration_spark.sources.tables import load_table
+        _BP_N, _TOKS_SPARK)
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "text")
     gs = (f"CASE WHEN size(t) >= {_BP_N} THEN "
           f"array_distinct(transform(sequence(1, size(t) - {_BP_N} + 1), "
           f"i -> concat_ws(' ', slice(t, i, {_BP_N})))) "
           f"ELSE array() END")
-    boiler = (docs.select("doc_id", F.expr(_TOKS_SPARK).alias("t"))
-              .withColumn("gs", F.expr(gs))
-              .select("doc_id", F.explode_outer("gs").alias("g"))
-              .where(F.col("g").isNotNull())
-              .groupBy("g").agg(F.countDistinct("doc_id").alias("c"))
-              .where(F.col("c") >= _BP_MIN_DOCS)
-              .select("g").localCheckpoint())
+    return (docs.withColumn("t", F.expr(_TOKS_SPARK))
+            .withColumn("nt", F.size("t").cast("bigint"))
+            .withColumn("gs", F.expr(gs)))
 
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    spark.createDataFrame(
-        [], "source string, n_docs_kept bigint, n_tokens_kept bigint"
-    ).write.parquet(os.path.join(snaps, "00000_init"))
 
-    cut = docs.agg(F.expr("CAST(max(doc_id) / 2 AS BIGINT)")).first()[0]
+def _boiler(docs):
+    from iq_to_hdl_migration_spark.queries.corpus_queries import _BP_MIN_DOCS
 
-    def arrive(df, name, mtime):
-        tmp = str(tmp_path / f"slice_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = os.path.join(arrivals, f"{name}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
+    return (_shingles(docs)
+            .select("doc_id", F.explode_outer("gs").alias("g"))
+            .where(F.col("g").isNotNull())
+            .groupBy("g").agg(F.countDistinct("doc_id").alias("c"))
+            .where(F.col("c") >= _BP_MIN_DOCS)
+            .select("g").localCheckpoint())
 
-    arrive(docs.where(F.col("doc_id") <= cut), "arr_000", 1_000_000)
-    W.run_boilerplate_gate_fold(spark, arrivals, snaps, ckpt,
-                                boiler, _BP_N, 50)
-    assert sorted(os.listdir(snaps))[-1] != "00000_init"
 
-    arrive(docs.where(F.col("doc_id") > cut), "arr_001", 1_000_001)
-    W.run_boilerplate_gate_fold(spark, arrivals, snaps, ckpt,
-                                boiler, _BP_N, 50)  # resumes
+def _bp_step(docs):
+    from iq_to_hdl_migration_spark.queries.corpus_queries import _BP_N
 
-    snap = spark.read.parquet(
-        os.path.join(snaps, sorted(os.listdir(snaps))[-1]))
-    got = sorted(tuple(r) for r in snap.collect())
+    return W.boilerplate_gate_step(_boiler(docs), _BP_N, 50)
 
-    # single-shot batch gate over the whole corpus
-    g = (docs.withColumn("t", F.expr(_TOKS_SPARK))
-         .withColumn("nt", F.size("t").cast("bigint"))
-         .withColumn("gs", F.expr(gs))
-         .select("doc_id", "source", "nt",
-                 F.size("gs").alias("n_sh"),
-                 F.explode_outer("gs").alias("g")))
-    hits = (g.join(boiler, "g").groupBy("doc_id")
+
+def _bp_batch(spark, sf_dir, docs):
+    g = _shingles(docs).select("doc_id", "source", "nt",
+                               F.size("gs").alias("n_sh"),
+                               F.explode_outer("gs").alias("g"))
+    hits = (g.join(_boiler(docs), "g").groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("nb")))
     per = (g.select("doc_id", "source", "nt", "n_sh").distinct()
            .join(hits, "doc_id", "left")
            .withColumn("nb", F.coalesce("nb", F.lit(0))))
-    want = sorted(tuple(r) for r in
-                  per.where(F.col("nb") * 100 <= F.col("n_sh") * 50)
-                  .groupBy("source")
-                  .agg(F.count(F.lit(1)).cast("bigint")
-                       .alias("n_docs_kept"),
-                       F.sum("nt").cast("bigint").alias("n_tokens_kept"))
-                  .collect())
-    assert got == want, "restarted gate fold must equal the batch gate"
+    return (per.where(F.col("nb") * 100 <= F.col("n_sh") * 50)
+            .groupBy("source")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs_kept"),
+                 F.sum("nt").cast("bigint").alias("n_tokens_kept")))
+
+
+def _gap_report(snap):
+    return (snap.where(F.col("gap_bucket").isNotNull())
+            .groupBy("event_type",
+                     F.col("gap_bucket").alias("gap_bucket_log2s"))
+            .agg(F.sum("n_gaps").cast("bigint").alias("n_gaps")))
+
+
+def _registered(name):
+    return lambda spark, sf_dir, src: REGISTRY[name].fn(spark, sf_dir)
+
+
+def _same(snap):
+    return snap
+
+
+FOLDS = {
+    "bottomk_snapshot": Fold(
+        _docs_hv, "doc_id", "lang string, doc_id bigint, hv bigint",
+        lambda src: W.bottomk_step(_BK),
+        _same, _bottomk_batch),
+    "basket_fold": Fold(
+        _lineitem, "l_orderkey", "part_a bigint, part_b bigint, n bigint",
+        lambda src: W.basket_step,
+        lambda snap: snap.where(F.col("part_b").isNotNull()
+                                | F.col("part_a").isNull()),
+        _basket_batch),
+    "ab_test_fold": Fold(
+        _events("user_id", "event_type"), "event_id",
+        "user_id bigint, is_conv int", lambda src: W.ab_test_step, _same,
+        lambda spark, sf_dir, ev: ev.groupBy("user_id").agg(
+            F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
+            .cast("int").alias("is_conv"))),
+    "boilerplate_gate_fold": Fold(
+        _docs_text, "doc_id",
+        "source string, n_docs_kept bigint, n_tokens_kept bigint",
+        _bp_step, _same, _bp_batch),
+    "user_count_fold": Fold(
+        _events("user_id"), "event_id", "user_id bigint, n_events bigint",
+        lambda src: W.keyed_count_step(["user_id"]), _same,
+        lambda spark, sf_dir, ev: ev.groupBy("user_id").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_events"))),
+    "retention_fold": Fold(
+        _events("user_id", "ts", "event_type"), "event_id",
+        W.RETENTION_STATE_SCHEMA, lambda src: W.retention_step,
+        W.retention_from_state, _registered("events_retention_cohorts")),
+    "bot_fold": Fold(
+        _events("user_id", "ts"), "event_id", W.BOT_STATE_SCHEMA,
+        lambda src: W.bot_step,
+        lambda snap: bot_report_from_counts(snap.drop("last_us")),
+        _registered("events_bot_score_report")),
+    "gap_hist_fold": Fold(
+        _events("user_id", "event_type", "ts"), "event_id",
+        W.GAP_HIST_STATE_SCHEMA, lambda src: W.gap_hist_step, _gap_report,
+        _registered("events_gap_powerlaw_histogram")),
+    "funnel_fold": Fold(
+        _events("user_id", "event_type", "ts"), "event_id",
+        W.FUNNEL_STATE_SCHEMA, lambda src: W.funnel_step,
+        W.funnel_counts_from_state, _registered("events_funnel_counts")),
+}
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _batches_read(q):
+    """(batch id, first, last file-log offset) of each batch the drain
+    ran: with one file per trigger, offset i is arrival file i."""
+    def log_offset(o):   # PySpark renders the offset JSON as a dict repr
+        return (ast.literal_eval(o) or {}).get("logOffset")
+    return [(p.batchId, log_offset(p.sources[0].startOffset),
+             log_offset(p.sources[0].endOffset))
+            for p in q.recentProgress if p.numInputRows]
+
+
+class _Chain:
+    """Arrivals, snapshot and checkpoint dirs of one fold, seeded with
+    the `00000_init` state."""
+    def __init__(self, spark, tmp_path, state, init_rows=()):
+        self.spark, self.tmp = spark, tmp_path
+        self.arrivals, self.snaps, self.ckpt = (
+            str(tmp_path / d) for d in ("arrivals", "snaps", "ckpt"))
+        os.makedirs(self.arrivals)
+        os.makedirs(self.snaps)
+        local_frame(spark, init_rows, state).write.parquet(
+            os.path.join(self.snaps, "00000_init"))
+
+    def arrive(self, df, i):
+        """Land `df` as arrival file i (mtime order = arrival order)."""
+        tmp = str(self.tmp / f"slice_{i}")
+        df.coalesce(1).write.parquet(tmp)
+        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
+        dst = os.path.join(self.arrivals, f"arr_{i:03d}.parquet")
+        os.rename(os.path.join(tmp, part), dst)
+        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+
+    def fold(self, step, name):
+        return W.run_fold(self.spark, self.arrivals, self.snaps, self.ckpt,
+                          step, name)
+
+    def latest(self):
+        return sorted(os.listdir(self.snaps))[-1]
+
+    def read(self, snap):
+        return self.spark.read.parquet(os.path.join(self.snaps, snap))
+
+
+def _halves(spark, sf_dir, tmp_path, key):
+    case = FOLDS[key]
+    src = case.src(spark, sf_dir)
+    chain = _Chain(spark, tmp_path, case.state)
+    cut = src.agg(F.expr(f"CAST(max({case.id_col}) / 2 AS BIGINT)")).first()[0]
+    first = src.where(F.col(case.id_col) <= cut)
+    second = src.where(F.col(case.id_col) > cut)
+    return case, src, chain, first, second
+
+
+def _restart(spark, sf_dir, tmp_path, key):
+    """Two stream starts over one checkpoint: the first half of the
+    source arrives, the fold drains and STOPS; the rest arrives and a
+    fresh start resumes from the checkpoint. The second drain must read
+    only the second arrival, and the final snapshot must equal the
+    single-shot batch result — the snapshot chain, not the process, is
+    the state (seam gaps and stage chains closed exactly once)."""
+    case, src, chain, first, second = _halves(spark, sf_dir, tmp_path, key)
+    step = case.step(src)
+    chain.arrive(first, 0)
+    chain.fold(step, f"t_{key}")
+    assert chain.latest() != "00000_init", "first drain must write a snapshot"
+
+    chain.arrive(second, 1)
+    q = chain.fold(step, f"t_{key}")  # resumes
+    assert _batches_read(q) == [(1, 0, 1)], "resume must not recompute"
+    assert {p.name for p in q.recentProgress} == {f"t_{key}"}
+    assert (_rows(case.view(chain.read(chain.latest())))
+            == _rows(case.want(spark, sf_dir, src)))
+
+
+def test_bottomk_snapshot_survives_restart(spark, sf_dir, tmp_path):
+    _restart(spark, sf_dir, tmp_path, "bottomk_snapshot")
+
+
+def test_basket_fold_survives_restart(spark, sf_dir, tmp_path):
+    _restart(spark, sf_dir, tmp_path, "basket_fold")
+
+
+def test_ab_test_fold_survives_restart(spark, sf_dir, tmp_path):
+    _restart(spark, sf_dir, tmp_path, "ab_test_fold")
+
+
+def test_boilerplate_gate_fold_survives_restart(spark, sf_dir, tmp_path):
+    _restart(spark, sf_dir, tmp_path, "boilerplate_gate_fold")
 
 
 def test_user_count_fold_survives_restart(spark, sf_dir, tmp_path):
-    """Additive count-monoid restart contract for the Gini twin: the
-    first half of EVENTS arrives (a user's events span the halves),
-    the stream drains and STOPS; the rest arrives and a fresh start
-    resumes from the same checkpoint. The folded per-user counts must
-    equal the single-shot batch counts — summed across the seam, no
-    user lost or double-counted."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from iq_to_hdl_migration_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    spark.createDataFrame(
-        [], "user_id bigint, n_events bigint"
-    ).write.parquet(os.path.join(snaps, "00000_init"))
-
-    cut = ev.agg(F.expr("CAST(max(event_id) / 2 AS BIGINT)")).first()[0]
-
-    def arrive(df, name, mtime):
-        tmp = str(tmp_path / f"slice_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = os.path.join(arrivals, f"{name}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
-
-    arrive(ev.where(F.col("event_id") <= cut), "arr_000", 1_000_000)
-    W.run_user_count_fold(spark, arrivals, snaps, ckpt)
-    assert sorted(os.listdir(snaps))[-1] != "00000_init"
-
-    arrive(ev.where(F.col("event_id") > cut), "arr_001", 1_000_001)
-    W.run_user_count_fold(spark, arrivals, snaps, ckpt)  # resumes
-
-    snap = spark.read.parquet(
-        os.path.join(snaps, sorted(os.listdir(snaps))[-1]))
-    got = sorted(tuple(r) for r in snap.collect())
-    want = sorted(tuple(r) for r in
-                  ev.groupBy("user_id")
-                  .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
-                  .collect())
-    assert got == want, (
-        "restarted fold's per-user counts must equal the batch counts")
+    _restart(spark, sf_dir, tmp_path, "user_count_fold")
 
 
 def test_retention_fold_survives_restart(spark, sf_dir, tmp_path):
-    """MIN/OR monoid restart contract for the retention twin: half the
-    events arrive (signups and activity span the seam), the stream
-    drains and STOPS; the rest arrives and a fresh start resumes from
-    the same checkpoint. The folded state's cohort matrix must equal
-    the single-shot batch computation — no user's cohort lost, no
-    active week dropped or double-ORed."""
-    import os
+    _restart(spark, sf_dir, tmp_path, "retention_fold")
 
-    import pyspark.sql.functions as F
 
-    from iq_to_hdl_migration_spark.queries.events_queries import (
-        events_retention_cohorts)
-    from iq_to_hdl_migration_spark.sources.tables import load_table
+def test_bot_fold_survives_restart(spark, sf_dir, tmp_path):
+    _restart(spark, sf_dir, tmp_path, "bot_fold")
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts", "event_type")
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    spark.createDataFrame(
-        [], W.RETENTION_STATE_SCHEMA
-    ).write.parquet(os.path.join(snaps, "00000_init"))
 
-    cut = ev.agg(F.expr("CAST(max(event_id) / 2 AS BIGINT)")).first()[0]
+def test_gap_hist_fold_survives_restart(spark, sf_dir, tmp_path):
+    _restart(spark, sf_dir, tmp_path, "gap_hist_fold")
 
-    def arrive(df, name, mtime):
-        tmp = str(tmp_path / f"slice_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = os.path.join(arrivals, f"{name}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
 
-    arrive(ev.where(F.col("event_id") <= cut), "arr_000", 1_000_000)
-    W.run_retention_fold(spark, arrivals, snaps, ckpt)
-    assert sorted(os.listdir(snaps))[-1] != "00000_init"
+def test_funnel_fold_survives_restart(spark, sf_dir, tmp_path):
+    _restart(spark, sf_dir, tmp_path, "funnel_fold")
 
-    arrive(ev.where(F.col("event_id") > cut), "arr_001", 1_000_001)
-    W.run_retention_fold(spark, arrivals, snaps, ckpt)  # resumes
 
-    snap = spark.read.parquet(
-        os.path.join(snaps, sorted(os.listdir(snaps))[-1]))
-    got = sorted(tuple(r) for r in
-                 W.retention_from_state(snap).collect())
-    want = sorted(tuple(r) for r in
-                  events_retention_cohorts(spark, sf_dir).collect())
-    assert got == want, (
-        "restarted retention fold must equal the batch cohort matrix")
+@pytest.mark.parametrize("key", list(FOLDS))
+def test_fold_replays_same_rows(spark, sf_dir, tmp_path, key):
+    """Lose the last batch's checkpoint commit: Spark re-executes that
+    batch, which folds from the PRIOR snapshot (never its own output),
+    so it rewrites its snapshot with exactly the same rows."""
+    case, src, chain, first, second = _halves(spark, sf_dir, tmp_path, key)
+    step = case.step(src)
+    chain.arrive(first, 0)
+    chain.arrive(second, 1)
+    chain.fold(step, f"t_{key}")
+    last = chain.latest()
+    before = _rows(chain.read(last))
+
+    for f in ("1", ".1.crc"):
+        path = os.path.join(chain.ckpt, "commits", f)
+        if os.path.exists(path):
+            os.remove(path)
+    q = chain.fold(step, f"t_{key}")
+    assert _batches_read(q) == [(1, 0, 1)], "batch 1 must re-execute"
+    assert chain.latest() == last and _rows(chain.read(last)) == before
+    assert (_rows(case.view(chain.read(last)))
+            == _rows(case.want(spark, sf_dir, src)))
+
+
+_LATE_US = 1_800_000_000_000_000   # ~2027 in micros
+# carried state row of user 7, event type of its late event (None: the
+# fold's source has no event_type column)
+_CARRIED = {"bot_fold": ((7, 3, 2, 0, 0, _LATE_US), None),
+            "gap_hist_fold": ((7, "click", None, None, _LATE_US), "click"),
+            "funnel_fold": ((7, _LATE_US, None, None, _LATE_US), "view")}
+
+
+def _refuses_out_of_order(spark, tmp_path, key):
+    """The ordered-fold contract is enforced in-plan BY THE REAL STEP
+    (driving run_fold proves the guard survives column pruning): a
+    batch whose 2024 event predates user 7's carried ~2027 last_us
+    must raise."""
+    case = FOLDS[key]
+    carried, event_type = _CARRIED[key]
+    chain = _Chain(spark, tmp_path, case.state, [carried])
+    late = local_frame(
+        spark, [(99, 7, event_type, "2024-01-01 00:00:01")],
+        "event_id bigint, user_id bigint, event_type string, ts string"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    if event_type is None:
+        late = late.drop("event_type")
+    chain.arrive(late, 0)
+    with pytest.raises(Exception, match="not time-contiguous"):
+        chain.fold(case.step(late), f"t_{key}")
+
+
+def test_bot_fold_refuses_out_of_order_batch(spark, tmp_path):
+    _refuses_out_of_order(spark, tmp_path, "bot_fold")
+
+
+def test_gap_hist_fold_refuses_out_of_order_batch(spark, tmp_path):
+    _refuses_out_of_order(spark, tmp_path, "gap_hist_fold")
+
+
+def test_funnel_fold_refuses_out_of_order_batch(spark, tmp_path):
+    _refuses_out_of_order(spark, tmp_path, "funnel_fold")
+
+
+def test_fold_twin_on_empty_source_starts_no_stream(spark, tmp_path):
+    """An empty source yields the empty init snapshot, with exactly the
+    declared state schema, and no stream is started."""
+    def step(prev, batch_df):
+        raise AssertionError("no batch may run on an empty source")
+
+    state = "k bigint, n_events bigint"
+    out = W.fold_twin(spark, str(tmp_path), "empty",
+                      local_frame(spark, [], "id bigint, k bigint"), "id",
+                      state, step, "t_empty")
+    assert out.count() == 0 and out.schema == StructType.fromDDL(state)
+    work = W._STREAM_WORK_DIRS[(spark.sparkContext.applicationId,
+                                str(tmp_path), "empty")]
+    assert os.listdir(os.path.join(work, "arrivals")) == []
+    assert not os.path.exists(os.path.join(work, "ckpt"))
+
+
+def test_fold_twin_supersedes_its_own_tag_only(spark, tmp_path):
+    """A second call for the same (sf_dir, tag) deletes the first
+    call's work dir; other tags' dirs are left alone."""
+    src = local_frame(spark, [], "id bigint")
+
+    def work_dir(tag):
+        W.fold_twin(spark, str(tmp_path), tag, src, "id", "n bigint",
+                    None, f"t_{tag}")
+        return W._STREAM_WORK_DIRS[(spark.sparkContext.applicationId,
+                                    str(tmp_path), tag)]
+
+    a1, b = work_dir("a"), work_dir("b")
+    a2 = work_dir("a")
+    assert not os.path.exists(a1)
+    assert a2 != a1 and os.path.isdir(a2) and os.path.isdir(b)
+
+
+def test_one_foreach_batch_drain():
+    """One drain in the package: `foreachBatch` is called only inside
+    `streaming.windows._drain`."""
+    pkg = pathlib.Path(W.__file__).resolve().parents[1]
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        owner = {id(n): fn.name for fn in tree.body
+                 if isinstance(fn, ast.FunctionDef) for n in ast.walk(fn)}
+        hits += [(path.relative_to(pkg).as_posix(), owner.get(id(node)))
+                 for node in ast.walk(tree)
+                 if isinstance(node, ast.Call)
+                 and isinstance(node.func, ast.Attribute)
+                 and node.func.attr == "foreachBatch"]
+    assert hits == [("streaming/windows.py", "_drain")]
 
 
 def test_retention_fold_rejects_out_of_range_weeks(spark):
@@ -557,8 +592,6 @@ def test_retention_fold_rejects_out_of_range_weeks(spark):
     range whose week truncates to 0 (the r11 review hole) — must
     raise in the delta computation instead of silently entering the
     mask."""
-    import pytest
-
     for ts in ("2026-01-01 00:00:00",   # week > 62
                "2023-12-31 23:00:00"):  # datediff -1: truncates to 0
         bad = spark.createDataFrame(
@@ -568,240 +601,3 @@ def test_retention_fold_rejects_out_of_range_weeks(spark):
         ).withColumn("ts", F.col("ts").cast("timestamp"))
         with pytest.raises(Exception, match="retention fold supports"):
             W._retention_delta(bad).collect()
-
-
-def test_bot_fold_survives_restart(spark, sf_dir, tmp_path):
-    """Seam-carrying fold restart contract: the boundary gap between
-    the two halves must be closed exactly once — the restarted fold's
-    per-user state must reproduce the single-shot batch report,
-    including gaps that span the arrival seam AND the restart."""
-    import os
-
-    import pyspark.sql.functions as FF
-
-    from iq_to_hdl_migration_spark.queries.events_queries import (
-        bot_report_from_counts, events_bot_score_report)
-    from iq_to_hdl_migration_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts")
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    spark.createDataFrame(
-        [], W.BOT_STATE_SCHEMA).write.parquet(
-        os.path.join(snaps, "00000_init"))
-
-    cut = ev.agg(FF.expr("CAST(max(event_id) / 2 AS BIGINT)")).first()[0]
-
-    def arrive(df, name, mtime):
-        tmp = str(tmp_path / f"slice_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = os.path.join(arrivals, f"{name}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
-
-    arrive(ev.where(FF.col("event_id") <= cut), "arr_000", 1_000_000)
-    W.run_bot_count_fold(spark, arrivals, snaps, ckpt)
-    arrive(ev.where(FF.col("event_id") > cut), "arr_001", 1_000_001)
-    W.run_bot_count_fold(spark, arrivals, snaps, ckpt)  # resumes
-
-    snap = spark.read.parquet(
-        os.path.join(snaps, sorted(os.listdir(snaps))[-1]))
-    got = sorted(tuple(r) for r in
-                 bot_report_from_counts(snap.drop("last_us")).collect())
-    want = sorted(tuple(r) for r in
-                  events_bot_score_report(spark, sf_dir).collect())
-    assert got == want
-
-
-def test_bot_fold_refuses_out_of_order_batch(spark, tmp_path):
-    """The ordered-fold contract is enforced in-plan BY THE REAL FOLD:
-    a batch whose events predate a user's carried last_us must raise
-    (driving run_bot_count_fold itself proves the guard survives
-    column pruning)."""
-    import os
-
-    import pytest
-
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    state = spark.createDataFrame(
-        [(7, 3, 2, 0, 0, 1_800_000_000_000_000)],  # ~2027 in micros
-        W.BOT_STATE_SCHEMA)
-    state.write.parquet(os.path.join(snaps, "00000_init"))
-    late = spark.createDataFrame(
-        [(99, 7, "2024-01-01 00:00:01", )],
-        "event_id bigint, user_id bigint, ts string"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    tmp = str(tmp_path / "slice")
-    late.coalesce(1).write.parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-    os.rename(os.path.join(tmp, part),
-              os.path.join(arrivals, "arr_000.parquet"))
-    # the 2024 event predates the carried ~2027 last_us -> must raise
-    with pytest.raises(Exception, match="not time-contiguous"):
-        W.run_bot_count_fold(spark, arrivals, snaps, ckpt)
-
-
-def test_gap_hist_fold_survives_restart(spark, sf_dir, tmp_path):
-    """Second seam-carrying fold's restart contract: gaps that span
-    the arrival seam AND the restart are closed exactly once — the
-    resumed fold's histogram must reproduce the single-shot batch
-    histogram bit-for-bit."""
-    import os
-
-    import pyspark.sql.functions as FF
-
-    from iq_to_hdl_migration_spark.queries.events_queries import (
-        events_gap_powerlaw_histogram)
-    from iq_to_hdl_migration_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "ts")
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    spark.createDataFrame(
-        [], W.GAP_HIST_STATE_SCHEMA).write.parquet(
-        os.path.join(snaps, "00000_init"))
-
-    cut = ev.agg(FF.expr("CAST(max(event_id) / 2 AS BIGINT)")).first()[0]
-
-    def arrive(df, name, mtime):
-        tmp = str(tmp_path / f"slice_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = os.path.join(arrivals, f"{name}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
-
-    arrive(ev.where(FF.col("event_id") <= cut), "arr_000", 1_000_000)
-    W.run_gap_hist_fold(spark, arrivals, snaps, ckpt)
-    arrive(ev.where(FF.col("event_id") > cut), "arr_001", 1_000_001)
-    W.run_gap_hist_fold(spark, arrivals, snaps, ckpt)  # resumes
-
-    snap = spark.read.parquet(
-        os.path.join(snaps, sorted(os.listdir(snaps))[-1]))
-    got = sorted(tuple(r) for r in
-                 (snap.where(FF.col("gap_bucket").isNotNull())
-                  .groupBy("event_type",
-                           FF.col("gap_bucket").alias("gap_bucket_log2s"))
-                  .agg(FF.sum("n_gaps").cast("bigint").alias("n_gaps"))
-                  ).collect())
-    want = sorted(tuple(r) for r in
-                  events_gap_powerlaw_histogram(spark, sf_dir).collect())
-    assert got == want
-
-
-def test_gap_hist_fold_refuses_out_of_order_batch(spark, tmp_path):
-    """The seam guard must fire in the REAL fold (not a re-built
-    expression) — proving it survives column pruning."""
-    import os
-
-    import pytest
-
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    state = spark.createDataFrame(
-        [(7, "click", None, None, 1_800_000_000_000_000)],
-        W.GAP_HIST_STATE_SCHEMA)
-    state.write.parquet(os.path.join(snaps, "00000_init"))
-    late = spark.createDataFrame(
-        [(99, 7, "click", "2024-01-01 00:00:01")],
-        "event_id bigint, user_id bigint, event_type string, ts string"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    tmp = str(tmp_path / "slice")
-    late.coalesce(1).write.parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-    os.rename(os.path.join(tmp, part),
-              os.path.join(arrivals, "arr_000.parquet"))
-    with pytest.raises(Exception, match="not time-contiguous"):
-        W.run_gap_hist_fold(spark, arrivals, snaps, ckpt)
-
-
-def test_funnel_fold_survives_restart(spark, sf_dir, tmp_path):
-    """Ordered-funnel fold restart contract: stage chains that span
-    the arrival seam AND the restart must resolve exactly once — the
-    resumed fold reproduces the single-shot batch funnel."""
-    import os
-
-    import pyspark.sql.functions as FF
-
-    from iq_to_hdl_migration_spark.queries.events_queries import (
-        events_funnel_counts)
-    from iq_to_hdl_migration_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "ts")
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    spark.createDataFrame(
-        [], W.FUNNEL_STATE_SCHEMA).write.parquet(
-        os.path.join(snaps, "00000_init"))
-
-    cut = ev.agg(FF.expr("CAST(max(event_id) / 2 AS BIGINT)")).first()[0]
-
-    def arrive(df, name, mtime):
-        tmp = str(tmp_path / f"slice_{name}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-        dst = os.path.join(arrivals, f"{name}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (mtime, mtime))
-
-    arrive(ev.where(FF.col("event_id") <= cut), "arr_000", 1_000_000)
-    W.run_funnel_fold(spark, arrivals, snaps, ckpt)
-    arrive(ev.where(FF.col("event_id") > cut), "arr_001", 1_000_001)
-    W.run_funnel_fold(spark, arrivals, snaps, ckpt)  # resumes
-
-    snap = spark.read.parquet(
-        os.path.join(snaps, sorted(os.listdir(snaps))[-1]))
-    got = sorted(tuple(r) for r in
-                 W.funnel_counts_from_state(snap).collect())
-    want = sorted(tuple(r) for r in
-                  events_funnel_counts(spark, sf_dir).collect())
-    assert got == want
-
-
-def test_funnel_fold_refuses_out_of_order_batch(spark, tmp_path):
-    """The guard must survive column pruning: a batch predating a
-    user's carried last_us raises through the consumed d_last_us."""
-    import os
-
-    import pytest
-
-    arrivals = str(tmp_path / "arrivals")
-    snaps = str(tmp_path / "snaps")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(arrivals)
-    os.makedirs(snaps)
-    state = spark.createDataFrame(
-        [(7, 1_800_000_000_000_000, None, None, 1_800_000_000_000_000)],
-        W.FUNNEL_STATE_SCHEMA)
-    state.write.parquet(os.path.join(snaps, "00000_init"))
-    late = spark.createDataFrame(
-        [(99, 7, "view", "2024-01-01 00:00:01")],
-        "event_id bigint, user_id bigint, event_type string, ts string"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    tmp = str(tmp_path / "slice")
-    late.coalesce(1).write.parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
-    os.rename(os.path.join(tmp, part),
-              os.path.join(arrivals, "arr_000.parquet"))
-    with pytest.raises(Exception, match="not time-contiguous"):
-        W.run_funnel_fold(spark, arrivals, snaps, ckpt)
