@@ -561,9 +561,11 @@ def build_lsh_index(df: DataFrame, id_col: str = "doc_id",
     """Build the persistent near-dup index for a corpus snapshot:
     (bands, digests) where `bands` holds one (band, band_sig, id,
     minhash) posting per representative per band and `digests` maps
-    content digest -> keeper id. Both are plain DataFrames the caller
-    persists (parquet partitioned by band, or a bucketed table on
-    band_sig).
+    content digest -> keeper id. Both are plain DataFrames; the one
+    package caller, `dedup_queries._incremental_lsh_index`, stores them
+    as `durable_memo` parts (versioned snapshot tables under
+    $SPARK_GRAFT_MEMO_DIR when set). Not partitioned by band: every
+    batch probes all BANDS bands, so band partitions prune nothing.
 
     Postings are capped at `bucket_cap` per (band, band_sig) — the
     same flood-safety bound as the batch path: a flood of distinct
@@ -722,80 +724,10 @@ def lsh_batch_deltas(new_df: DataFrame, index_bands: DataFrame,
     return pairs, new_capped, digests_delta
 
 
-# bumped whenever the persisted-index layout or any constant baked into
+# bumped whenever the stored index's layout or any constant baked into
 # its contents changes (banding geometry, signature scheme, bucket cap,
-# on-disk layout) — load_lsh_index fails closed on mismatch
-_INDEX_PARAMS = ["v2", BANDS, ROWS_PER_BAND, BUCKET_CAP]
-
-
-def persist_lsh_index(bands: DataFrame, digests: DataFrame,
-                      source_df: DataFrame, path: str) -> None:
-    """Write the (bands, digests) index with a source fingerprint so a
-    later load can detect staleness. Bands are partitioned by band —
-    at scale each batch's postings join prunes to colliding partitions;
-    the fingerprint is the same driver-side (path, size, mtime) digest
-    the bucketed staging uses (sources/bucketed.py), so a regenerated
-    corpus invalidates the index even at identical row counts."""
-    import json
-    import os
-
-    from iq_to_hdl_migration_spark.sources.bucketed import (
-        _source_fingerprint)
-
-    spark = bands.sparkSession
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(os.path.join(path, "_meta.json"))
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    # delete the meta FIRST: between here and the final meta write the
-    # index is (correctly) unreadable — a reader that raced a
-    # half-overwritten bands dir with the OLD meta still present would
-    # pass the fingerprint check and read a torn index
-    fs.delete(p, False)
-    bands.write.mode("overwrite").partitionBy("band") \
-        .parquet(os.path.join(path, "bands"))
-    digests.write.mode("overwrite").parquet(os.path.join(path, "digests"))
-    meta = {"src_fp": _source_fingerprint(source_df),
-            "params": _INDEX_PARAMS}
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(json.dumps(meta).encode("utf-8")))
-    finally:
-        out.close()
-
-
-def load_lsh_index(spark, source_df: DataFrame,
-                   path: str) -> tuple[DataFrame, DataFrame] | None:
-    """Load a persisted index IF its recorded source fingerprint still
-    matches `source_df`'s backing files; returns None (caller rebuilds)
-    on any mismatch or missing artifact — stale-index reuse is the
-    silent-wrong-answer failure mode, so the guard fails closed."""
-    import json
-    import os
-
-    from iq_to_hdl_migration_spark.sources.bucketed import (
-        _source_fingerprint)
-
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(os.path.join(path, "_meta.json"))
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    meta = json.loads(raw.decode("utf-8"))
-    if meta.get("src_fp") != _source_fingerprint(source_df):
-        return None
-    # format/parameter version: an index persisted by a build with
-    # different banding/cap/signature constants (or an older layout)
-    # passes the source check but holds incompatible state — e.g. the
-    # round-6 switch to build-time bucket capping. Fail closed.
-    if meta.get("params") != _INDEX_PARAMS:
-        return None
-    return (spark.read.parquet(os.path.join(path, "bands")),
-            spark.read.parquet(os.path.join(path, "digests")))
+# parts): it is part of the index's memo key, so a change rebuilds
+_INDEX_PARAMS = ["v3", BANDS, ROWS_PER_BAND, BUCKET_CAP]
 
 
 def containment_pairs_within_groups(df: DataFrame, group_cols: list[str],

@@ -355,74 +355,37 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_band.join(docs_per_band, "jac_band")
 
 
-# session-resident resolved LSH index relations (see
-# dedup_incremental_pairs): {(app_id, index_path): (bands, digests)}
-_INDEX_MEMO: dict = {}
-
-
 def _incremental_lsh_index(spark: SparkSession, sf_dir: str):
-    """Resolve (bands, digests, cut) for the persisted incremental
-    LSH index — building and persisting it if absent. Extracted from
-    dedup_incremental_pairs (round 15) so warm_dedup_memos can build
-    the store inside the STAMPED ingest phase: on a fresh host it
-    used to build silently inside the query's untimed warm-up, the
-    exact accounting gap r14 verdict #2 flagged for the other memos.
+    """Resolve (bands, digests, cut) of the incremental LSH index over
+    the documents at or below the 60%-of-max doc_id cut, building it
+    on first use. warm_dedup_memos calls it inside the stamped ingest,
+    and dedup_incremental_pairs and its streaming twin both read it.
 
-    Production shape end-to-end: the base index is PERSISTED and
-    reloaded through the fail-closed staleness guard (source
-    fingerprint mismatch -> rebuild), so repeated batches pay only
-    the incremental join — never a corpus re-signature. The resolved
-    index relations stay resident for the session (an index a batch
-    job holds open), re-guarded only when the session or source
-    changes."""
-    import hashlib
-    import os
-    import tempfile
-
+    A `durable_memo` structure (tag `lsh_incremental_index`): the
+    source fingerprint and `_INDEX_PARAMS` key it, so a regenerated
+    corpus or a changed banding geometry rebuilds instead of serving
+    stale postings; with $SPARK_GRAFT_MEMO_DIR set it persists as
+    versioned snapshots and a new session loads it. The cut is part of
+    the index's identity (the postings hold exactly ids <= cut), so it
+    is stored as a one-row part beside them and no call re-scans the
+    corpus for max(doc_id)."""
     from iq_to_hdl_migration_spark.operators.dedup import (
-        build_lsh_index, load_lsh_index, persist_lsh_index)
+        _INDEX_PARAMS, build_lsh_index)
+    from iq_to_hdl_migration_spark.sources.memo import durable_memo
 
     docs = load_table(spark, sf_dir, "documents")
-    # the path must be unique per FULL source dir, not its basename —
-    # two datasets both named sf0.01 must never share an index (and
-    # memo keyed on a colliding path would bypass the staleness guard)
-    sf_tag = hashlib.md5(
-        os.path.abspath(sf_dir.rstrip("/")).encode()).hexdigest()[:10]
-    idx_path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_lsh_index_{sf_tag}_"
-        f"{os.path.basename(sf_dir.rstrip('/'))}")
-    # the memo key carries the driver-side source fingerprint (cheap:
-    # path/size/mtime digest, no data read) — without it a first
-    # resolution would pin the index for the whole session and a
-    # mid-session rewrite of sf_dir would silently serve stale state;
-    # with it a changed source misses the memo and goes back through
-    # load_lsh_index's fail-closed staleness guard
-    from iq_to_hdl_migration_spark.sources.bucketed import (
-        _source_fingerprint)
-    memo_key = (spark.sparkContext.applicationId, idx_path,
-                _source_fingerprint(docs))
-    cached = _INDEX_MEMO.get(memo_key)
-    if cached is None:
-        # the 60%-of-max batch cut is part of the index's IDENTITY
-        # (the persisted store was built from exactly ids <= cut), so
-        # it resolves once with the index instead of re-scanning the
-        # corpus for max(doc_id) on every call (round 15, guide §5);
-        # the fingerprint in the memo key keeps it exactly as stale-
-        # safe as the index relations it travels with
-        cut = docs.agg(
-            F.floor(F.max("doc_id") * 0.6).cast("bigint")).first()[0]
-        loaded = load_lsh_index(spark, docs, idx_path)
-        if loaded is None:
-            batch1 = docs.where(F.col("doc_id") <= cut)
-            bands, digests = build_lsh_index(batch1)
-            persist_lsh_index(bands, digests, docs, idx_path)
-            loaded = load_lsh_index(spark, docs, idx_path)
-        # evict superseded entries for this path (stale fingerprints)
-        for k in [k for k in _INDEX_MEMO if k[:2] == memo_key[:2]]:
-            del _INDEX_MEMO[k]
-        cached = _INDEX_MEMO[memo_key] = (*loaded, cut)
-    return cached
+
+    def build() -> dict:
+        cut = docs.agg(F.floor(F.max("doc_id") * 0.6).cast("bigint")
+                       .alias("cut")).localCheckpoint()
+        bands, digests = build_lsh_index(
+            docs.where(F.col("doc_id") <= cut.first()[0]))
+        return {"bands": bands.localCheckpoint(),
+                "digests": digests.localCheckpoint(), "cut": cut}
+
+    parts = durable_memo("lsh_incremental_index", spark, sf_dir, docs,
+                         build, extra=tuple(_INDEX_PARAMS))
+    return parts["bands"], parts["digests"], parts["cut"].first()[0]
 
 
 @register(

@@ -32,47 +32,45 @@ from pyspark.sql import DataFrame, SparkSession
 from iq_to_hdl_migration_spark.queries import register
 from iq_to_hdl_migration_spark.sources import snapshots as snap
 from iq_to_hdl_migration_spark.sources.bucketed import _source_fingerprint
+from iq_to_hdl_migration_spark.sources.memo import session_memo
 from iq_to_hdl_migration_spark.sources.tables import load_table
 
 _CUT = "1997-01-01"
 _TP = "CAST(o_totalprice AS DECIMAL(14,2))"
 
-# staged-history memo: (applicationId, table_dir, source fingerprint)
-# -> table_dir.  Keyed on the fingerprint so a mid-session rewrite of
-# sf_dir restages instead of serving stale versions (same policy as
-# dedup_queries._INDEX_MEMO after the round-6 staleness fix).
-_STAGE_MEMO: dict[tuple, str] = {}
-
 
 def _staged_history(spark: SparkSession, sf_dir: str) -> str:
+    """Directory of the committed v1..v3 history of `orders`, staged
+    once per corpus through the session memo: its source fingerprint
+    key makes a mid-session rewrite of sf_dir restage instead of
+    serving stale versions."""
     orders = load_table(spark, sf_dir, "orders")
-    fp = _source_fingerprint(orders)
-    sf_tag = hashlib.md5(
-        os.path.abspath(sf_dir.rstrip("/")).encode()).hexdigest()[:10]
-    table_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_snap_orders_{sf_tag}_{fp[:10]}")
-    key = (spark.sparkContext.applicationId, table_dir, fp)
-    if key in _STAGE_MEMO:
+
+    def stage() -> str:
+        sf_tag = hashlib.md5(
+            os.path.abspath(sf_dir.rstrip("/")).encode()).hexdigest()[:10]
+        table_dir = os.path.join(
+            tempfile.gettempdir(),
+            f"spark_graft_snap_orders_{sf_tag}_"
+            f"{_source_fingerprint(orders)[:10]}")
+        if snap.current_version(table_dir) != 3:
+            # absent, torn, or left over with a different shape:
+            # restage. The fingerprint in the dir name makes a
+            # stale-source dir unreachable; same-source dirs from a
+            # previous process are reusable as-is (the history is a
+            # pure function of the source).
+            shutil.rmtree(table_dir, ignore_errors=True)
+            cut = F.lit(_CUT).cast("timestamp")
+            snap.write_snapshot(orders.where(F.col("o_orderdate") < cut),
+                                table_dir, mode="overwrite")
+            snap.write_snapshot(orders.where(F.col("o_orderdate") >= cut),
+                                table_dir, mode="append")
+            snap.write_snapshot(
+                orders.where(F.col("o_orderpriority") != "1-URGENT"),
+                table_dir, mode="overwrite")
         return table_dir
-    if snap.current_version(table_dir) != 3:
-        # absent, torn, or left over with a different shape: restage.
-        # The fingerprint in the dir name makes a stale-source dir
-        # unreachable; same-source dirs from a previous process are
-        # reusable as-is (the history is a pure function of the source).
-        shutil.rmtree(table_dir, ignore_errors=True)
-        cut = F.lit(_CUT).cast("timestamp")
-        snap.write_snapshot(orders.where(F.col("o_orderdate") < cut),
-                            table_dir, mode="overwrite")
-        snap.write_snapshot(orders.where(F.col("o_orderdate") >= cut),
-                            table_dir, mode="append")
-        snap.write_snapshot(
-            orders.where(F.col("o_orderpriority") != "1-URGENT"),
-            table_dir, mode="overwrite")
-    for k in [k for k in _STAGE_MEMO if k[:2] == key[:2]]:
-        del _STAGE_MEMO[k]
-    _STAGE_MEMO[key] = table_dir
-    return table_dir
+
+    return session_memo("snapshot_stage", spark, sf_dir, orders, stage)
 
 
 def _month(col: str):

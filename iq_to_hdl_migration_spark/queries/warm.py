@@ -17,7 +17,6 @@ module is just the roll-up bench.py calls.
 
 from __future__ import annotations
 
-import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 
@@ -36,8 +35,7 @@ def warm_all_memos(spark: SparkSession, sf_dir: str) -> float:
     wall drops from the sum of the families to roughly the slowest one
     (measured 45 -> 17 s at sf0.1 on an idle host). Memo identity is
     thread-safe via per-tag build locks in sources.memo, so a tag
-    shared across families still builds exactly once.
-    SPARK_GRAFT_WARM_SERIAL=1 restores the sequential build (debug)."""
+    shared across families still builds exactly once."""
     from iq_to_hdl_migration_spark.queries.dedup_queries import (
         warm_dedup_memos)
     from iq_to_hdl_migration_spark.queries.events_queries import (
@@ -53,13 +51,8 @@ def warm_all_memos(spark: SparkSession, sf_dir: str) -> float:
                 warm_similarity_memos, warm_graph_memos,
                 warm_text_memos)
     t0 = time.perf_counter()
-    if os.environ.get("SPARK_GRAFT_WARM_SERIAL") == "1":
-        for fn in families:
-            fn(spark, sf_dir)
-    else:
-        with ThreadPoolExecutor(max_workers=len(families)) as pool:
-            futures = [pool.submit(fn, spark, sf_dir)
-                       for fn in families]
-            for f in futures:
-                f.result()  # surface the first builder error, if any
+    with ThreadPoolExecutor(max_workers=len(families)) as pool:
+        futures = [pool.submit(fn, spark, sf_dir) for fn in families]
+        for f in futures:
+            f.result()  # surface the first builder error, if any
     return round(time.perf_counter() - t0, 3)

@@ -5,10 +5,10 @@ rebuilding per report.
 Every memo is keyed on (tag, applicationId, sf_dir, staged-warehouse
 env, driver-side source fingerprint [+ extras]): a re-stage, corpus
 switch, or in-place rewrite of the source files misses the memo and
-rebuilds — the staleness discipline established by the LSH index's
-fail-closed guard. Values are whatever the builder returns (usually a
-localCheckpointed DataFrame or a tuple of them); the builder is
-responsible for materializing.
+rebuilds, fail-closed. Values are whatever the builder returns
+(usually a localCheckpointed DataFrame or a tuple of them); the
+builder is responsible for materializing. Both memo kinds share one
+lookup path (`_memo`): one key construction, one per-tag lock.
 
 At 100 TB each memoized structure becomes a persisted table (see
 docs/DEPLOY_100TB.md, "Materialized shared structures") — this module
@@ -48,6 +48,33 @@ def _tag_lock(tag: str) -> threading.Lock:
         return _TAG_LOCKS.setdefault(tag, threading.Lock())
 
 
+def _memo(tag: str, spark: SparkSession, sf_dir: str, src: DataFrame,
+          extra: tuple, single_live: bool,
+          make: Callable[[str], object]):
+    """The one lookup path under both memo kinds. The key is
+    (applicationId, sf_dir, staged-warehouse env, source fingerprint,
+    *extra); a miss runs `make(fingerprint)` under the tag's build
+    lock, re-checking the store first (double-checked: a racer may
+    have built it while this thread waited)."""
+    from iq_to_hdl_migration_spark.sources.bucketed import (
+        _source_fingerprint)
+
+    store = _MEMOS.setdefault(tag, {})
+    fp = _source_fingerprint(src)
+    key = (spark.sparkContext.applicationId, sf_dir,
+           os.environ.get("SPARK_GRAFT_WAREHOUSE", ""), fp) + tuple(extra)
+    hit = store.get(key)
+    if hit is None:
+        with _tag_lock(tag):
+            hit = store.get(key)
+            if hit is None:
+                hit = make(fp)
+                if single_live:
+                    store.clear()
+                store[key] = hit
+    return hit
+
+
 def session_memo(tag: str, spark: SparkSession, sf_dir: str,
                  src: DataFrame, build: Callable[[], object],
                  extra: tuple = (), single_live: bool = True):
@@ -56,23 +83,8 @@ def session_memo(tag: str, spark: SparkSession, sf_dir: str,
     corpus; `extra` extends the key (e.g. hyperparameters);
     `single_live=True` keeps one live entry per tag (the common case —
     one corpus per session), False lets configs coexist."""
-    from iq_to_hdl_migration_spark.sources.bucketed import (
-        _source_fingerprint)
-
-    store = _MEMOS.setdefault(tag, {})
-    key = (spark.sparkContext.applicationId, sf_dir,
-           os.environ.get("SPARK_GRAFT_WAREHOUSE", ""),
-           _source_fingerprint(src)) + tuple(extra)
-    hit = store.get(key)
-    if hit is None:
-        with _tag_lock(tag):
-            hit = store.get(key)  # double-checked: racer built it
-            if hit is None:
-                hit = build()
-                if single_live:
-                    store.clear()
-                store[key] = hit
-    return hit
+    return _memo(tag, spark, sf_dir, src, extra, single_live,
+                 lambda _fp: build())
 
 
 # A rebuild retains this many snapshot versions per part after vacuum:
@@ -240,33 +252,19 @@ def durable_memo(tag: str, spark: SparkSession, sf_dir: str,
     driver-side source fingerprint, so a regenerated corpus (same
     paths, new mtimes) misses and rebuilds rather than serving a stale
     index."""
-    from iq_to_hdl_migration_spark.sources.bucketed import (
-        _source_fingerprint)
 
-    store = _MEMOS.setdefault(tag, {})
-    fp = _source_fingerprint(src)
-    key = (spark.sparkContext.applicationId, sf_dir,
-           os.environ.get("SPARK_GRAFT_WAREHOUSE", ""), fp) + tuple(extra)
-    hit = store.get(key)
-    if hit is not None:
-        return hit
-    with _tag_lock(tag):
-        hit = store.get(key)  # double-checked: racer built it
-        if hit is not None:
-            return hit
-        table_dir = table_dir or os.environ.get("SPARK_GRAFT_MEMO_DIR")
+    def make(fp: str) -> dict[str, DataFrame]:
+        tdir = table_dir or os.environ.get("SPARK_GRAFT_MEMO_DIR")
         fkey = json.dumps({"fingerprint": fp, "sf_dir": sf_dir,
                            "extra": [str(x) for x in extra]},
                           sort_keys=True)
-        parts = (_load_structure(spark, table_dir, tag, fkey)
-                 if table_dir else None)
+        parts = _load_structure(spark, tdir, tag, fkey) if tdir else None
         if parts is None:
             parts = build()
             assert isinstance(parts, dict), \
                 "durable_memo builders must return named DataFrame parts"
-            if table_dir:
-                _persist_structure(parts, table_dir, tag, fkey)
-        if single_live:
-            store.clear()
-        store[key] = parts
+            if tdir:
+                _persist_structure(parts, tdir, tag, fkey)
         return parts
+
+    return _memo(tag, spark, sf_dir, src, extra, single_live, make)

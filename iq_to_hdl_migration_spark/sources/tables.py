@@ -38,6 +38,10 @@ def table_path(sf_dir: str, name: str) -> str:
 # Spark application id so a restarted session never sees another
 # session's plans. The warehouse-staging branch bypasses the memo —
 # staged copies can appear mid-session.
+# Entries are stored with `setdefault` (atomic on a dict), so threads
+# racing to resolve one table — the concurrent `warm_all_memos` —
+# all get the first stored relation, and memo keys that fingerprint
+# it see one object.
 _RELATION_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 
@@ -83,8 +87,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = spark.read.parquet(staged)
             if name == "events":
                 df = normalize_event_ts(df)
-            _RELATION_MEMO[skey] = df
-            return df
+            return _RELATION_MEMO.setdefault(skey, df)
     key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), name)
     memo = _RELATION_MEMO.get(key)
     if memo is not None:
@@ -100,8 +103,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = normalize_event_ts(spark.read.parquet(table_path(sf_dir, name)))
     else:
         df = spark.read.parquet(table_path(sf_dir, name))
-    _RELATION_MEMO[key] = df
-    return df
+    return _RELATION_MEMO.setdefault(key, df)
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

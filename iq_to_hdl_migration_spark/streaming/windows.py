@@ -490,8 +490,10 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
     100 TB production shape (the index is the only state; per-batch
     work is O(batch + collisions), never a corpus re-signature).
 
-    Harness: split documents at the same 60%-of-max-doc_id cut as the
-    batch query; batch1 seeds the on-disk index; batch2 is written as
+    Harness: the base index and its 60%-of-max-doc_id cut are the
+    batch query's own memoized index (`dedup_queries.
+    _incremental_lsh_index`, built once per corpus and shared by both
+    twins); the documents above the cut are written as
     `_INC_DEDUP_BATCHES` id-contiguous parquet files drained one per
     micro-batch (maxFilesPerTrigger=1, availableNow). foreachBatch runs
     operators.dedup.lsh_batch_deltas: emit the batch's pairs, append
@@ -501,24 +503,19 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
     equals the single-shot batch result — that equality is the
     registered oracle check (and tests/test_streaming.py locks it
     against the batch operator directly)."""
-    import math
-
-    from iq_to_hdl_migration_spark.operators.dedup import (
-        build_lsh_index, lsh_batch_deltas)
+    from iq_to_hdl_migration_spark.operators.dedup import lsh_batch_deltas
+    from iq_to_hdl_migration_spark.queries.dedup_queries import (
+        _incremental_lsh_index)
 
     docs = load_table(spark, sf_dir, "documents")
-    # one aggregate serves both the NULL-id guard and the cut (the
-    # fail-loud check would otherwise be a second full scan). The cut
-    # must equal the batch twin's floor(max * 0.6D) BIT-for-bit, so it
-    # is computed with the same IEEE double multiply, just driver-side.
-    _lo, _hi = _id_span(docs, "doc_id")
-    cut = None if _hi is None else int(math.floor(_hi * 0.6))
-    if cut is None:
+    # fail loud on NULL ids; `hi` bounds the arrival slices
+    _lo, hi = _id_span(docs, "doc_id")
+    if hi is None:
         # empty corpus: no arrivals to stream — return the empty pair
         # frame the batch twin would produce (same schema)
         return local_frame(
             spark, [], "id_a bigint, id_b bigint, est_jaccard double")
-    batch1 = docs.where(F.col("doc_id") <= cut)
+    base_bands, base_digests, cut = _incremental_lsh_index(spark, sf_dir)
     batch2 = docs.where(F.col("doc_id") > cut)
 
     work = _work_dir(spark, sf_dir, "inc_dedup", _query_name)
@@ -527,27 +524,24 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
     arrivals_dir = os.path.join(work, "arrivals")
     pairs_dir = os.path.join(work, "pairs")
     ckpt_dir = os.path.join(work, "ckpt")
-    os.makedirs(arrivals_dir)
-    os.makedirs(pairs_dir)
+    for d in (bands_dir, digests_dir, arrivals_dir, pairs_dir):
+        os.makedirs(d)
 
-    bands, digests = build_lsh_index(batch1)
-    bands.write.parquet(os.path.join(bands_dir, "base"))
-    digests.write.parquet(os.path.join(digests_dir, "base"))
+    def _batch_parts(path, exclude_batch=None) -> list[str]:
+        """The per-batch subdirs under `path`, EXCLUDING the given
+        batch's own subdir. A replay of a crashed batch (deltas
+        written, checkpoint not committed) must compute against the
+        PRE-batch index state: reading its own half-written deltas
+        would make `remaining` empty, overwrite the good deltas with
+        empty frames, and emit digest self-pairs."""
+        return [os.path.join(path, d) for d in sorted(os.listdir(path))
+                if d != f"b{exclude_batch}"]
 
-    def _read_parts(path, exclude_batch=None):
-        """Union of the base + per-batch subdirs under `path`,
-        EXCLUDING the given batch's own subdir. A replay of a crashed
-        batch (deltas written, checkpoint not committed) must compute
-        against the PRE-batch index state: reading its own half-written
-        deltas would make `remaining` empty, overwrite the good deltas
-        with empty frames, and emit digest self-pairs."""
-        subs = sorted(d for d in os.listdir(path)
-                      if d != f"b{exclude_batch}")
-        return spark.read.parquet(*[os.path.join(path, d) for d in subs])
+    def _index(base, path, batch_id) -> DataFrame:
+        subs = _batch_parts(path, exclude_batch=batch_id)
+        return base.unionByName(spark.read.parquet(*subs)) if subs else base
 
-    # id-contiguous arrival files via the shared staging helper; _hi
-    # from the _id_span guard above replaces a redundant max() scan
-    _stage_id_sliced_arrivals(batch2, "doc_id", cut + 1, _hi,
+    _stage_id_sliced_arrivals(batch2, "doc_id", cut + 1, hi,
                               _INC_DEDUP_BATCHES, work, arrivals_dir)
 
     def _process(batch_df, batch_id) -> None:
@@ -555,8 +549,8 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
         # contains this batch's own (possibly half-written) deltas, so
         # recomputation yields byte-identical frames and the overwrites
         # below are true idempotent re-executions
-        index_bands = _read_parts(bands_dir, exclude_batch=batch_id)
-        index_digests = _read_parts(digests_dir, exclude_batch=batch_id)
+        index_bands = _index(base_bands, bands_dir, batch_id)
+        index_digests = _index(base_digests, digests_dir, batch_id)
         pairs, bands_delta, digests_delta = lsh_batch_deltas(
             batch_df, index_bands, index_digests)
         # belt-and-braces: a digest self-match (only possible if the
@@ -575,7 +569,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
         bands_delta.unpersist()
 
     _drain(spark, arrivals_dir, ckpt_dir, _process, _query_name)
-    return _read_parts(pairs_dir)
+    return spark.read.parquet(*_batch_parts(pairs_dir))
 
 
 def tws_available() -> bool:

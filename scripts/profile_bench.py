@@ -46,9 +46,8 @@ def main() -> None:
                             "/tmp/spark_graft_warehouse")
         stage_warehouse(spark, sf_dir, wh)
         os.environ["SPARK_GRAFT_WAREHOUSE"] = wh
-    from iq_to_hdl_migration_spark.queries.dedup_queries import (
-        warm_dedup_memos)
-    warm_dedup_memos(spark, sf_dir)
+    from iq_to_hdl_migration_spark.queries.warm import warm_all_memos
+    warm_all_memos(spark, sf_dir)
 
     registry = load_all()
     names = args or sorted(n for n, s in registry.items() if s.bench)

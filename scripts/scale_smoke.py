@@ -10,7 +10,8 @@ over at 100 TB.
 
 Run: python scripts/scale_smoke.py [K] [out_dir]
 Prints one JSON line on stdout comparing per-query seconds at 1x vs
-Kx; the untimed dedup-memo ingest cost per corpus goes to stderr.
+Kx; the untimed memo ingest cost (all memo families) per corpus goes
+to stderr.
 """
 
 from __future__ import annotations
@@ -179,9 +180,8 @@ EXTRA = EXTRA + ROTATION
 def time_queries(spark, sf_dir: str) -> dict[str, float]:
     # stored-structure ingest first (untimed, same contract as bench):
     # pair-table consumers are measured on their warm read
-    from iq_to_hdl_migration_spark.queries.dedup_queries import (
-        warm_dedup_memos)
-    memo_sec = warm_dedup_memos(spark, sf_dir)
+    from iq_to_hdl_migration_spark.queries.warm import warm_all_memos
+    memo_sec = warm_all_memos(spark, sf_dir)
     import sys as _sys
     print(json.dumps({"memo_build_sec": memo_sec, "dir": sf_dir}),
           file=_sys.stderr)

@@ -25,8 +25,7 @@ def main() -> None:
     from scale_smoke import EXTRA
 
     from iq_to_hdl_migration_spark.queries import load_all
-    from iq_to_hdl_migration_spark.queries.dedup_queries import (
-        warm_dedup_memos)
+    from iq_to_hdl_migration_spark.queries.warm import warm_all_memos
     from iq_to_hdl_migration_spark.session import get_spark
 
     spark = get_spark("sweep-chunk")
@@ -35,7 +34,7 @@ def main() -> None:
     names = sorted(n for n, s in reg.items()
                    if (s.bench or n in EXTRA))
     names = [n for i, n in enumerate(names) if i % n_sl == sl]
-    memo_sec = warm_dedup_memos(spark, sf_dir)
+    memo_sec = warm_all_memos(spark, sf_dir)
     print(json.dumps({"memo_build_sec": memo_sec, "dir": sf_dir}),
           file=sys.stderr)
     sec = {}

@@ -137,39 +137,68 @@ def test_incremental_lsh_equals_full_recompute(spark, sf_dir):
     assert combined == full
 
 
-def test_lsh_index_persistence_and_staleness_guard(spark, sf_dir, tmp_path):
-    """Persist -> load round-trips the index (same incremental pairs);
-    a regenerated source (same rows, new files) fails the fingerprint
-    and the loader refuses the stale index."""
-    import pyspark.sql.functions as F
+def test_lsh_index_persistence_and_staleness_guard(spark, sf_dir, tmp_path,
+                                                   monkeypatch):
+    """The incremental LSH index is a `durable_memo` structure: it
+    builds and persists under $SPARK_GRAFT_MEMO_DIR; a new session
+    (in-process memo cleared, snapshot writes poisoned) reloads it and
+    serves the same incremental pairs; a regenerated source and a
+    changed `_INDEX_PARAMS` each rebuild instead of serving the stale
+    index."""
+    import glob
+    import os
+    import shutil
 
-    from iq_to_hdl_migration_spark.operators.dedup import (
-        build_lsh_index, load_lsh_index, lsh_incremental_pairs,
-        persist_lsh_index)
-    from iq_to_hdl_migration_spark.sources.tables import load_table
+    from iq_to_hdl_migration_spark.queries.dedup_queries import (
+        dedup_incremental_pairs)
+    from iq_to_hdl_migration_spark.sources import memo, snapshots
 
-    docs = load_table(spark, sf_dir, "documents")
-    cut = docs.agg(F.expr("percentile_approx(doc_id, 0.6)")).first()[0]
-    batch1 = docs.where(F.col("doc_id") <= cut)
-    batch2 = docs.where(F.col("doc_id") > cut)
-    bands, digests = build_lsh_index(batch1)
-    idx_path = str(tmp_path / "lsh_index")
-    persist_lsh_index(bands, digests, docs, idx_path)
+    work = tmp_path / "corpus"
+    work.mkdir()
+    shutil.copy(os.path.join(sf_dir, "documents.parquet"), work)
+    memo_dir = tmp_path / "memo"
+    monkeypatch.setenv("SPARK_GRAFT_MEMO_DIR", str(memo_dir))
+    memo._MEMOS.pop("lsh_incremental_index", None)
+    builds = []
+    real_build = dedup.build_lsh_index
+    monkeypatch.setattr(
+        dedup, "build_lsh_index",
+        lambda *a, **k: builds.append(1) or real_build(*a, **k))
 
-    loaded = load_lsh_index(spark, docs, idx_path)
-    assert loaded is not None
-    want = {(r.id_a, r.id_b): r.est_jaccard
-            for r in lsh_incremental_pairs(batch2, bands, digests).collect()}
-    got = {(r.id_a, r.id_b): r.est_jaccard
-           for r in lsh_incremental_pairs(batch2, *loaded).collect()}
-    assert got == want
+    def pairs():
+        return sorted(tuple(r) for r in
+                      dedup_incremental_pairs(spark, str(work)).collect())
 
-    # regenerate the source with IDENTICAL content -> new files, new
-    # mtimes -> fingerprint mismatch -> loader fails closed
-    regen = str(tmp_path / "regen")
-    docs.write.parquet(f"{regen}/documents.parquet")
-    fresh = spark.read.parquet(f"{regen}/documents.parquet")
-    assert load_lsh_index(spark, fresh, idx_path) is None
+    want = pairs()
+    assert builds == [1]
+    for part in ("bands", "digests", "cut"):
+        (part_dir,) = glob.glob(f"{memo_dir}/lsh_incremental_index/*/{part}")
+        assert snapshots.current_version(part_dir) == 1
+
+    memo._MEMOS.pop("lsh_incremental_index", None)
+    real_write = snapshots.write_snapshot
+
+    def poisoned_write(*a, **k):
+        raise AssertionError("reload must not rebuild or rewrite")
+
+    monkeypatch.setattr(snapshots, "write_snapshot", poisoned_write)
+    assert pairs() == want
+    assert builds == [1]
+    monkeypatch.setattr(snapshots, "write_snapshot", real_write)
+
+    # regenerated source: same content, new mtime -> rebuild
+    f = work / "documents.parquet"
+    st = f.stat()
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    assert pairs() == want
+    assert builds == [1, 1]
+
+    # changed banding/format params -> rebuild, even for this corpus
+    monkeypatch.setattr(dedup, "_INDEX_PARAMS",
+                        dedup._INDEX_PARAMS + ["changed"])
+    assert pairs() == want
+    assert builds == [1, 1, 1]
+    memo._MEMOS.pop("lsh_incremental_index", None)
 
 
 def test_containment_matches_bruteforce_on_random_corpora(spark):

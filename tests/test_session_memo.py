@@ -274,6 +274,7 @@ _DURABLE_SERVING = [
     ("dedup_components", "dedup_minhash_clusters"),
     ("quantized_corpus", "sim_quantized_topk"),
     ("lpa_labels", "graph_community_modularity"),
+    ("lsh_incremental_index", "dedup_incremental_pairs"),
 ]
 
 
@@ -492,3 +493,94 @@ def test_memo_builds_once_under_concurrent_callers(spark, sf_dir):
         t.join()
     assert len(calls) == 1, f"build ran {len(calls)} times"
     assert all(r is results[0] for r in results)
+
+
+def test_staged_history_restages_on_source_rewrite(spark, sf_dir,
+                                                   tmp_path, monkeypatch):
+    """The snapshot stage is a session memo keyed on the orders
+    fingerprint: a second call is a hit (no commit), and bumping the
+    orders file's mtime mid-session restages a fresh v1..v3 history."""
+    import shutil
+
+    from iq_to_hdl_migration_spark.queries import snapshot_queries
+    from iq_to_hdl_migration_spark.sources import snapshots
+
+    work = tmp_path / "corpus"
+    work.mkdir()
+    shutil.copy(os.path.join(sf_dir, "orders.parquet"), work)
+    commits = []
+    real_write = snapshots.write_snapshot
+    monkeypatch.setattr(snapshots, "write_snapshot",
+                        lambda *a, **k: commits.append(1)
+                        or real_write(*a, **k))
+
+    d1 = snapshot_queries._staged_history(spark, str(work))
+    assert snapshots.current_version(d1) == 3 and len(commits) == 3
+    assert snapshot_queries._staged_history(spark, str(work)) == d1
+    assert len(commits) == 3, "same source must hit the memo"
+
+    f = work / "orders.parquet"
+    st = f.stat()
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    d2 = snapshot_queries._staged_history(spark, str(work))
+    try:
+        assert d2 != d1, "rewritten source served the stale stage"
+        assert snapshots.current_version(d2) == 3 and len(commits) == 6
+    finally:
+        shutil.rmtree(d1, ignore_errors=True)
+        shutil.rmtree(d2, ignore_errors=True)
+
+
+def test_load_table_racers_share_one_relation(spark, sf_dir, tmp_path,
+                                              monkeypatch):
+    """Threads that resolve the same table at once (the concurrent
+    `warm_all_memos` families) must all get the ONE stored relation,
+    so memo keys that fingerprint it agree."""
+    import shutil
+    import threading
+
+    monkeypatch.delenv("SPARK_GRAFT_WAREHOUSE", raising=False)
+    shutil.copy(os.path.join(sf_dir, "documents.parquet"), tmp_path)
+    n = 6
+    barrier = threading.Barrier(n)
+    got = [None] * n
+
+    def resolve(i):
+        barrier.wait()
+        got[i] = load_table(spark, str(tmp_path), "documents")
+
+    threads = [threading.Thread(target=resolve, args=(i,))
+               for i in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert all(df is got[0] for df in got), "racers got distinct relations"
+    assert load_table(spark, str(tmp_path), "documents") is got[0]
+
+
+def test_no_module_level_memo_dict_outside_the_seam():
+    """sources/memo.py is the one memo seam: no other module binds a
+    module-level `*_MEMO` name. The exception is the relation memo in
+    sources/tables.py, which sits BELOW the seam: memo keys
+    fingerprint the relations it returns."""
+    import ast
+    import pathlib
+    import re
+
+    import iq_to_hdl_migration_spark
+
+    pkg = pathlib.Path(iq_to_hdl_migration_spark.__file__).parent
+    allowed = {("sources/memo.py", "_MEMOS"),
+               ("sources/tables.py", "_RELATION_MEMO")}
+    found = set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for node in ast.parse(path.read_text()).body:
+            targets = (node.targets if isinstance(node, ast.Assign)
+                       else [node.target]
+                       if isinstance(node, ast.AnnAssign) else [])
+            for t in targets:
+                if isinstance(t, ast.Name) and re.search(r"_MEMOS?$", t.id):
+                    found.add((rel, t.id))
+    assert found == allowed, found - allowed

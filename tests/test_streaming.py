@@ -121,6 +121,30 @@ def test_streaming_incremental_dedup_equals_batch(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
+def test_incremental_dedup_twins_share_one_index_build(spark, sf_dir,
+                                                       tmp_path, monkeypatch):
+    """The streaming twin dedups against the batch query's memoized
+    index: the batch query followed by the twin builds the base index
+    exactly once, from a cold temp dir and no persisted memo tier."""
+    import tempfile
+
+    from iq_to_hdl_migration_spark.operators import dedup
+    from iq_to_hdl_migration_spark.sources import memo
+
+    monkeypatch.delenv("SPARK_GRAFT_MEMO_DIR", raising=False)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    memo._MEMOS.pop("lsh_incremental_index", None)
+    builds = []
+    real_build = dedup.build_lsh_index
+    monkeypatch.setattr(
+        dedup, "build_lsh_index",
+        lambda *a, **k: builds.append(1) or real_build(*a, **k))
+    reg = load_all()
+    reg["dedup_incremental_pairs"].fn(spark, sf_dir).collect()
+    reg["stream_incremental_dedup"].fn(spark, sf_dir).collect()
+    assert builds == [1]
+
+
 def test_tws_user_spend_equals_batch(spark, sf_dir):
     """transformWithStateInPandas twin == batch per-user purchase
     totals. Skips where the protobuf runtime the state server needs is
