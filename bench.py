@@ -6,9 +6,12 @@ compacted `queries` dict folded in (r14 verdict #1) and shrunk until
 the line fits the ~2000-character stdout tail the driver records as
 BENCH_r{N}.json, so the per-query record parses again.
 
-Each query is executed twice: a warm-up collect (JIT/codegen, file
-listing) then a timed collect — we're measuring the engine, not JVM
+Each query runs a warm-up collect (JIT/codegen, file listing) then
+the best of three timed collects — we're measuring the engine, not JVM
 warmup. `value` is the summed timed seconds across headline queries.
+
+The measurement harness every runner under scripts/ and docs/ shares
+lives here too: `session`, `stage`, `headliners` and `best_of`.
 """
 
 from __future__ import annotations
@@ -84,6 +87,48 @@ assert not (_ROTATE_OUT & set(_R02_BASELINE_NAMES)), \
 assert not (_ROTATE_IN & _ROTATE_OUT)
 
 
+def session(app: str):
+    """The engine's SparkSession, logging at ERROR: WARN-level chatter
+    (e.g. WindowExec notes on the bounded post-aggregation global
+    windows) costs log I/O inside timed loops and buries JSON output."""
+    from iq_to_hdl_migration_spark.session import get_spark
+    spark = get_spark(app)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def stage(spark, sf_dir: str) -> str:
+    """Load phase (untimed, like any warehouse ingest): stage the
+    single-row-group source files into a multi-file layout under
+    $SPARK_GRAFT_WAREHOUSE_DIR so scan stages parallelize, and point
+    $SPARK_GRAFT_WAREHOUSE at it. Returns the warehouse dir."""
+    from iq_to_hdl_migration_spark.sources.tables import stage_warehouse
+    wh = os.environ.get("SPARK_GRAFT_WAREHOUSE_DIR",
+                        "/tmp/spark_graft_warehouse")
+    stage_warehouse(spark, sf_dir, wh)
+    os.environ["SPARK_GRAFT_WAREHOUSE"] = wh
+    return wh
+
+
+def headliners(reg) -> list[str]:
+    """The round's timed headliner names, sorted: every bench=True
+    registry entry after this round's rotation."""
+    return sorted(n for n, s in reg.items()
+                  if (s.bench and n not in _ROTATE_OUT) or n in _ROTATE_IN)
+
+
+def best_of(spark, spec, sf_dir: str, n: int = 3) -> float:
+    """One untimed warm-up collect, then the best of `n` timed
+    collects (best-of damps host noise), in seconds."""
+    spec.fn(spark, sf_dir).collect()
+    best = float("inf")
+    for _ in range(n):
+        t0 = time.perf_counter()
+        spec.fn(spark, sf_dir).collect()
+        best = min(best, time.perf_counter() - t0)
+    return best
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -126,23 +171,10 @@ def main() -> None:
             sys.exit(1)
 
     from iq_to_hdl_migration_spark.queries import load_all
-    from iq_to_hdl_migration_spark.session import get_spark
-    from iq_to_hdl_migration_spark.sources.tables import stage_warehouse
+    from iq_to_hdl_migration_spark.queries.warm import warm_all_memos
 
-    spark = get_spark("iq_to_hdl_migration_spark-bench")
-    # timing run: WARN-level chatter (e.g. WindowExec notes on the
-    # bounded post-aggregation global windows) costs log I/O inside
-    # the timed loop and buries the JSON contract line
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Load phase (untimed, like any warehouse ingest): stage the
-    # single-row-group source files into a multi-file layout so scan
-    # stages parallelize. SPARK_GRAFT_STAGE=0 benches the raw files.
-    if os.environ.get("SPARK_GRAFT_STAGE", "1") != "0":
-        wh = os.environ.get("SPARK_GRAFT_WAREHOUSE_DIR",
-                            "/tmp/spark_graft_warehouse")
-        stage_warehouse(spark, sf_dir, wh)
-        os.environ["SPARK_GRAFT_WAREHOUSE"] = wh
+    spark = session("iq_to_hdl_migration_spark-bench")
+    stage(spark, sf_dir)
 
     # Ingest phase 2 (untimed, r11 verdict #4 + r14 verdict #2): ALL
     # durable memos — dedup pair graphs, co-purchase graph structures,
@@ -152,23 +184,11 @@ def main() -> None:
     # warm read and `memo_build_sec` stamps the FULL ingest cost
     # (r14 stamped only the three dedup structures; the other memos
     # built silently inside the first consumer's untimed warm-up).
-    from iq_to_hdl_migration_spark.queries.warm import warm_all_memos
     memo_build_sec = warm_all_memos(spark, sf_dir)
 
     registry = load_all()
-    bench_specs = {n: s for n, s in sorted(registry.items())
-                   if (s.bench and n not in _ROTATE_OUT)
-                   or n in _ROTATE_IN}
-
-    timings: dict[str, float] = {}
-    for name, spec in bench_specs.items():
-        spec.fn(spark, sf_dir).collect()          # warm-up
-        best = float("inf")
-        for _ in range(3):                        # best-of-3 damps host noise
-            t0 = time.perf_counter()
-            spec.fn(spark, sf_dir).collect()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 4)
+    timings = {name: round(best_of(spark, registry[name], sf_dir), 4)
+               for name in headliners(registry)}
 
     # Output contract (r11 verdict #1, repaired per r14 verdict #1):
     # the driver keeps only the LAST ~2000 characters of stdout and

@@ -1,5 +1,6 @@
 """Regenerate docs/PLANS.md: the final adaptive physical plan of every
-bench-headline query at sf0.1, annotated with its scale rationale.
+bench headliner (`bench.headliners`) at sf0.1, annotated with its
+scale rationale.
 
 Run: python docs/gen_plans.py   (from the repo root)
 """
@@ -11,8 +12,8 @@ import sys
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
+import bench
 from iq_to_hdl_migration_spark.queries import load_all
-from iq_to_hdl_migration_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.1"
 
@@ -158,10 +159,11 @@ NOTES = {
 
 
 def main() -> None:
-    spark = get_spark("plans")
+    spark = bench.session("plans")
+    cores = spark.sparkContext.defaultParallelism
     reg = load_all()
     out = [
-        "# Plan audit — headline queries at sf0.1 (local[32], AQE on)",
+        f"# Plan audit — headline queries at sf0.1 (local[{cores}], AQE on)",
         "",
         "Generated by `python docs/gen_plans.py`. Each section is the final",
         "adaptive physical plan (`executedPlan` after materialization) with",
@@ -169,7 +171,7 @@ def main() -> None:
         "these properties from regressing.",
         "",
     ]
-    for name in sorted(n for n, s in reg.items() if s.bench):
+    for name in bench.headliners(reg):
         df = reg[name].fn(spark, SF_DIR)
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()

@@ -13,8 +13,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Modules that populate REGISTRY on import. Imported defensively so a
-# broken/missing module never takes down the whole registry.
+# Modules that populate REGISTRY on import.
 _QUERY_MODULES = [
     "relational",
     "relational_ext",
@@ -74,12 +73,13 @@ def register(name: str, oracle: str | None = None, doc: str = "",
     return wrap
 
 
-def load_all(strict: bool = False) -> dict[str, QuerySpec]:
-    """Import all query modules (populates REGISTRY) and return it."""
+def load_all(strict: bool = True) -> dict[str, QuerySpec]:
+    """Import all query modules (populates REGISTRY) and return it.
+
+    Always strict: a module that fails to import raises instead of
+    silently dropping its queries. `strict` is ignored; it stays only
+    because perfbench/run.py and perfbench/make_digests.py still pass it.
+    """
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(f"{__name__}.{mod}")
-        except ImportError:
-            if strict:
-                raise
+        importlib.import_module(f"{__name__}.{mod}")
     return REGISTRY

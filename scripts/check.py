@@ -48,13 +48,12 @@ def run(label: str, cmd: list[str], env: dict | None = None) -> None:
 
 def main() -> None:
     fast = "--fast" in sys.argv
-    # 1. contract shape (pure import, seconds). Strict load: a module
-    # that fails to import raises here instead of silently dropping its
-    # queries; the pinned counts make any change to the registry size
-    # a deliberate edit of this file.
+    # 1. contract shape (pure import, seconds). load_all raises on a
+    # module that fails to import; the pinned counts make any change to
+    # the registry size a deliberate edit of this file.
     sys.path.insert(0, str(ROOT))
     from iq_to_hdl_migration_spark.queries import load_all
-    load_all(strict=True)
+    load_all()
     import __spark_entry__ as entry_mod
     qs, osql = entry_mod.queries(), entry_mod.oracle_sql()
     assert (len(qs), len(osql)) == (N_QUERIES, N_ORACLES), \

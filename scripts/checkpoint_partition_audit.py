@@ -64,23 +64,13 @@ def main() -> None:
     import bench
     from iq_to_hdl_migration_spark.queries import load_all
     from iq_to_hdl_migration_spark.queries.warm import warm_all_memos
-    from iq_to_hdl_migration_spark.session import get_spark
-    from iq_to_hdl_migration_spark.sources.tables import stage_warehouse
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("ckpt-audit")
-    spark.sparkContext.setLogLevel("ERROR")
-    if os.environ.get("SPARK_GRAFT_STAGE", "1") != "0":
-        wh = os.environ.get("SPARK_GRAFT_WAREHOUSE_DIR",
-                            "/tmp/spark_graft_warehouse")
-        stage_warehouse(spark, sf_dir, wh)
-        os.environ["SPARK_GRAFT_WAREHOUSE"] = wh
+    spark = bench.session("ckpt-audit")
+    bench.stage(spark, sf_dir)
 
     reg = load_all()
-    names = sys.argv[1:] or sorted(
-        n for n, s in reg.items()
-        if (s.bench and n not in bench._ROTATE_OUT)
-        or n in bench._ROTATE_IN)
+    names = sys.argv[1:] or bench.headliners(reg)
 
     t0 = time.time()
     warm_all_memos(spark, sf_dir)

@@ -31,8 +31,8 @@ import sys
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
+import bench
 from iq_to_hdl_migration_spark.queries import load_all
-from iq_to_hdl_migration_spark.session import get_spark
 
 # Queries allowed more than _BARRIER_CAP driver round-trips during
 # DataFrame CONSTRUCTION, with the count they are pinned at. All are
@@ -127,7 +127,7 @@ def main() -> None:
     out_path = next((a.split("=", 1)[1] for a in sys.argv[1:]
                      if a.startswith("--out=")), None)
     sf_dir = args[0] if args else "/root/testdata/sf0.001"
-    spark = get_spark("plan-audit")
+    spark = bench.session("plan-audit")
     payload = json.dumps(audit(spark, sf_dir), indent=1)
     if out_path:
         # file handoff for scripted callers (scripts/check.py): stdout

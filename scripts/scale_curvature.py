@@ -23,7 +23,6 @@ from __future__ import annotations
 import json
 import pathlib
 import sys
-import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent))
@@ -83,11 +82,10 @@ def _unit_count(spark, sf_dir: str, kind: str) -> int:
 
 
 def main() -> None:
-    from iq_to_hdl_migration_spark.session import get_spark
+    import bench
 
     mode, k, sf_dir = sys.argv[1], int(sys.argv[2]), sys.argv[3]
-    spark = get_spark("scale-curvature")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench.session("scale-curvature")
     if mode == "--replicate":
         from scale_smoke import replicate
         replicate(spark, k, sf_dir)
@@ -98,15 +96,8 @@ def main() -> None:
     names = sys.argv[4:] or DEFAULT_NAMES
     from iq_to_hdl_migration_spark.queries import load_all
     reg = load_all()
-    sec = {}
-    for name in names:
-        reg[name].fn(spark, sf_dir).collect()          # warm-up
-        best = float("inf")
-        for _ in range(3):                             # best-of-3
-            t0 = time.perf_counter()
-            reg[name].fn(spark, sf_dir).collect()
-            best = min(best, time.perf_counter() - t0)
-        sec[name] = round(best, 3)
+    sec = {name: round(bench.best_of(spark, reg[name], sf_dir), 3)
+           for name in names}
     units = {}
     for name in names:
         key, kind = _UNITS.get(name, ("rows", "lineitem"))

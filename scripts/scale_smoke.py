@@ -20,14 +20,13 @@ import json
 import pathlib
 import shutil
 import sys
-import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 import pyspark.sql.functions as F
 
+import bench
 from iq_to_hdl_migration_spark.queries import load_all
-from iq_to_hdl_migration_spark.session import get_spark
 from iq_to_hdl_migration_spark.sources.tables import TABLES, load_table
 
 BASE_SF_DIR = "/root/testdata/sf0.1"
@@ -177,34 +176,33 @@ SWEPT_DIRECT = [
 EXTRA = EXTRA + ROTATION
 
 
-def time_queries(spark, sf_dir: str) -> dict[str, float]:
-    # stored-structure ingest first (untimed, same contract as bench):
-    # pair-table consumers are measured on their warm read
+def sweep_names(reg) -> list[str]:
+    """The sweep set: the bench headliners plus EXTRA."""
+    return sorted(set(bench.headliners(reg)).union(EXTRA))
+
+
+def time_queries(spark, sf_dir: str, names: list[str]) -> dict[str, float]:
+    """Warm-up + one timed collect per name, after the untimed
+    stored-structure ingest (same contract as bench): pair-table
+    consumers are measured on their warm read."""
     from iq_to_hdl_migration_spark.queries.warm import warm_all_memos
     memo_sec = warm_all_memos(spark, sf_dir)
-    import sys as _sys
     print(json.dumps({"memo_build_sec": memo_sec, "dir": sf_dir}),
-          file=_sys.stderr)
+          file=sys.stderr)
 
     reg = load_all()
-    out = {}
-    for name, spec in sorted(reg.items()):
-        if not spec.bench and name not in EXTRA:
-            continue
-        spec.fn(spark, sf_dir).collect()          # warm-up
-        t0 = time.perf_counter()
-        spec.fn(spark, sf_dir).collect()
-        out[name] = round(time.perf_counter() - t0, 3)
-    return out
+    return {name: round(bench.best_of(spark, reg[name], sf_dir, n=1), 3)
+            for name in names}
 
 
 def main() -> None:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 5
     out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/scale_smoke"
-    spark = get_spark("scale-smoke")
+    spark = bench.session("scale-smoke")
     replicate(spark, k, out_dir)
-    base = time_queries(spark, BASE_SF_DIR)
-    big = time_queries(spark, out_dir)
+    names = sweep_names(load_all())
+    base = time_queries(spark, BASE_SF_DIR, names)
+    big = time_queries(spark, out_dir, names)
     ratios = {n: round(big[n] / base[n], 2) if base[n] > 0 else None
               for n in base}
     print(json.dumps({"k": k, "base_sec": base, "k_sec": big,

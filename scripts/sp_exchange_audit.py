@@ -96,12 +96,11 @@ def measure(spark, sf_dir: str) -> dict[str, int]:
 
 
 def main() -> None:
-    from iq_to_hdl_migration_spark.session import get_spark
+    import bench
 
     small = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     big = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
-    spark = get_spark("sp-exchange-audit")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench.session("sp-exchange-audit")
     a = measure(spark, small)
     b = measure(spark, big)
     flagged = {}

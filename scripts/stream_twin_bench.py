@@ -28,17 +28,11 @@ sys.path.insert(0, str(ROOT))
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    import bench
     from iq_to_hdl_migration_spark.queries import load_all
-    from iq_to_hdl_migration_spark.session import get_spark
-    from iq_to_hdl_migration_spark.sources.tables import stage_warehouse
 
-    spark = get_spark("stream_twin_bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    if os.environ.get("SPARK_GRAFT_STAGE", "1") != "0":
-        wh = os.environ.get("SPARK_GRAFT_WAREHOUSE_DIR",
-                            "/tmp/spark_graft_warehouse")
-        stage_warehouse(spark, sf_dir, wh)
-        os.environ["SPARK_GRAFT_WAREHOUSE"] = wh
+    spark = bench.session("stream_twin_bench")
+    bench.stage(spark, sf_dir)
 
     registry = load_all()
     names = sys.argv[1:] or sorted(

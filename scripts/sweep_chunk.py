@@ -13,7 +13,6 @@ from __future__ import annotations
 import json
 import pathlib
 import sys
-import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent))
@@ -22,27 +21,15 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent))
 def main() -> None:
     sf_dir, k, sl, n_sl = (sys.argv[1], int(sys.argv[2]),
                            int(sys.argv[3]), int(sys.argv[4]))
-    from scale_smoke import EXTRA
+    import bench
+    from scale_smoke import sweep_names, time_queries
 
     from iq_to_hdl_migration_spark.queries import load_all
-    from iq_to_hdl_migration_spark.queries.warm import warm_all_memos
-    from iq_to_hdl_migration_spark.session import get_spark
 
-    spark = get_spark("sweep-chunk")
-    spark.sparkContext.setLogLevel("ERROR")
-    reg = load_all()
-    names = sorted(n for n, s in reg.items()
-                   if (s.bench or n in EXTRA))
-    names = [n for i, n in enumerate(names) if i % n_sl == sl]
-    memo_sec = warm_all_memos(spark, sf_dir)
-    print(json.dumps({"memo_build_sec": memo_sec, "dir": sf_dir}),
-          file=sys.stderr)
-    sec = {}
-    for name in names:
-        reg[name].fn(spark, sf_dir).collect()       # warm-up
-        t0 = time.perf_counter()
-        reg[name].fn(spark, sf_dir).collect()
-        sec[name] = round(time.perf_counter() - t0, 3)
+    spark = bench.session("sweep-chunk")
+    names = [n for i, n in enumerate(sweep_names(load_all()))
+             if i % n_sl == sl]
+    sec = time_queries(spark, sf_dir, names)
     print(json.dumps({"dir": sf_dir, "k": k, "slice": sl, "sec": sec}))
 
 

@@ -26,22 +26,15 @@ def main() -> None:
     names = args
     assert names, "pass at least one query name"
 
+    import bench
     from oracle import assert_matches_oracle
     from iq_to_hdl_migration_spark.queries import load_all
-    from iq_to_hdl_migration_spark.session import get_spark
-    from iq_to_hdl_migration_spark.sources.tables import stage_warehouse
-    import os
 
     registry = load_all()
-    spark = get_spark("verify-queries")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench.session("verify-queries")
     for sf in sfs.split(","):
         sf_dir = f"/root/testdata/sf{sf}"
-        if os.environ.get("SPARK_GRAFT_STAGE", "1") != "0":
-            wh = os.environ.get("SPARK_GRAFT_WAREHOUSE_DIR",
-                                "/tmp/spark_graft_warehouse")
-            stage_warehouse(spark, sf_dir, wh)
-            os.environ["SPARK_GRAFT_WAREHOUSE"] = wh
+        bench.stage(spark, sf_dir)
         for name in names:
             spec = registry[name]
             if spec.oracle is None:

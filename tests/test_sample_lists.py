@@ -9,6 +9,8 @@ import importlib.util
 import pathlib
 import sys
 
+import pytest
+
 from iq_to_hdl_migration_spark.queries import load_all
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
@@ -62,3 +64,15 @@ def test_bench_rotation_names_registered():
     # every baseline name must be in the effective headliner set
     effective = (benched - set(bench._ROTATE_OUT)) | set(bench._ROTATE_IN)
     assert set(bench._R02_BASELINE_NAMES) <= effective
+    assert set(bench.headliners(reg)) == effective
+
+
+def test_load_all_raises_on_broken_module(monkeypatch):
+    """A query module that fails to import must fail the load, not
+    silently drop its queries from the registry."""
+    from iq_to_hdl_migration_spark import queries
+
+    monkeypatch.setattr(queries, "_QUERY_MODULES",
+                        [*queries._QUERY_MODULES, "_no_such_query_module"])
+    with pytest.raises(ModuleNotFoundError):
+        queries.load_all()
