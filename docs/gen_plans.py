@@ -37,11 +37,6 @@ NOTES = {
         "Both rankings ride the broadcast-probe scored passes the "
         "oracled topk queries already do; the Kendall pair join is "
         "20x20 per probe (bounded) and broadcast.",
-    "dq_null_profile_all_tables":
-        "One conditional-sum aggregate pass per table (map-side "
-        "combined), stack() unpivot of the single aggregated row, "
-        "union over the bounded table spine — N rules for one scan "
-        "per table.",
     "graph_clustering_topk":
         "Degree-ordered orientation caps adjacency arrays at sqrt(2m); "
         "triangles exploded into corners only (output-bound, never the "
@@ -109,10 +104,6 @@ NOTES = {
     "cohort_ltv_curve":
         "Cohort month from a per-user min (one shuffle), month-offset "
         "rollup second — both aggregates partial map-side.",
-    "ddl_output_digest":
-        "Driver-side rule engine output digested into one row — the "
-        "plan is a LocalTableScan; listed to keep the DDL surface "
-        "benchmarked end-to-end.",
     "events_peak_concurrency":
         "Two-level prefix sum: day-partitioned running sums plus a "
         "constant-size day-spine offset — at most one SinglePartition "
@@ -129,10 +120,6 @@ NOTES = {
         "pair matrix is register arithmetic on a broadcast grid of "
         "types x 64 rows. The exact-overlap column is the "
         "verification harness; production moves only sketches.",
-    "sketch_histogram_percentiles":
-        "Map-side partial aggregation to (type, bin) — the shuffle "
-        "carries at most types x 512 partial counts per task, never "
-        "raw values; percentiles read off cumulative bins.",
     "dedup_incremental_pairs":
         "Batch-vs-stored-index incremental dedup: signatures for the "
         "batch only; the store joins on (band, band_sig); per-batch "

@@ -6,7 +6,7 @@ engine).
     python -m iq_to_hdl_migration_spark.cli assess
     python -m iq_to_hdl_migration_spark.cli inventory
     python -m iq_to_hdl_migration_spark.cli migrate --sf-dir ... \
-        --workdir /tmp/mig [--tables lineitem,orders] [--resume]
+        --workdir /tmp/mig [--tables lineitem,orders]
     python -m iq_to_hdl_migration_spark.cli load-schema
     python -m iq_to_hdl_migration_spark.cli query q1_pricing_summary
     python -m iq_to_hdl_migration_spark.cli report --workdir /tmp/mig
@@ -53,9 +53,6 @@ def cmd_migrate(args) -> int:
     names = (args.tables.split(",") if args.tables else TABLES)
     sources = load_tables(spark, args.sf_dir, names)
     status = MigrationStatus(spark, f"{args.workdir}/status")
-    if not args.resume:
-        # fresh run: a new workdir is expected; a used one resumes anyway
-        pass
     outcomes = migrate_tables(spark, sources, f"{args.workdir}/staging",
                               f"{args.workdir}/target", status)
     for o in outcomes:
@@ -115,7 +112,6 @@ def main(argv: list[str] | None = None) -> int:
     mig = sub.add_parser("migrate")
     mig.add_argument("--workdir", required=True)
     mig.add_argument("--tables", default="")
-    mig.add_argument("--resume", action="store_true")
     sub.add_parser("load-schema")
     q = sub.add_parser("query")
     q.add_argument("name")

@@ -8,24 +8,10 @@ the way the reference validates its JSON input.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 # Validation constants (reference: common.py:297-313; migration.py:175)
 MIN_BATCH_GB = 100          # Batch_Size_GB: 0 (off) or >= 100
 MIN_CLIENT_CONN = 2         # Client_Num_Conn >= 2
 MAX_EXTRACT_PATH = 90       # path length cap (of 128)
-
-
-@dataclass
-class MigrationConfig:
-    host_name: str = "localhost"
-    port_number: int = 2638
-    user_name: str = "HDLADMIN"
-    batch_size_gb: int = 0
-    client_num_conn: int = 2
-    extract_path: str = "/tmp/extract"
-    target_path: str = "/tmp/target"
-    extras: dict = field(default_factory=dict)
 
 
 def validate_config(cfg: dict) -> list[tuple[str, str, str, str]]:
@@ -69,23 +55,3 @@ def validate_config(cfg: dict) -> list[tuple[str, str, str, str]]:
                 "" if path_ok else f"1-{MAX_EXTRACT_PATH} chars"))
 
     return out
-
-
-def from_dict(cfg: dict) -> MigrationConfig:
-    problems = [f for f, _v, verdict, _d in validate_config(cfg)
-                if verdict != "ok"]
-    if problems:
-        raise ValueError(f"invalid config fields: {problems}")
-    return MigrationConfig(
-        host_name=str(cfg["Host_Name"]).strip(),
-        port_number=int(cfg["Port_Number"]),
-        user_name=str(cfg.get("User_Name", "HDLADMIN")),
-        batch_size_gb=int(cfg.get("Batch_Size_GB", 0)),
-        client_num_conn=int(cfg.get("Client_Num_Conn", MIN_CLIENT_CONN)),
-        extract_path=str(cfg["Extract_Path"]),
-        target_path=str(cfg.get("Target_Path", "/tmp/target")),
-        extras={k: v for k, v in cfg.items()
-                if k not in {"Host_Name", "Port_Number", "User_Name",
-                             "Batch_Size_GB", "Client_Num_Conn",
-                             "Extract_Path", "Target_Path"}},
-    )

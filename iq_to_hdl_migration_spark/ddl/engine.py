@@ -21,7 +21,9 @@ import re
 from dataclasses import dataclass, field
 
 from iq_to_hdl_migration_spark.ddl.rules import (
-    DEFAULT_LOGIN_POLICY, CommentRule, LineCommentRule, ReplaceRule)
+    CommentRule, LineCommentRule, ReplaceRule)
+from iq_to_hdl_migration_spark.sources.rule_tables import (
+    load_login_policy_defaults)
 
 BEGIN_MARK = "--** Commented by Migration Utility: Begin"
 END_MARK = "--** Commented by Migration Utility: end"
@@ -51,16 +53,6 @@ def _is_go(line: str) -> bool:
 
 def _is_boundary(line: str) -> bool:
     return _is_go(line) or "--" in line.strip() or line.strip() == ""
-
-
-def segment_blocks(lines: list[str]) -> list[tuple[int, int]]:
-    """(start, go_index) per go-delimited statement block (D2)."""
-    out, start = [], 0
-    for i, line in enumerate(lines):
-        if _is_go(line):
-            out.append((start, i))
-            start = i + 1
-    return out
 
 
 def _find_bottom(lines: list[str], i: int) -> int | None:
@@ -305,21 +297,17 @@ def has_completion_sentinels(lines: list[str]) -> bool:
 
 # ----------------------------------- entry ----------------------------------
 
-_SPECIAL = {"password values", "CREATE DOMAIN", "TEXT CONFIGURATION"}
-
-
-def rewrite(lines: list[str], rules: list,
-            login_defaults: dict[str, str] | None = None) -> RewriteResult:
+def rewrite(lines: list[str], rules: list) -> RewriteResult:
     """Apply the full D2-D13 pipeline; returns rewritten lines, the
-    structured rule-hit list, and captured FK statements."""
+    structured rule-hit list, and captured FK statements. The root
+    login-policy defaults come from the packaged `login_policy.csv`
+    rule table (reference load_login_list, migration.py:992-999)."""
     lines = list(lines)
     hits: list[dict] = []
     fks: list[str] = []
-    defaults = (DEFAULT_LOGIN_POLICY if login_defaults is None
-                else login_defaults)
 
     work = list(rules)
-    if login_policy_differs(lines, defaults):
+    if login_policy_differs(lines, load_login_policy_defaults()):
         _apply_login_policy_clone(lines, hits)
     else:
         work.append(CommentRule("ALTER LOGIN POLICY", "root"))

@@ -96,20 +96,6 @@ BASE_RULES: list = [
     CommentRule("CUSTADMIN"),
 ]
 
-# Default root login-policy option values (Common/login_policy.csv
-# semantics): if the unloaded root policy deviates, the engine clones
-# it to "c_root" instead of altering root (migration.py:1002-1085).
-DEFAULT_LOGIN_POLICY = {
-    "password_life_time": "UNLIMITED",
-    "password_grace_time": "0",
-    "password_expiry_on_next_login": "OFF",
-    "locked": "OFF",
-    "max_connections": "UNLIMITED",
-    "max_failed_login_attempts": "UNLIMITED",
-    "max_days_since_login": "UNLIMITED",
-    "max_non_dba_connections": "UNLIMITED",
-}
-
 
 def compile_rules(spark: SparkSession,
                   option_names: list[str] | None = None) -> list:

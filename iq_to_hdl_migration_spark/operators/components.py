@@ -60,14 +60,3 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
         if changed == 0:
             break
     return labels
-
-
-def dedup_keep_canonical(docs: DataFrame, pairs: DataFrame,
-                         id_col: str = "doc_id") -> DataFrame:
-    """Deduplicated corpus: for every near-dup cluster keep only the
-    minimum-id document; documents in no cluster pass through.
-    One broadcast-able join against the (tiny) non-canonical id set."""
-    comp = connected_components(pairs)
-    drop_ids = comp.where(F.col("id") != F.col("component")) \
-        .select(F.col("id").alias(id_col))
-    return docs.join(drop_ids, id_col, "left_anti")

@@ -54,12 +54,3 @@ def table_diff(left: DataFrame, right: DataFrame, key_cols: list[str],
          .when(F.col("_rh_l") != F.col("_rh_r"), F.lit("changed"))
          .otherwise(F.lit("unchanged")).alias("status"))
         .where(F.col("status") != "unchanged"))
-
-
-def diff_summary(left: DataFrame, right: DataFrame, key_cols: list[str],
-                 compare_cols: list[str] | None = None) -> DataFrame:
-    """Rollup of table_diff: one row per status with its count — the
-    reconciliation report a migration signs off on."""
-    return (table_diff(left, right, key_cols, compare_cols)
-            .groupBy("status")
-            .agg(F.count(F.lit(1)).alias("n_rows")))

@@ -5,10 +5,11 @@ very different kinds (see /root/reference docs; e.g. the option/rule
 lookups in Pre_Migration/pre_migration.py vs the per-customer extract
 fan-out in IQ_Extraction/):
 
-* **constant-cardinality** frames whose row count does not grow with
-  data volume — ``nation`` (25 rows), ``region`` (5), one-row scalar
-  aggregates, bounded top-k lists.  Broadcasting these is always right,
-  at any scale, so we hint them explicitly with :func:`const_dim`.
+* **constant-cardinality** ("const_dim") frames whose row count does
+  not grow with data volume — ``nation`` (25 rows), ``region`` (5),
+  one-row scalar aggregates, bounded top-k lists.  Broadcasting these
+  is always right, at any scale, so call sites hint them explicitly
+  with ``F.broadcast``.
 
 * **sf-scaled** tables — ``customer`` / ``supplier`` / ``part`` /
   ``orders`` — that are KB at test scale but hundreds of GB at the
@@ -30,15 +31,8 @@ hint survives) and the scaled tables must NOT (no stray hint).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-__all__ = ["const_dim", "scaled_dim"]
-
-
-def const_dim(df: DataFrame) -> DataFrame:
-    """Broadcast-hint a constant-cardinality frame (nation, region,
-    1-row aggregates, bounded top-k).  Safe at any scale factor."""
-    return F.broadcast(df)
+__all__ = ["scaled_dim"]
 
 
 def scaled_dim(df: DataFrame) -> DataFrame:

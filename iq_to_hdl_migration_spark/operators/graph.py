@@ -97,9 +97,9 @@ def _fixedpoint_step(nodes: DataFrame, n: int, e_out: DataFrame,
                      ranks: DataFrame) -> DataFrame:
     """ONE exact-integer PageRank iteration (contrib join, the single
     driver round-trip for both fixed-point scalars, dangling-share
-    math, new-rank projection) — the shared body of
-    `pagerank_fixedpoint` and `pagerank_convergence`, extracted so the
-    convergence audit can never desync from the fixpoint it audits.
+    math, new-rank projection) — the body of
+    `pagerank_fixedpoint_trajectory`, so the convergence audit over
+    that trajectory can never desync from the fixpoint it audits.
 
     Round-14 re-plan (guide §1.2/§5): contrib's EAGER localCheckpoint
     (its own Spark job per iteration) became a LAZY .cache() — the
@@ -200,18 +200,6 @@ def pagerank_convergence_from_trajectory(traj: list[DataFrame]
                         / F.lit(float(PR_SCALE))))
 
 
-def pagerank_fixedpoint(edges: DataFrame, iters: int = 10,
-                        src: str = "src", dst: str = "dst",
-                        weight: str = "weight") -> DataFrame:
-    """Integer PageRank. Returns (node, rank_q BIGINT, rank DOUBLE)
-    with rank = rank_q / 2^40 (exact: rank_q < 2^53)."""
-    ranks = pagerank_fixedpoint_trajectory(edges, iters, src, dst,
-                                           weight)[-1]
-    return ranks.select(
-        "node", F.col("q").alias("rank_q"),
-        (F.col("q").cast("double") / F.lit(float(PR_SCALE))).alias("rank"))
-
-
 def label_propagation(edges: DataFrame, n_iter: int = 3,
                       src: str = "u", dst: str = "v",
                       canonical: bool = False) -> DataFrame:
@@ -253,18 +241,3 @@ def label_propagation(edges: DataFrame, n_iter: int = 3,
                   .select(F.col("u").alias("node"), "label")
                   .localCheckpoint(eager=True))
     return labels
-
-
-def pagerank_convergence(edges: DataFrame, iters: int = 10,
-                         src: str = "src", dst: str = "dst",
-                         weight: str = "weight") -> DataFrame:
-    """Convergence audit of the integer fixpoint: per iteration the
-    exact L1 and max |Δrank_q| between consecutive rank vectors —
-    BIGINT arithmetic end-to-end, so the whole trajectory (not just
-    the endpoint) is value-hash-checkable. Since round 14 this is a
-    thin wrapper: run the trajectory, then aggregate all deltas
-    lazily in one final job (no per-iteration delta collect). Each
-    iteration IS `_fixedpoint_step` — the audit runs the literal
-    fixpoint body, plus only the delta aggregate."""
-    return pagerank_convergence_from_trajectory(
-        pagerank_fixedpoint_trajectory(edges, iters, src, dst, weight))

@@ -2,12 +2,11 @@
 binary columns with typed metadata; decode/feature-extract/
 frame-sample as Arrow-batched pandas functions over mapInPandas).
 
-The decode step is STUBBED: real codecs (PIL/librosa/av) aren't in
-this container, so `try_decode_image` raises NotImplementedError and
-the pipeline uses a deterministic fake decoder instead. Everything
-around it — binary schema, mapInPandas signatures, Arrow batch shape,
-partitioning — is real and tested; swapping in a real decoder changes
-one function.
+The decode step is STUBBED: real codecs (PIL/librosa/av) are not
+dependencies, so the pipeline uses a deterministic fake decoder
+(`fake_decode_dims`). Everything around it — binary schema,
+mapInPandas signatures, Arrow batch shape, partitioning — is real and
+tested; swapping in a real decoder changes one function.
 
 Scale: mapInPandas streams Arrow record batches per partition — no
 per-row Python, no driver collect. Feature extraction repartitions
@@ -37,12 +36,6 @@ def attach_binary_payload(docs: DataFrame, text_col: str = "text",
     binary column landed by the ingest job."""
     return (docs.withColumn("payload", F.col(text_col).cast("binary"))
                 .withColumn("media_type", F.lit(media_type)))
-
-
-def try_decode_image(payload: bytes) -> tuple[int, int]:
-    """Real image decode — unavailable in this environment."""
-    raise NotImplementedError(
-        "image codecs not installed; use fake_decode_dims")
 
 
 def fake_decode_dims(payload: bytes) -> tuple[int, int]:

@@ -104,23 +104,14 @@ def _atomic_publish(tmp: Path, final: Path) -> None:
 def migrate_table(spark: SparkSession, source: DataFrame, table_key: str,
                   staging_dir: str, target_dir: str,
                   status: MigrationStatus | None = None,
-                  attempt: int = 0,
-                  size_hint_bytes: int | None = None) -> MigrateOutcome:
+                  attempt: int = 0) -> MigrateOutcome:
     """One table through the full spine with verify-or-rollback.
 
     Any count mismatch rolls back (tmp dir removed, nothing published)
     and records 'failed' — the Spark analog of the generated
     `IF cnt != expected THEN ROLLBACK` block (migration.py:1461-1480).
-
-    `size_hint_bytes` (from the A2 width*rowcount estimate) sizes the
-    staging write's partition count to ~128 MB files (P3) — the Spark
-    replacement for per-node LPT packing of big tables.
     """
     expected = source.count()
-    if size_hint_bytes:
-        from iq_to_hdl_migration_spark.operators.planning import (
-            suggest_partitions)
-        source = source.repartition(suggest_partitions(size_hint_bytes))
 
     if expected == 0:
         # V8 empty-table short-circuit (migration.py:1921-1931)

@@ -64,7 +64,12 @@ REGISTRY: dict[str, QuerySpec] = {}
 
 def register(name: str, oracle: str | None = None, doc: str = "",
              bench: bool = False, oracle_max_sf: float | None = None):
-    """Decorator: add a (spark, sf_dir) -> DataFrame callable to the registry."""
+    """Decorator: add a (spark, sf_dir) -> DataFrame callable to the
+    registry. A name already registered raises: a second definition
+    would otherwise silently replace the first, oracle included."""
+    if name in REGISTRY:
+        raise ValueError(f"query {name!r} is already registered")
+
     def wrap(fn):
         REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle,
                                    doc=doc, bench=bench,

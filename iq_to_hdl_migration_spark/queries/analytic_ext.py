@@ -1061,110 +1061,6 @@ def trend_seasonal_decomposition_monthly(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# ABC classification (inventory/revenue Pareto classes) WITHOUT a
-# global sort: the textbook method ranks every part by revenue
-# descending and walks the cumulative share — a single-partition sort
-# at 100 TB. The scalable restatement is the value-HISTOGRAM
-# discipline the exact-Gini query established: quantize per-part
-# revenue to BIGINT 1e-4 units, band by integer bit-length (the
-# libm-free log2 — ~60 bounded bands), and run the cumulative walk
-# over the BAND spine descending. Whole bands classify by the revenue
-# mass strictly above them (cum_before), in pure integer comparisons:
-# A while cum_before < 80% of total, B while < 95%, else C — the
-# band-granularity rule is documented and identical in both engines.
-# One partkey shuffle + one bounded-domain window. Classes report
-# part count, revenue mass, and exact integer ppm share.
-# ---------------------------------------------------------------------------
-
-@register(
-    "part_abc_classification",
-    oracle="""
-    WITH pr AS (
-        SELECT l_partkey,
-               CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount)
-                                   * 10000) AS BIGINT)) AS BIGINT) AS rq
-        FROM lineitem GROUP BY l_partkey
-    ),
-    bl AS (
-        SELECT rq, CASE WHEN rq <= 0 THEN 0
-                        ELSE length(bin(rq)) END AS b
-        FROM pr
-    ),
-    banded AS (
-        -- 16 sub-bands per octave: band = 32*bitlen + mantissa top
-        -- bits, monotone in rq, ~1000 bounded bands at any scale
-        SELECT CAST(32 * b + CASE WHEN b <= 5 THEN rq
-                                  ELSE rq >> (b - 5) END AS INTEGER)
-                   AS band,
-               CAST(COUNT(*) AS BIGINT) AS n_parts,
-               CAST(SUM(rq) AS BIGINT) AS rev
-        FROM bl GROUP BY 1
-    ),
-    walked AS (
-        SELECT band, n_parts, rev,
-               COALESCE(SUM(rev) OVER (ORDER BY band DESC
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   0) AS cum_before,
-               SUM(rev) OVER () AS total
-        FROM banded
-    )
-    SELECT CASE WHEN 100 * cum_before < 80 * total THEN 'A'
-                WHEN 100 * cum_before < 95 * total THEN 'B'
-                ELSE 'C' END AS abc_class,
-           CAST(COUNT(*) AS BIGINT) AS n_bands,
-           CAST(SUM(n_parts) AS BIGINT) AS n_parts,
-           CAST(SUM(rev) AS BIGINT) AS revenue_units,
-           CAST((100 * SUM(rev)) // MAX(total) AS BIGINT)
-               AS revenue_share_pct
-    FROM walked GROUP BY 1
-    """,
-    doc="ABC revenue classification without a global part sort: per-"
-        "part revenue quantized to BIGINT 1e-4 units, banded sub-octave "
-        "(band = 32*bit_length + 5-bit mantissa, ~1000 bounded bands), "
-        "cumulative walk over the band "
-        "spine descending, whole bands classified by integer share "
-        "comparisons (A <80%, B <95%, C rest) — the exact-Gini "
-        "histogram discipline applied to Pareto classing; one partkey "
-        "shuffle + one bounded-domain window. Overflow bound (honest): "
-        "the share multiplier is 100, so 100*total_units must fit "
-        "int64 — holds past 10^16 revenue units (~$10^12 at 1e-4 "
-        "quantization, beyond the 100 TB corpus); DuckDB sums to "
-        "HUGEINT natively",
-)
-def part_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    pr = (li.groupBy("l_partkey")
-          .agg(F.expr("CAST(SUM(CAST(FLOOR(l_extendedprice * "
-                      "(1 - l_discount) * 10000) AS BIGINT)) AS BIGINT)")
-               .alias("rq")))
-    b = (F.when(F.col("rq") <= 0, 0)
-         .otherwise(F.length(F.bin(F.col("rq")))))
-    band = (32 * b + F.when(b <= 5, F.col("rq"))
-            .otherwise(F.expr("rq >> (CASE WHEN rq <= 0 THEN 0 "
-                              "ELSE length(bin(rq)) END - 5)"))
-            ).cast("int")
-    banded = (pr.groupBy(band.alias("band"))
-              .agg(F.count(F.lit(1)).cast("bigint").alias("n_parts"),
-                   F.sum("rq").cast("bigint").alias("rev")))
-    w_cum = (Window.orderBy(F.desc("band"))
-             .rowsBetween(Window.unboundedPreceding, -1))
-    w_all = Window.partitionBy()
-    walked = banded.select(
-        "band", "n_parts", "rev",
-        F.coalesce(F.sum("rev").over(w_cum), F.lit(0)).alias("cum_before"),
-        F.sum("rev").over(w_all).alias("total"))
-    cls = (F.when(100 * F.col("cum_before") < 80 * F.col("total"), "A")
-           .when(100 * F.col("cum_before") < 95 * F.col("total"), "B")
-           .otherwise("C"))
-    return (walked.groupBy(cls.alias("abc_class"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_bands"),
-                 F.sum("n_parts").cast("bigint").alias("n_parts"),
-                 F.sum("rev").cast("bigint").alias("revenue_units"),
-                 F.expr("(100 * sum(rev)) div max(total)")
-                 .cast("bigint").alias("revenue_share_pct")))
-
-
-# ---------------------------------------------------------------------------
 # Pettitt changepoint test (round 12): completes the monthly-revenue
 # trend suite (Mann-Kendall answers IS there a trend, Theil-Sen how
 # steep, Pettitt WHERE the level shift sits). U_t = sum over pairs

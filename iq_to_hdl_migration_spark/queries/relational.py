@@ -174,7 +174,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # q5 — local supplier volume (TPC-H Q5 shape): 6-way join. nation/
-# region broadcast (const_dim); customer/supplier are scaled_dim (AQE
+# region broadcast (F.broadcast); customer/supplier are scaled_dim (AQE
 # decides); orders⋈lineitem shuffles on orderkey at scale.
 # ---------------------------------------------------------------------------
 @register(

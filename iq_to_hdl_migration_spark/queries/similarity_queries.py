@@ -1596,7 +1596,6 @@ def dedup_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_M = 8          # subspaces (64 dims -> 8 dims each)
 _PQ_K = 4          # codes per subspace; seeds = vec_id 0..3 sub-vectors
 _PQ_ITERS = 2
-_PQ_SUB = None     # derived: sim.DIM // _PQ_M
 
 
 def _pq_oracle() -> str:

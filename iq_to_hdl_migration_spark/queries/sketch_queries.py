@@ -692,9 +692,6 @@ _CMS_W = 512     # buckets per row (<= 2^15 so fields stay independent)
 _CMS_TOPK = 20   # heavy hitters reported
 
 # seed i reads bits [15i, 15i+15) of the hash:  (hv div 2^(15i)) % w
-_CMS_BUCKETS_SPARK = ", ".join(
-    f"CAST((hv div {1 << (15 * i)}) % {_CMS_W} AS BIGINT)"
-    for i in range(_CMS_D))
 _CMS_STACK_SPARK = ("stack(" + str(_CMS_D) + ", " + ", ".join(
     f"{i}, CAST((hv div {1 << (15 * i)}) % {_CMS_W} AS BIGINT)"
     for i in range(_CMS_D)) + ") AS (seed, bucket)")

@@ -11,9 +11,10 @@ output is oracle-expressible straight from `orders`:
     v3  overwrite  orders minus the 1-URGENT rows          (correction)
 
 100 TB notes: commits are per-delta parquet writes plus an O(1)
-manifest; rollback is metadata-only; the CDC diff (exceptAll) hashes
-full rows and shuffles once per side — at scale you diff a partition's
-snapshots, not the whole table (see sources/snapshots.py docstring).
+manifest; vacuum is the only file deletion; the CDC diff
+(exceptAll) hashes full rows and shuffles once per side — at scale
+you diff a partition's snapshots, not the whole table (see
+sources/snapshots.py docstring).
 The reference has no table-versioning layer (its checkpoint ledger,
 SURVEY §2 S14 / Migration/migration.py status table, tracks progress
 only); this is part of the beyond-reference lakehouse surface.
@@ -102,7 +103,7 @@ def _month(col: str):
         "diff_snapshots(v1,v2) and (v2,v3); inserts surface from the "
         "append, deletes from the correction. Manifest-based time "
         "travel reads exactly each version's file set — no directory "
-        "listing, rollback/vacuum metadata-only (sources/snapshots.py)",
+        "listing (sources/snapshots.py)",
     bench=True,
 )
 def snapshot_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:

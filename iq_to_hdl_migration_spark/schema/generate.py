@@ -4,8 +4,9 @@ The reference shells out to `iqunload` for reload.sql
 (migration.py:476-596) and rewrites it textually; Spark-first, the DDL
 is *generated* from catalog DataFrames — no external binary, no text
 munging — and the D-rule knowledge is already applied structurally
-(unsupported constructs simply aren't emitted; FK DDL is produced
-separately for post-load application, D4).
+(unsupported constructs simply aren't emitted). FK statements are
+captured for post-load application by the DDL rewrite engine
+(`RewriteResult.fk_statements`, D4).
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ def generate_spark_ddl(spark: SparkSession,
                        table_format: str = "parquet"
                        ) -> list[tuple[str, str]]:
     """[(owner_table, CREATE TABLE ...)] for every migratable table
-    (J3 inventory filter), plus FK ALTER statements captured last."""
+    (J3 inventory filter)."""
     inventory = (
         spark.table("systable").alias("t")
         .join(spark.table("sysuser").alias("u"),
@@ -55,22 +56,3 @@ def generate_spark_ddl(spark: SparkSession,
                f"USING {table_format}")
         out.append((key, ddl))
     return out
-
-
-def generate_fk_ddl(spark: SparkSession) -> list[tuple[str, str]]:
-    """D4 companion: FK constraints as informational post-load DDL
-    (parquet tables can't enforce them; emitted for engines that can)."""
-    fks = (
-        spark.table("sysforeignkey").alias("fk")
-        .join(spark.table("systable").alias("c"),
-              F.col("c.table_id") == F.col("fk.foreign_table_id"))
-        .join(spark.table("systable").alias("p"),
-              F.col("p.table_id") == F.col("fk.primary_table_id"))
-        .select(F.col("c.table_name").alias("child"),
-                F.col("p.table_name").alias("parent"))
-        .orderBy("child", "parent")
-        .collect())
-    return [(r.child,
-             f"ALTER TABLE `{r.child}` ADD FOREIGN KEY REFERENCES "
-             f"`{r.parent}` /* informational: applied post-load */")
-            for r in fks]

@@ -126,18 +126,3 @@ def bucketed_join(spark: SparkSession, sf_dir: str, left: str, right: str,
     lt = spark.table(bucketed_name(left, n_buckets, tag))
     rt = spark.table(bucketed_name(right, n_buckets, tag))
     return lt.join(rt, F.col(left_key) == F.col(right_key))
-
-
-def order_lineitem_revenue_bucketed(spark: SparkSession, sf_dir: str,
-                                    n_buckets: int = 16) -> DataFrame:
-    """The fact x fact workhorse (orders x lineitem on orderkey ->
-    per-orderpriority revenue) over bucketed staging: the join carries
-    no shuffle, so the only exchange left is the tiny final rollup."""
-    stage_bucketed(spark, sf_dir, n_buckets=n_buckets)
-    joined = bucketed_join(spark, sf_dir, "orders", "lineitem",
-                           "o_orderkey", "l_orderkey", n_buckets)
-    return (joined.groupBy("o_orderpriority")
-            .agg(F.sum((F.col("l_extendedprice")
-                        * (F.lit(1) - F.col("l_discount")))
-                       .cast("decimal(18,4)")).alias("revenue"),
-                 F.count(F.lit(1)).alias("n_lines")))

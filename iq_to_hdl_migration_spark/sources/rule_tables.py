@@ -5,17 +5,15 @@ login_policy.csv; loaders migration.py:620-635,992-999).
 
 The packaged files here are representative fixtures with the same
 shape; production drops in the full vendor lists unchanged. Rule
-tables are tiny -> loaded driver-side (lists) and optionally exposed
-as DataFrames for joins (J16 options∩rules).
+tables are tiny -> loaded driver-side as lists and dicts; the catalog
+fixture exposes the option lists as the `dbopts_rules` and
+`hosparams_rules` tables for joins (J16 options∩rules), and the DDL
+engine reads the login-policy defaults (D11).
 """
 
 from __future__ import annotations
 
 from pathlib import Path
-
-from pyspark.sql import DataFrame, SparkSession
-
-from iq_to_hdl_migration_spark.session import local_frame
 
 _DATA = Path(__file__).resolve().parent / "data"
 
@@ -37,8 +35,3 @@ def load_login_policy_defaults(
             out[k.strip()] = v.strip()
     return out
 
-
-def options_rules_df(spark: SparkSession,
-                     name: str = "dbopts_noncustomer.csv") -> DataFrame:
-    return local_frame(spark, [(n,) for n in load_option_names(name)],
-                       "option_name string")

@@ -1,8 +1,8 @@
-"""Versioned snapshot tables: manifest-based time travel, rollback,
+"""Versioned snapshot tables: manifest-based time travel, CDC diffs
 and vacuum — the lakehouse table layer a 100 TB migration target needs
 (the reference's checkpoint/resume ledger, SURVEY §2 S14, tracks
-*progress*; this tracks *table states* so a bad load can be undone
-without re-extracting).
+*progress*; this tracks *table states*, so an earlier version stays
+readable after a bad load).
 
 Layout under a table directory:
 
@@ -14,11 +14,9 @@ Layout under a table directory:
 A manifest lists every file visible at that version, so a read is
 "load manifest, scan exactly those files" — O(1) metadata, no
 directory listing of the whole table, and old versions stay readable
-until vacuumed.  Appends never rewrite existing data; overwrites and
-rollbacks only write a new manifest (rollback reuses the old
-version's files — it is a metadata-only operation, instant at any
-table size).  Vacuum deletes data files no manifest in the retained
-window references.
+until vacuumed.  Appends never rewrite existing data; an overwrite
+starts a fresh file list.  Vacuum deletes data files no manifest in
+the retained window references.
 
 Single-writer by design (like the reference's migrate pipeline);
 manifest IO is driver-local and fail-closed on non-local URIs with a
@@ -30,7 +28,6 @@ isolation, reduced to the minimum a migration pipeline needs.
 from __future__ import annotations
 
 import json
-import os
 import pathlib
 import shutil
 
@@ -38,8 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from iq_to_hdl_migration_spark.session import local_frame
 
-__all__ = ["write_snapshot", "read_snapshot", "versions", "rollback",
-           "vacuum", "current_version", "diff_snapshots"]
+__all__ = ["write_snapshot", "read_snapshot", "versions", "vacuum",
+           "current_version", "diff_snapshots"]
 
 
 def _local_dir(table_dir: str) -> pathlib.Path:
@@ -137,21 +134,6 @@ def read_snapshot(spark: SparkSession, table_dir: str,
     return spark.read.parquet(*(str(root / f) for f in m["files"]))
 
 
-def rollback(table_dir: str, to_version: int) -> int:
-    """Restore the table to `to_version`'s state as a NEW version —
-    metadata-only (reuses the old files), instant at any table size,
-    and itself undoable."""
-    old = _load_manifest(table_dir, to_version)
-    parent = current_version(table_dir)
-    new_v = parent + 1
-    _write_manifest(table_dir, {
-        "version": new_v, "parent": parent, "op": f"rollback:{to_version}",
-        "files": old["files"], "n_rows": old["n_rows"],
-        "schema": old["schema"],
-    })
-    return new_v
-
-
 def vacuum(table_dir: str, keep_last: int = 2) -> dict:
     """Delete data files referenced by NO manifest in the retained
     window (the latest `keep_last` versions), and drop the expired
@@ -217,7 +199,7 @@ def diff_snapshots(spark: SparkSession, table_dir: str,
     # no exceptAll over either side. This is multiset-exact:
     # (old ⊎ delta) ∖ old = delta and old ∖ (old ⊎ delta) = ∅, which
     # is precisely what the general path computes. Covers append
-    # chains (inserts only), rollbacks to an ancestor (deletes only),
+    # chains (inserts only), a diff back to an ancestor (deletes only),
     # and identical file sets (empty feed).
     if old_files <= new_files:
         ins = _read(sorted(new_files - old_files), new_m["schema"])

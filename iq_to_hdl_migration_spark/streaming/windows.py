@@ -36,10 +36,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from iq_to_hdl_migration_spark.session import local_frame
 from iq_to_hdl_migration_spark.sources.tables import load_table
 
-# Canonical post-normalization schema (what every operator below sees).
-EVENTS_SCHEMA = ("event_id bigint, ts timestamp, user_id bigint, "
-                 "event_type string, value double, props string")
-
 GAP_US = 1800 * 1_000_000
 
 SESSION_OUT_SCHEMA = "user_id bigint, n_sessions bigint, n_events bigint"
@@ -181,38 +177,6 @@ def streaming_purchase_click_join(spark: SparkSession, sf_dir: str,
     events = read_events_stream(spark, sf_dir)
     run_to_memory(purchase_click_join_stream(events), _query_name, "append")
     return spark.table(_query_name)
-
-
-def incremental_dedup_to_parquet(spark: SparkSession, src_dir: str,
-                                 sink_dir: str, ckpt_dir: str,
-                                 schema: str | None = None) -> None:
-    """Checkpointed incremental pipeline: file-source stream ->
-    watermarked exact dedup -> exactly-once parquet sink.
-
-    This is the streaming form of the reference's resume ledger (S14 /
-    V5, migration.py:1940-2049): progress lives in the checkpoint, so a
-    stopped pipeline re-run with the same `ckpt_dir` resumes from the
-    last committed micro-batch — already-processed input files are
-    never re-emitted, and duplicate/late re-sends of old rows are
-    dropped by the dedup state restored from the checkpoint.  Each call
-    drains whatever input is currently available (availableNow) and
-    returns; call again after more files arrive.  Use
-    `.option("maxFilesPerTrigger", n)` on the reader for rate-limited
-    backfills at scale.
-    """
-    from iq_to_hdl_migration_spark.sources.tables import normalize_event_ts
-
-    schema = schema or _raw_events_schema(spark, src_dir)
-    raw = spark.readStream.schema(schema).parquet(src_dir)
-    events = normalize_event_ts(raw)
-    q = (dedup_stream(events)
-         .writeStream.format("parquet")
-         .option("path", sink_dir)
-         .option("checkpointLocation", ckpt_dir)
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
 
 
 def streaming_sessionization(spark: SparkSession, sf_dir: str,
@@ -570,81 +534,6 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
 
     _drain(spark, arrivals_dir, ckpt_dir, _process, _query_name)
     return spark.read.parquet(*_batch_parts(pairs_dir))
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas needs the protobuf runtime for its
-    state-server protocol; this container ships pyspark without it, so
-    the operator below is environment-gated (the brief's import-try
-    rule) — on a full install the equality test in
-    tests/test_streaming.py runs instead of skipping."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def user_spend_stream_tws(events: DataFrame) -> DataFrame:
-    """Per-user running purchase totals via transformWithStateInPandas
-    (Spark 4.x's arbitrary-state API, successor to
-    applyInPandasWithState — which stream_sessionization covers and
-    the driver checks): ValueState holds (n, cents) per user; each
-    micro-batch emits the updated running totals. Spend accumulates as
-    integer cents (round(value * 100) per row), exactly like the
-    fixed-point aggregates elsewhere, so the drained result is
-    value-comparable to a batch SQL oracle. Requires protobuf (see
-    tws_available); not a registry entry because this container cannot
-    run it — the registered arbitrary-state coverage is the
-    applyInPandasWithState twin."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    class _Spend(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState(
-                "tot", "n BIGINT, cents BIGINT")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-            n, cents = 0, 0
-            if self._st.exists():
-                prev = self._st.get()
-                n, cents = int(prev[0]), int(prev[1])
-            for pdf in rows:
-                n += len(pdf)
-                cents += int(pdf["value"].astype("float64")
-                             .mul(100.0).round().astype("int64").sum())
-            self._st.update((n, cents))
-            yield pd.DataFrame({"user_id": [int(key[0])],
-                                "n_purchases": [n],
-                                "spend_cents": [cents]})
-
-        def close(self) -> None:
-            pass
-
-    purchases = (events.where(F.col("event_type") == "purchase")
-                 .select(F.col("user_id").cast("bigint").alias("user_id"),
-                         F.col("value").cast("double").alias("value")))
-    return purchases.groupBy("user_id").transformWithStateInPandas(
-        _Spend(),
-        outputStructType=("user_id bigint, n_purchases bigint, "
-                          "spend_cents bigint"),
-        outputMode="append",
-        timeMode="none")
-
-
-def streaming_user_spend_tws(spark: SparkSession, sf_dir: str,
-                             _query_name: str = "stream_tws_spend"
-                             ) -> DataFrame:
-    events = read_events_stream(spark, sf_dir)
-    run_to_memory(user_spend_stream_tws(events), _query_name, "append")
-    # running totals are monotone non-decreasing (counts; values >= 0),
-    # so the final per-user state is the max of the emitted rows
-    return (spark.table(_query_name)
-            .groupBy("user_id")
-            .agg(F.max("n_purchases").alias("n_purchases"),
-                 F.max("spend_cents").alias("spend_cents")))
 
 
 # ---------------------------------------------------------------------------

@@ -73,12 +73,15 @@ def main() -> None:
     run("oracle-type lint", [sys.executable, "scripts/lint_oracle_types.py"])
 
     # 2. suite at the default sf
-    run("suite@sf0.001", [sys.executable, "-m", "pytest", "tests/", "-x", "-q"])
+    run("suite@sf0.001",
+        [sys.executable, "-m", "pytest", "tests/", "-x", "-q",
+         "--durations=15"])
 
     # 3. suite at the driver's gate scale
     if not fast:
         run("suite@sf0.01",
-            [sys.executable, "-m", "pytest", "tests/", "-x", "-q"],
+            [sys.executable, "-m", "pytest", "tests/", "-x", "-q",
+             "--durations=15"],
             env={"SPARK_GRAFT_TEST_SF_DIR": "/root/testdata/sf0.01"})
 
     # 4. the benchmark still runs, checks its answers and reports every

@@ -1,5 +1,6 @@
-"""Bucketed staging: the co-located fact-join path must be
-shuffle-free and produce the same answer as the plain-parquet join."""
+"""Bucketed staging: the co-located fact-join path
+(`bucketed_colocated_join_revenue`) must be shuffle-free and produce
+the same answer as the plain-parquet join."""
 
 from __future__ import annotations
 
@@ -7,9 +8,14 @@ import re
 
 import pyspark.sql.functions as F
 
-from iq_to_hdl_migration_spark.sources.bucketed import (
-    order_lineitem_revenue_bucketed, stage_bucketed)
+from iq_to_hdl_migration_spark.queries import load_all
+from iq_to_hdl_migration_spark.queries.skew_queries import _agg
+from iq_to_hdl_migration_spark.sources.bucketed import stage_bucketed
 from iq_to_hdl_migration_spark.sources.tables import load_table
+
+
+def _bucketed_revenue(spark, sf_dir):
+    return load_all()["bucketed_colocated_join_revenue"].fn(spark, sf_dir)
 
 
 def _executed_plan(df) -> str:
@@ -24,7 +30,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
     thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        out = order_lineitem_revenue_bucketed(spark, sf_dir)
+        out = _bucketed_revenue(spark, sf_dir)
         # AQE's toString shows Final + Initial plans; judge the final
         plan = _executed_plan(out).split("== Initial Plan ==")[0]
     finally:
@@ -41,20 +47,13 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
 
 
 def test_bucketed_join_matches_plain_join(spark, sf_dir):
-    got = {r.o_orderpriority: (r.revenue, r.n_lines)
-           for r in order_lineitem_revenue_bucketed(spark, sf_dir)
-           .collect()}
+    got = {r.o_orderpriority: (r.revenue, r.n_items)
+           for r in _bucketed_revenue(spark, sf_dir).collect()}
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    want = {r.o_orderpriority: (r.revenue, r.n_lines)
-            for r in orders
-            .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-            .groupBy("o_orderpriority")
-            .agg(F.sum((F.col("l_extendedprice")
-                        * (F.lit(1) - F.col("l_discount")))
-                       .cast("decimal(18,4)")).alias("revenue"),
-                 F.count(F.lit(1)).alias("n_lines"))
-            .collect()}
+    want = {r.o_orderpriority: (r.revenue, r.n_items)
+            for r in _agg(orders.join(
+                li, F.col("o_orderkey") == F.col("l_orderkey"))).collect()}
     assert got == want and len(got) > 0
 
 

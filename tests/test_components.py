@@ -1,11 +1,8 @@
-"""Connected components + canonical dedup: planted-graph correctness."""
+"""Connected components: planted-graph correctness."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
-from iq_to_hdl_migration_spark.operators.components import (
-    connected_components, dedup_keep_canonical)
+from iq_to_hdl_migration_spark.operators.components import connected_components
 
 
 def _cc(spark, edges):
@@ -34,22 +31,3 @@ def test_long_chain_converges(spark):
 def test_bridged_clusters_merge(spark):
     comp = _cc(spark, [(1, 2), (3, 4), (2, 3)])
     assert set(comp.values()) == {1}
-
-
-def test_dedup_keep_canonical_planted(spark, sf_dir):
-    from iq_to_hdl_migration_spark.operators.dedup import lsh_candidate_pairs
-    from iq_to_hdl_migration_spark.sources.tables import load_table
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # plant two exact copies of an existing doc under new ids
-    src = docs.limit(1).select(F.col("text"))
-    planted = docs.unionByName(
-        src.withColumn("doc_id", F.lit(9_000_001)).select("doc_id", "text")
-    ).unionByName(
-        src.withColumn("doc_id", F.lit(9_000_002)).select("doc_id", "text"))
-    pairs = lsh_candidate_pairs(planted, threshold=0.9)
-    kept = dedup_keep_canonical(planted, pairs)
-    kept_ids = {r.doc_id for r in kept.select("doc_id").collect()}
-    # the two planted copies must be dropped, their original kept
-    assert 9_000_001 not in kept_ids and 9_000_002 not in kept_ids
-    orig_id = docs.limit(1).collect()[0].doc_id
-    assert orig_id in kept_ids

@@ -128,6 +128,27 @@ def test_login_policy_cloned_non_default(result):
     assert 'ALTER USER "analyst2" login policy "c_root"' in txt
 
 
+def test_login_policy_defaults_come_from_rule_table(tmp_path, monkeypatch):
+    """D11 compares the root policy against the packaged
+    login_policy.csv: a table whose defaults match the fixture's root
+    block (max_connections = 50) leaves root alone."""
+    from iq_to_hdl_migration_spark.sources import rule_tables
+
+    lines = FIXTURE.read_text().splitlines()
+
+    def clones():
+        return [h for h in E.rewrite(lines, []).hits
+                if (h["rule"], h["action"]) == ("LOGIN POLICY",
+                                                "clone_c_root")]
+
+    assert clones()
+    table = (rule_tables._DATA / "login_policy.csv").read_text()
+    (tmp_path / "login_policy.csv").write_text(table.replace(
+        "max_connections=UNLIMITED", "max_connections=50"))
+    monkeypatch.setattr(rule_tables, "_DATA", tmp_path)
+    assert clones() == []
+
+
 def test_create_dbspace_commented(result):
     assert '-- CREATE DBSPACE "user_dsp3"' in _txt(result)
 

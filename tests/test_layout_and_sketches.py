@@ -1,65 +1,14 @@
-"""Layout: partition pruning must be visible in the plan and in the
-file counts. Sketches: error bounds vs exact, and the lossless-merge
-identity for HLL union."""
+"""Sketches: error bounds vs exact, and the lossless-merge identity
+for HLL union."""
 
 from __future__ import annotations
-
-import glob
 
 import pyspark.sql.functions as F
 
 from iq_to_hdl_migration_spark.queries import load_all
-from iq_to_hdl_migration_spark.sources.layout import (
-    compact, scan_stats, write_partitioned)
 from iq_to_hdl_migration_spark.sources.tables import load_table
 
 REGISTRY = load_all()
-
-
-def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "day", F.to_date("ts"))
-    path = str(tmp_path / "events_by_day")
-    write_partitioned(ev, path, "day", cluster_col="user_id")
-
-    back = spark.read.parquet(path)
-    one_day = back.filter(F.col("day") == "2024-01-05")
-    st = scan_stats(one_day)
-    assert st["has_partition_filters"], st["plan"]
-    # pruned scan reads exactly the one day's files
-    n_days = ev.select("day").distinct().count()
-    all_files = glob.glob(f"{path}/day=*/*.parquet")
-    day_files = glob.glob(f"{path}/day=2024-01-05/*.parquet")
-    assert len(all_files) >= n_days
-    assert 1 <= len(day_files) <= 2
-    # count parity with source
-    assert one_day.count() == ev.filter(F.col("day") == "2024-01-05").count()
-
-
-def test_clustered_scan_pushes_filters(spark, sf_dir, tmp_path):
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "day", F.to_date("ts"))
-    path = str(tmp_path / "events_clustered")
-    write_partitioned(ev, path, "day", cluster_col="user_id")
-    scan = spark.read.parquet(path).filter(F.col("user_id") == 7)
-    st = scan_stats(scan)
-    assert st["has_pushed_filters"], st["plan"]
-
-
-def test_compact_reduces_files(spark, sf_dir, tmp_path):
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "day", F.to_date("ts"))
-    frag = str(tmp_path / "frag")
-    # deliberately fragmented: ~8 files per day partition
-    (ev.repartition(8).write.mode("overwrite")
-        .partitionBy("day").parquet(frag))
-    compacted = str(tmp_path / "compacted")
-    compact(spark, frag, compacted, "day", files_per_partition=1)
-    n_frag = len(glob.glob(f"{frag}/day=*/*.parquet"))
-    n_comp = len(glob.glob(f"{compacted}/day=*/*.parquet"))
-    assert n_comp < n_frag / 3
-    assert (spark.read.parquet(compacted).count()
-            == spark.read.parquet(frag).count())
 
 
 def test_hll_error_bound_and_lossless_merge(spark, sf_dir):

@@ -360,7 +360,7 @@ def test_containment_pairs_no_cartesian_no_group_buffer(spark, sf_dir):
 # autoBroadcastJoinThreshold = -1 so the planner can only broadcast
 # what is *hinted*: scaled tables must fall back to a shuffle join
 # (proving no stray hint), nation/region must still broadcast (proving
-# the const_dim hint survives).
+# the F.broadcast hint survives).
 # ---------------------------------------------------------------------------
 
 _THRESH_KEYS = (
@@ -387,7 +387,7 @@ def no_auto_broadcast(spark):
 
 
 @pytest.mark.parametrize("name,n_const_hints", [
-    # n_const_hints = the number of const_dim/F.broadcast hints the
+    # n_const_hints = the number of F.broadcast hints the
     # query's source carries (nation/region/1-row aggregates ONLY)
     ("q3_shipping_priority", 0),
     ("q5_region_volume", 2),          # nation + region
@@ -443,7 +443,7 @@ def test_overlap_probe_side_not_hard_broadcast(spark, sf_dir,
 def test_constant_dims_still_broadcast(spark, sf_dir, no_auto_broadcast, name):
     plan = final_plan(REGISTRY[name].fn(spark, sf_dir))
     assert "BroadcastHashJoin" in plan, (
-        f"{name}: nation/region const_dim hint was lost — constant "
+        f"{name}: nation/region F.broadcast hint was lost — constant "
         "dims must broadcast even with auto-broadcast disabled")
 
 

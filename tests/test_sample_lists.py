@@ -76,3 +76,14 @@ def test_load_all_raises_on_broken_module(monkeypatch):
                         [*queries._QUERY_MODULES, "_no_such_query_module"])
     with pytest.raises(ModuleNotFoundError):
         queries.load_all()
+
+
+def test_register_refuses_duplicate_name():
+    """A second registration of a name raises instead of silently
+    replacing the first definition (and its oracle)."""
+    from iq_to_hdl_migration_spark.queries import REGISTRY, register
+
+    spec = load_all()["q1_pricing_summary"]
+    with pytest.raises(ValueError, match="q1_pricing_summary"):
+        register("q1_pricing_summary")(lambda spark, sf_dir: None)
+    assert REGISTRY["q1_pricing_summary"] is spec

@@ -8,9 +8,8 @@ from pyspark.sql.types import (BinaryType, DecimalType, IntegerType,
                                StringType)
 
 from iq_to_hdl_migration_spark.catalog.fixture import ensure_catalog_views
-from iq_to_hdl_migration_spark.config import from_dict, validate_config
-from iq_to_hdl_migration_spark.schema.generate import (
-    generate_fk_ddl, generate_spark_ddl)
+from iq_to_hdl_migration_spark.config import validate_config
+from iq_to_hdl_migration_spark.schema.generate import generate_spark_ddl
 from iq_to_hdl_migration_spark.schema.load import execute_ddl
 from iq_to_hdl_migration_spark.schema.typemap import (
     iq_domain_to_spark, spark_struct_for_table)
@@ -61,18 +60,10 @@ def test_execute_ddl_onerror_continue(spark):
                     on_error="abort")
 
 
-def test_fk_ddl_generated(spark):
-    ensure_catalog_views(spark)
-    fks = generate_fk_ddl(spark)
-    assert any("t_child" in k and "t_parent" in ddl for k, ddl in fks)
-
-
 def test_config_validation_rules():
     good = {"Host_Name": "h", "Port_Number": 2638, "Batch_Size_GB": 0,
             "Client_Num_Conn": 2, "Extract_Path": "/x"}
     assert all(v == "ok" for _f, _x, v, _d in validate_config(good))
-    cfg = from_dict(good)
-    assert cfg.client_num_conn == 2
 
     bad = dict(good, Batch_Size_GB=50, Client_Num_Conn=1,
                Extract_Path="x" * 91)
@@ -80,5 +71,3 @@ def test_config_validation_rules():
     assert verdicts["Batch_Size_GB"] == "FAIL"
     assert verdicts["Client_Num_Conn"] == "FAIL"
     assert verdicts["Extract_Path"] == "FAIL"
-    with pytest.raises(ValueError):
-        from_dict(bad)

@@ -1,5 +1,5 @@
-"""Snapshot table layer: time travel, rollback as metadata-only undo,
-vacuum reclaiming only unreferenced files, and fail-closed guards."""
+"""Snapshot table layer: time travel, vacuum reclaiming only
+unreferenced files, and fail-closed guards."""
 
 from __future__ import annotations
 
@@ -8,8 +8,7 @@ import pytest
 import pyspark.sql.functions as F
 
 from iq_to_hdl_migration_spark.sources.snapshots import (
-    current_version, read_snapshot, rollback, vacuum, versions,
-    write_snapshot)
+    current_version, read_snapshot, vacuum, versions, write_snapshot)
 from iq_to_hdl_migration_spark.sources.tables import load_table
 
 
@@ -19,7 +18,7 @@ def _nations(spark, sf_dir, lo, hi):
             .select("n_nationkey", "n_name"))
 
 
-def test_append_time_travel_and_rollback(spark, sf_dir, tmp_path):
+def test_append_overwrite_and_time_travel(spark, sf_dir, tmp_path):
     tdir = str(tmp_path / "tbl")
     v1 = write_snapshot(_nations(spark, sf_dir, 0, 9), tdir)
     v2 = write_snapshot(_nations(spark, sf_dir, 10, 14), tdir)
@@ -34,18 +33,7 @@ def test_append_time_travel_and_rollback(spark, sf_dir, tmp_path):
                         mode="overwrite")
     assert read_snapshot(spark, tdir).count() == 5
     assert read_snapshot(spark, tdir, version=2).count() == 15
-
-    # rollback to v2 is a new version with v2's exact content
-    v4 = rollback(tdir, 2)
-    assert v4 == 4 and current_version(tdir) == 4
-    got = sorted(r.n_nationkey for r in read_snapshot(spark, tdir).collect())
-    want = sorted(r.n_nationkey
-                  for r in read_snapshot(spark, tdir, version=2).collect())
-    assert got == want
-    # rollback reused v2's files — no new data files were written
-    assert versions(tdir)[-1]["files"] == versions(tdir)[1]["files"]
-    assert versions(tdir)[-1]["op"] == "rollback:2"
-    assert v3 == 3  # history is linear and complete
+    assert v3 == 3 and current_version(tdir) == 3  # linear history
 
 
 def test_manifest_rowcounts_audited(spark, sf_dir, tmp_path):
@@ -142,13 +130,12 @@ def test_diff_manifest_fast_path_matches_exceptall(spark, sf_dir,
     assert got_ins == want_ins == list(range(5, 15))
     assert d12.where("_change = 'delete'").count() == 0
 
-    # rollback to v1 exposes a SUBSET of v2's files: deletes only,
+    # diffing back to v1 exposes a SUBSET of v2's files: deletes only,
     # still manifest-only
-    rollback(tdir, 1)                                             # v3
-    d23 = diff_snapshots(spark, tdir, 2, 3)
-    plan23 = d23._jdf.queryExecution().executedPlan().toString()
-    assert "Except" not in plan23
-    assert d23.where("_change = 'insert'").count() == 0
+    d21 = diff_snapshots(spark, tdir, 2, 1)
+    plan21 = d21._jdf.queryExecution().executedPlan().toString()
+    assert "Except" not in plan21
+    assert d21.where("_change = 'insert'").count() == 0
     assert sorted(r.n_nationkey for r in
-                  d23.where("_change = 'delete'").collect()) \
+                  d21.where("_change = 'delete'").collect()) \
         == list(range(5, 15))

@@ -53,35 +53,6 @@ def test_streaming_dedup_matches_batch_distinct(spark, sf_dir):
     assert streamed.select("event_id").distinct().count() == streamed.count()
 
 
-def test_checkpoint_resume_exactly_once(spark, sf_dir, tmp_path):
-    """Two-phase arrival with a re-send of old rows: the second run
-    resumes from the checkpoint, emits only the genuinely-new rows,
-    and the sink ends with zero duplicates."""
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-
-    raw = load_table(spark, sf_dir, "events")
-    split_id = raw.approxQuantile("event_id", [0.5], 0.0)[0]
-    phase1 = raw.filter(F.col("event_id") <= split_id)
-    phase2_new = raw.filter(F.col("event_id") > split_id)
-
-    phase1.write.mode("append").parquet(src)
-    W.incremental_dedup_to_parquet(spark, src, sink, ckpt)
-    n1 = spark.read.parquet(sink).count()
-    assert n1 == phase1.count()
-
-    # phase 2: new rows plus a re-send of 100 old (already-sunk) rows —
-    # the resumed watermark/dedup state must reject the re-sends
-    phase2_new.write.mode("append").parquet(src)
-    phase1.limit(100).write.mode("append").parquet(src)
-    W.incremental_dedup_to_parquet(spark, src, sink, ckpt)
-
-    out = spark.read.parquet(sink)
-    assert out.count() == raw.count()                      # no loss
-    assert out.select("event_id").distinct().count() == raw.count()  # no dupes
-
-
 def test_stream_stream_join_matches_batch(spark, sf_dir):
     """Stream-stream interval join == the same predicate as a batch
     join (every purchase x same-user clicks in the prior hour)."""
@@ -143,26 +114,6 @@ def test_incremental_dedup_twins_share_one_index_build(spark, sf_dir,
     reg["dedup_incremental_pairs"].fn(spark, sf_dir).collect()
     reg["stream_incremental_dedup"].fn(spark, sf_dir).collect()
     assert builds == [1]
-
-
-def test_tws_user_spend_equals_batch(spark, sf_dir):
-    """transformWithStateInPandas twin == batch per-user purchase
-    totals. Skips where the protobuf runtime the state server needs is
-    absent (this container); runs on a full install."""
-    if not W.tws_available():
-        pytest.skip("protobuf runtime absent: transformWithState "
-                    "state server cannot start in this container")
-
-    got = sorted(map(tuple, W.streaming_user_spend_tws(spark, sf_dir)
-                     .collect()))
-    ev = load_table(spark, sf_dir, "events")
-    want = sorted(map(tuple, (
-        ev.where(F.col("event_type") == "purchase")
-        .groupBy(F.col("user_id").cast("bigint").alias("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_purchases"),
-             F.sum(F.expr("CAST(round(value * 100) AS BIGINT)"))
-             .cast("bigint").alias("spend_cents"))).collect()))
-    assert got == want
 
 
 def test_scd2_state_survives_restart(spark, sf_dir, tmp_path):
