@@ -151,6 +151,49 @@ def _cap_buckets(df: DataFrame, bucket_cols: list[str],
             .where(F.col("_rn") <= cap).drop("_rn"))
 
 
+def _bands(sigs: DataFrame) -> DataFrame:
+    """One (id, minhash, band, band_sig) row per signed document per
+    band: band b's signature is minhash rows [b*R, (b+1)*R)."""
+    return (sigs.select(
+                "id", "minhash",
+                F.explode(F.sequence(F.lit(0), F.lit(BANDS - 1)))
+                .alias("band"))
+            .withColumn("band_sig", F.expr(
+                f"slice(minhash, band * {ROWS_PER_BAND} + 1,"
+                f" {ROWS_PER_BAND})")))
+
+
+# fraction of agreeing minhash positions between two signature arrays
+_EST_AGREE = ("CAST(size(filter(zip_with({a}, {b}, (s, t) -> s = t),"
+              " v -> v)) AS DOUBLE) / CAST(size({a}) AS DOUBLE)")
+
+
+def _bucket_pairs(capped: DataFrame, threshold: float) -> DataFrame:
+    """Candidate pairs (id_a < id_b, est_jaccard >= threshold) within
+    capped (band, band_sig) buckets: one shuffle groups each bucket,
+    and pairs are exploded inside it, never from a corpus self-join.
+    est_jaccard is computed inside the bucket pass, BEFORE the pair
+    dedup: the dropDuplicates shuffle then moves three scalar columns
+    per candidate instead of two 32-element signature arrays, and the
+    threshold filter has already discarded most candidates."""
+    est = _EST_AGREE.format(a="x.minhash", b="y.minhash")
+    buckets = (capped.groupBy("band", "band_sig")
+               .agg(F.collect_list(F.struct("id", "minhash"))
+                    .alias("members"))
+               .where(F.size("members") > 1))
+    return (
+        buckets.select(F.explode(F.expr(f"""
+            flatten(transform(members, (x, i) ->
+                transform(slice(members, i + 2, size(members)), y ->
+                    struct(least(x.id, y.id) AS id_a,
+                           greatest(x.id, y.id) AS id_b,
+                           {est} AS est_jaccard))))
+        """)).alias("p"))
+        .select("p.id_a", "p.id_b", "p.est_jaccard")
+        .where(F.col("est_jaccard") >= threshold)
+        .dropDuplicates(["id_a", "id_b"]))
+
+
 def minhash_bucket_census(df: DataFrame, id_col: str = "doc_id",
                           text_col: str = "text",
                           cap: int = BUCKET_CAP) -> DataFrame:
@@ -159,16 +202,7 @@ def minhash_bucket_census(df: DataFrame, id_col: str = "doc_id",
     counted here so an operator can re-shard or investigate the flood
     instead of discovering it as an executor OOM."""
     reps, _ = _exact_prepass(df, id_col, text_col)
-    sigs = with_minhash(reps, "text")
-    bands = (
-        sigs.select(
-            "id",
-            F.explode(F.sequence(F.lit(0), F.lit(BANDS - 1))).alias("band"),
-            "minhash")
-        .withColumn(
-            "band_sig",
-            F.expr(f"slice(minhash, band * {ROWS_PER_BAND} + 1, {ROWS_PER_BAND})"))
-    )
+    bands = _bands(with_minhash(reps, "text"))
     per_bucket = (bands.groupBy("band", "band_sig")
                   .agg(F.count(F.lit(1)).alias("n_members")))
     return (per_bucket.groupBy("band")
@@ -202,47 +236,22 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
       3. pairs exploded within capped buckets only; estimated
          similarity computed in the same pass — no join back against
          the corpus.
+    Steps 1-2 are `build_lsh_index` and step 3 is `index_pairs`, which
+    the stored pair graph runs over the memoized index instead
+    (`dedup_queries.minhash_pairs`).
     """
-    reps, links = _exact_prepass(df, id_col, text_col)
-    exact_pairs = links.withColumn("est_jaccard", F.lit(1.0))
-    sigs = with_minhash(reps, "text")
-    bands = (
-        sigs.select(
-            F.col("id"), "minhash",
-            F.explode(F.sequence(F.lit(0), F.lit(BANDS - 1))).alias("band"))
-        .withColumn(
-            "band_sig",
-            F.expr(f"slice(minhash, band * {ROWS_PER_BAND} + 1, {ROWS_PER_BAND})"))
-    )
-    capped = _cap_buckets(bands, ["band", "band_sig"], bucket_cap)
-    buckets = (
-        capped.groupBy("band", "band_sig")
-        .agg(F.collect_list(F.struct("id", "minhash")).alias("members"))
-        .where(F.size("members") > 1)
-    )
-    # est_jaccard is computed inside the bucket pass, BEFORE the pair
-    # dedup: the dropDuplicates shuffle then moves three scalar columns
-    # per candidate instead of two 32-element signature arrays, and the
-    # threshold filter has already discarded most candidates.
-    pairs = (
-        buckets.select(
-            F.explode(F.expr("""
-                flatten(transform(members, (x, i) ->
-                    transform(slice(members, i + 2, size(members)), y ->
-                        struct(least(x.id, y.id) AS id_a,
-                               greatest(x.id, y.id) AS id_b,
-                               CAST(size(filter(
-                                   zip_with(x.minhash, y.minhash,
-                                            (a, b) -> a = b), v -> v))
-                                    AS DOUBLE)
-                               / CAST(size(x.minhash) AS DOUBLE)
-                               AS est_jaccard))))
-            """)).alias("p"))
-        .select("p.id_a", "p.id_b", "p.est_jaccard")
-        .where(F.col("est_jaccard") >= threshold)
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return pairs.unionByName(exact_pairs)
+    bands, _digests, links = build_lsh_index(df, id_col, text_col,
+                                             bucket_cap)
+    return index_pairs(bands, links, threshold)
+
+
+def index_pairs(bands: DataFrame, links: DataFrame,
+                threshold: float) -> DataFrame:
+    """The candidate pairs of a `build_lsh_index` index: bucket pairs
+    over its capped postings plus its exact-duplicate links at
+    est_jaccard = 1.0."""
+    return _bucket_pairs(bands, threshold).unionByName(
+        links.withColumn("est_jaccard", F.lit(1.0)))
 
 
 # SimHash signature width. 60 bits (15 md5 hex chars) rather than 64 so
@@ -557,56 +566,52 @@ def jaccard_pairs_within_groups(df: DataFrame, group_cols: list[str],
 def build_lsh_index(df: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text",
                     bucket_cap: int = BUCKET_CAP
-                    ) -> tuple[DataFrame, DataFrame]:
-    """Build the persistent near-dup index for a corpus snapshot:
-    (bands, digests) where `bands` holds one (band, band_sig, id,
-    minhash) posting per representative per band and `digests` maps
-    content digest -> keeper id. Both are plain DataFrames; the one
-    package caller, `dedup_queries._incremental_lsh_index`, stores them
-    as `durable_memo` parts (versioned snapshot tables under
-    $SPARK_GRAFT_MEMO_DIR when set). Not partitioned by band: every
-    batch probes all BANDS bands, so band partitions prune nothing.
+                    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Build the near-dup index of a corpus snapshot: (bands, digests,
+    links). `bands` holds one (id, minhash, band, band_sig) posting
+    per representative per band, `digests` maps content digest ->
+    keeper id, and `links` holds the exact-duplicate (id_a = keeper,
+    id_b = dup) pairs of the digest pre-pass. All three are lazy
+    DataFrames over ONE signature pass: `lsh_candidate_pairs` explodes
+    bucket pairs over them, and `dedup_queries` stores them as the
+    corpus's `durable_memo` index, which both the pair graph and the
+    incremental index read. Not partitioned by band: every batch
+    probes all BANDS bands, so band partitions prune nothing.
 
-    Postings are capped at `bucket_cap` per (band, band_sig) — the
-    same flood-safety bound as the batch path: a flood of distinct
-    near-identical docs would otherwise make every later batch's
+    Postings are capped at `bucket_cap` per (band, band_sig), keeping
+    the lowest ids: a flood of distinct near-identical docs would
+    otherwise make the in-bucket explode and every later batch's
     (band, band_sig) join quadratic. Exact duplicates are already
     collapsed by the digest pre-pass, so truncation only drops
     *near*-dup postings past the cap; `minhash_bucket_census` is the
-    observability for buckets that hit it."""
-    reps, _links = _exact_prepass(df, id_col, text_col)
-    sigs = with_minhash(reps, "text")
-    bands = (
-        sigs.select(
-            "id", "minhash",
-            F.explode(F.sequence(F.lit(0), F.lit(BANDS - 1))).alias("band"))
-        .withColumn(
-            "band_sig",
-            F.expr(f"slice(minhash, band * {ROWS_PER_BAND} + 1,"
-                   f" {ROWS_PER_BAND})")))
-    bands = _cap_buckets(bands, ["band", "band_sig"], bucket_cap)
+    observability for buckets that hit it. Because the pre-pass keeps
+    the min id per digest and the cap keeps the lowest ids per bucket,
+    the index restricted to `id <= cut` (digests to `keep_id <= cut`)
+    is exactly the index of the documents at or below the cut."""
+    reps, links = _exact_prepass(df, id_col, text_col)
+    bands = _cap_buckets(_bands(with_minhash(reps, "text")),
+                         ["band", "band_sig"], bucket_cap)
     digests = (df.select(F.col(id_col).alias("id"),
                          F.md5(F.col(text_col).cast("binary"))
                          .alias("digest"))
                .groupBy("digest").agg(F.min("id").alias("keep_id")))
-    return bands, digests
+    return bands, digests, links
 
 
-_EST_AGREE = ("CAST(size(filter(zip_with({a}, {b}, (x, y) -> x = y),"
-              " v -> v)) AS DOUBLE) / CAST(size({a}) AS DOUBLE)")
-
-
-def lsh_incremental_pairs(new_df: DataFrame, index_bands: DataFrame,
-                          index_digests: DataFrame,
-                          id_col: str = "doc_id", text_col: str = "text",
-                          threshold: float = 0.5,
-                          bucket_cap: int = BUCKET_CAP) -> DataFrame:
+def lsh_batch_deltas(new_df: DataFrame, index_bands: DataFrame,
+                     index_digests: DataFrame,
+                     id_col: str = "doc_id", text_col: str = "text",
+                     threshold: float = 0.5,
+                     bucket_cap: int = BUCKET_CAP
+                     ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Near-dup pairs introduced by a new batch against an existing
     `build_lsh_index` store (plus pairs within the batch), without
-    touching stored documents' text. Keeper convention is
-    first-seen-wins: a new doc whose content digest is already stored
-    links to the STORED keeper (the full recompute's min-id keeper
-    agrees whenever ids are monotone in arrival order).
+    touching stored documents' text, and the index APPEND deltas that
+    make the store reflect the batch: (pairs, bands_delta,
+    digests_delta). Keeper convention is first-seen-wins: a new doc
+    whose content digest is already stored links to the STORED keeper
+    (the full recompute's min-id keeper agrees whenever ids are
+    monotone in arrival order).
 
     Stages, all bounded by batch size + collision count:
       1. digest join: new docs identical to stored content emit
@@ -615,24 +620,9 @@ def lsh_incremental_pairs(new_df: DataFrame, index_bands: DataFrame,
       3. signatures for batch representatives only;
       4. batch postings join stored postings on (band, band_sig) —
          the store side is never re-signatured; plus the standard
-         capped-bucket explode within the batch postings."""
-    pairs, _bands, _digests = lsh_batch_deltas(
-        new_df, index_bands, index_digests, id_col, text_col,
-        threshold, bucket_cap, cache_deltas=False)
-    return pairs
+         capped-bucket explode within the batch postings.
 
-
-def lsh_batch_deltas(new_df: DataFrame, index_bands: DataFrame,
-                     index_digests: DataFrame,
-                     id_col: str = "doc_id", text_col: str = "text",
-                     threshold: float = 0.5,
-                     bucket_cap: int = BUCKET_CAP,
-                     cache_deltas: bool = True
-                     ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """`lsh_incremental_pairs` plus the index APPEND deltas that make
-    the store reflect the batch: (pairs, bands_delta, digests_delta).
-
-    This is the micro-batch step of a continuously-deduped corpus
+    This is also the micro-batch step of a continuously-deduped corpus
     (streaming/windows.streaming_incremental_dedup): append
     `bands_delta` to the stored postings and `digests_delta` to the
     digest map after emitting `pairs`, and the next batch dedups
@@ -643,16 +633,9 @@ def lsh_batch_deltas(new_df: DataFrame, index_bands: DataFrame,
     postings — so appending never creates duplicate digest keys and
     the per-bucket cap degrades gracefully (each batch contributes at
     most `bucket_cap` postings per bucket; a global re-cap happens on
-    the next full rebuild).
-
-    The batch's digest tagging, exact pre-pass, minhash signatures and
-    capped postings are built ONCE and shared between the pair
-    generation and the deltas — they are the same frames. With
-    `cache_deltas` (default), bands_delta is persisted because the
-    streaming caller runs the pairs write and the deltas write as
-    SEPARATE actions: without the cache each action would re-digest
-    and re-signature the whole batch, doubling the dominant per-batch
-    cost. The caller unpersists after its writes."""
+    the next full rebuild). The pairs are built over the same
+    bands_delta frame, so a caller that runs the pairs write and the
+    deltas write as separate actions persists bands_delta first."""
     tagged = (new_df.select(F.col(id_col).alias("id"),
                             F.col(text_col).alias("text"))
               .withColumn("digest", F.md5(F.col("text").cast("binary"))))
@@ -668,24 +651,14 @@ def lsh_batch_deltas(new_df: DataFrame, index_bands: DataFrame,
     reps, links = _exact_prepass(remaining.select("id", "text"),
                                  "id", "text")
     exact_in_batch = links.withColumn("est_jaccard", F.lit(1.0))
-    sigs = with_minhash(reps, "text")
-    new_bands = (
-        sigs.select(
-            "id", "minhash",
-            F.explode(F.sequence(F.lit(0), F.lit(BANDS - 1))).alias("band"))
-        .withColumn(
-            "band_sig",
-            F.expr(f"slice(minhash, band * {ROWS_PER_BAND} + 1,"
-                   f" {ROWS_PER_BAND})")))
     # cap BOTH sides of the (band, band_sig) join: the stored index is
     # capped at build time, and the batch side here — so a flood of
     # near-identical arrivals bounds the collision join at
     # cap × cap per bucket instead of going quadratic. new_capped IS
     # bands_delta: the postings the batch contributes to the store are
     # exactly the postings its own pair generation probes with.
-    new_capped = _cap_buckets(new_bands, ["band", "band_sig"], bucket_cap)
-    if cache_deltas:
-        new_capped = new_capped.persist()
+    new_capped = _cap_buckets(_bands(with_minhash(reps, "text")),
+                              ["band", "band_sig"], bucket_cap)
     est = F.expr(_EST_AGREE.format(a="minhash", b="minhash_new"))
     cross = (index_bands
              .join(new_capped.select(F.col("id").alias("id_new"),
@@ -698,36 +671,16 @@ def lsh_batch_deltas(new_df: DataFrame, index_bands: DataFrame,
                      est.alias("est_jaccard"))
              .where(F.col("est_jaccard") >= threshold)
              .dropDuplicates(["id_a", "id_b"]))
-    buckets = (new_capped.groupBy("band", "band_sig")
-               .agg(F.collect_list(F.struct("id", "minhash"))
-                    .alias("members"))
-               .where(F.size("members") > 1))
-    within = (
-        buckets.select(
-            F.explode(F.expr("""
-                flatten(transform(members, (x, i) ->
-                    transform(slice(members, i + 2, size(members)), y ->
-                        struct(least(x.id, y.id) AS id_a,
-                               greatest(x.id, y.id) AS id_b,
-                               CAST(size(filter(
-                                   zip_with(x.minhash, y.minhash,
-                                            (a, b) -> a = b), v -> v))
-                                    AS DOUBLE)
-                               / CAST(size(x.minhash) AS DOUBLE)
-                               AS est_jaccard))))
-            """)).alias("p"))
-        .select("p.id_a", "p.id_b", "p.est_jaccard")
-        .where(F.col("est_jaccard") >= threshold)
-        .dropDuplicates(["id_a", "id_b"]))
     pairs = (exact_vs_store.unionByName(exact_in_batch)
-             .unionByName(cross).unionByName(within))
+             .unionByName(cross)
+             .unionByName(_bucket_pairs(new_capped, threshold)))
     return pairs, new_capped, digests_delta
 
 
 # bumped whenever the stored index's layout or any constant baked into
 # its contents changes (banding geometry, signature scheme, bucket cap,
 # parts): it is part of the index's memo key, so a change rebuilds
-_INDEX_PARAMS = ["v3", BANDS, ROWS_PER_BAND, BUCKET_CAP]
+_INDEX_PARAMS = ["v4", BANDS, ROWS_PER_BAND, BUCKET_CAP]
 
 
 def containment_pairs_within_groups(df: DataFrame, group_cols: list[str],

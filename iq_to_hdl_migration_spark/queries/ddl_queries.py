@@ -21,16 +21,14 @@ from iq_to_hdl_migration_spark.queries import register
 from iq_to_hdl_migration_spark.session import local_frame
 
 _FIXTURE = Path(__file__).resolve().parents[1] / "ddl/fixtures/reload_fixture.sql"
-_CACHE: dict[str, E.RewriteResult] = {}
 
 
 def _result(spark: SparkSession) -> E.RewriteResult:
-    if "r" not in _CACHE:
-        ensure_catalog_views(spark)
-        rules = R.compile_rules(spark, option_names=["Append_Load"])
-        lines = _FIXTURE.read_text().splitlines()
-        _CACHE["r"] = E.rewrite(lines, rules)
-    return _CACHE["r"]
+    """The engine's rewrite of the fixture, run on every call so the
+    result always reflects the current rule tables and catalog."""
+    ensure_catalog_views(spark)
+    rules = R.compile_rules(spark, option_names=["Append_Load"])
+    return E.rewrite(_FIXTURE.read_text().splitlines(), rules)
 
 
 # Frozen golden (generated from the engine, hand-checked against the

@@ -123,19 +123,21 @@ def minhash_pairs(spark: SparkSession, sf_dir: str,
     through `durable_memo`, so with $SPARK_GRAFT_MEMO_DIR set the pair
     graph persists as a fingerprint-guarded snapshot table and a NEW
     session warm-starts from it instead of re-signaturing the corpus —
-    the LSH index IS the structure the 100 TB deployment stores."""
+    the LSH index IS the structure the 100 TB deployment stores. The
+    build explodes bucket pairs over the corpus's one stored index
+    (`_lsh_index`), so it signs no document itself."""
     from iq_to_hdl_migration_spark.sources.memo import durable_memo
 
     assert threshold >= _BASE_THRESHOLD
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
     def build() -> dict:
-        return {"pairs": dedup.lsh_candidate_pairs(
-            docs, "doc_id", "text",
-            threshold=_BASE_THRESHOLD).localCheckpoint()}
+        idx = _lsh_index(spark, sf_dir)
+        return {"pairs": dedup.index_pairs(
+            idx["bands"], idx["links"], _BASE_THRESHOLD).localCheckpoint()}
 
-    pairs = durable_memo("lsh_pair_graph", spark, sf_dir, docs,
-                         build)["pairs"]
+    pairs = durable_memo("lsh_pair_graph", spark, sf_dir, docs, build,
+                         extra=tuple(dedup._INDEX_PARAMS))["pairs"]
     if threshold > _BASE_THRESHOLD:
         pairs = pairs.where(F.col("est_jaccard") >= threshold)
     return pairs
@@ -182,9 +184,10 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def warm_dedup_memos(spark: SparkSession, sf_dir: str) -> float:
     """Named ingest/warm-up step (r11 verdict #4): materialize the
-    stored dedup structures — the MinHash-LSH pair graph, the SimHash
-    pair graph, and the 0.7-threshold components — exactly as a
-    production deployment builds them at INGEST time. Every report
+    stored dedup structures — the LSH index, the MinHash-LSH pair
+    graph over it, the SimHash pair graph, and the 0.7-threshold
+    components — exactly as a production deployment builds them at
+    INGEST time. Every report
     that consumes a pair TABLE (method-agreement matrix, degree
     census, cluster reports, incremental dedup) then always runs
     against the warm memo; the cold build is ingest cost, which
@@ -193,14 +196,14 @@ def warm_dedup_memos(spark: SparkSession, sf_dir: str) -> float:
     import time as _time
 
     t0 = _time.perf_counter()
+    # the corpus's one LSH index: the pair graph's build reads it, and
+    # the incremental queries read it directly — resolved here even
+    # when the pair graph loads from a snapshot, so memo_build_sec
+    # stamps its cost instead of the first consumer's untimed warm-up
+    _lsh_index(spark, sf_dir)
     minhash_pairs(spark, sf_dir)
     simhash_pairs(spark, sf_dir)
     minhash_components(spark, sf_dir, threshold=0.7)
-    # the persisted incremental-LSH store is a stored structure too
-    # (round 15): resolve/build it here so memo_build_sec stamps its
-    # cost instead of the first consumer's untimed warm-up (r14
-    # verdict #2's accounting gap, closed for the last memo)
-    _incremental_lsh_index(spark, sf_dir)
     return round(_time.perf_counter() - t0, 3)
 
 
@@ -355,37 +358,49 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_band.join(docs_per_band, "jac_band")
 
 
-def _incremental_lsh_index(spark: SparkSession, sf_dir: str):
-    """Resolve (bands, digests, cut) of the incremental LSH index over
-    the documents at or below the 60%-of-max doc_id cut, building it
-    on first use. warm_dedup_memos calls it inside the stamped ingest,
-    and dedup_incremental_pairs and its streaming twin both read it.
+def _lsh_index(spark: SparkSession, sf_dir: str) -> dict:
+    """The documents corpus's one LSH index: the `build_lsh_index`
+    parts {bands, digests, links} over the whole corpus, plus `cut`,
+    the one-row 60%-of-max doc_id split the incremental queries use.
+    Built on first use (warm_dedup_memos calls it inside the stamped
+    ingest); the pair graph and the incremental index both read it, so
+    the corpus is signed once.
 
     A `durable_memo` structure (tag `lsh_incremental_index`): the
     source fingerprint and `_INDEX_PARAMS` key it, so a regenerated
     corpus or a changed banding geometry rebuilds instead of serving
     stale postings; with $SPARK_GRAFT_MEMO_DIR set it persists as
-    versioned snapshots and a new session loads it. The cut is part of
-    the index's identity (the postings hold exactly ids <= cut), so it
-    is stored as a one-row part beside them and no call re-scans the
-    corpus for max(doc_id)."""
-    from iq_to_hdl_migration_spark.operators.dedup import (
-        _INDEX_PARAMS, build_lsh_index)
+    versioned snapshots and a new session loads it. The cut is stored
+    as a part beside the postings, so no call re-scans the corpus for
+    max(doc_id)."""
     from iq_to_hdl_migration_spark.sources.memo import durable_memo
 
     docs = load_table(spark, sf_dir, "documents")
 
     def build() -> dict:
-        cut = docs.agg(F.floor(F.max("doc_id") * 0.6).cast("bigint")
-                       .alias("cut")).localCheckpoint()
-        bands, digests = build_lsh_index(
-            docs.where(F.col("doc_id") <= cut.first()[0]))
+        bands, digests, links = dedup.build_lsh_index(docs)
         return {"bands": bands.localCheckpoint(),
-                "digests": digests.localCheckpoint(), "cut": cut}
+                "digests": digests.localCheckpoint(),
+                "links": links.localCheckpoint(),
+                "cut": docs.agg(F.floor(F.max("doc_id") * 0.6)
+                                .cast("bigint").alias("cut"))
+                .localCheckpoint()}
 
-    parts = durable_memo("lsh_incremental_index", spark, sf_dir, docs,
-                         build, extra=tuple(_INDEX_PARAMS))
-    return parts["bands"], parts["digests"], parts["cut"].first()[0]
+    return durable_memo("lsh_incremental_index", spark, sf_dir, docs,
+                        build, extra=tuple(dedup._INDEX_PARAMS))
+
+
+def _incremental_lsh_index(spark: SparkSession, sf_dir: str):
+    """(bands, digests, cut) of the incremental LSH index over the
+    documents at or below the cut: the corpus index restricted to
+    `id <= cut` and `keep_id <= cut`, which is exactly the index a
+    build over those documents alone would store (see
+    `build_lsh_index`). dedup_incremental_pairs and its streaming twin
+    both read it."""
+    idx = _lsh_index(spark, sf_dir)
+    cut = idx["cut"].first()[0]
+    return (idx["bands"].where(F.col("id") <= cut),
+            idx["digests"].where(F.col("keep_id") <= cut), cut)
 
 
 @register(
@@ -404,13 +419,10 @@ def _incremental_lsh_index(spark: SparkSession, sf_dir: str):
         "batch (exact equivalence locked in tests/test_dedup.py).",
 )
 def dedup_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from iq_to_hdl_migration_spark.operators.dedup import (
-        lsh_incremental_pairs)
-
     bands, digests, cut = _incremental_lsh_index(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     batch2 = docs.where(F.col("doc_id") > cut)
-    return lsh_incremental_pairs(batch2, bands, digests)
+    return dedup.lsh_batch_deltas(batch2, bands, digests)[0]
 
 
 @register(
@@ -770,20 +782,8 @@ def dedup_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_lsh_collision_profile(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
-    reps, _ = dedup._exact_prepass(docs, "doc_id", "text")
-    sigs = dedup.with_minhash(reps, "text")
-    bands = (sigs.select(
-        "id", "minhash",
-        F.explode(F.sequence(F.lit(0), F.lit(dedup.BANDS - 1)))
-        .alias("band"))
-        .withColumn("band_sig", F.expr(
-            f"slice(minhash, band * {dedup.ROWS_PER_BAND} + 1, "
-            f"{dedup.ROWS_PER_BAND})")))
-    capped = dedup._cap_buckets(bands, ["band", "band_sig"],
-                                dedup.BUCKET_CAP)
+    capped = dedup.build_lsh_index(docs)[0]
     b_side = capped.select(F.col("id").alias("id_b_raw"),
                            F.col("minhash").alias("mh_b"),
                            "band", "band_sig")

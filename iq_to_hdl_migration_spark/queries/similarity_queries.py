@@ -830,13 +830,40 @@ def _fp_kmeans_assign(emb: DataFrame, k: int, iters: int,
     return idx["v"], idx["cents"], idx["assign"]
 
 
+def _fp_table(emb: DataFrame) -> dict:
+    """The embeddings corpus's one fixed-point table, built once per
+    corpus: `v` is the per-dim row table (vec_id, dim, qv =
+    floor(x * 2^20)) every integer k-means config and the PQ index
+    train on; `varr` holds the same integers as one row per vector
+    (vec_id, qa DOUBLE[], qq2 = exact |q|²), the form exact re-rankers
+    read so they never re-explode to per-dim rows (every value and
+    every 64-term partial sum < 2^53, so double ops on them are exact
+    in any order)."""
+    from iq_to_hdl_migration_spark.sources.memo import durable_memo
+
+    def build() -> dict:
+        v = (emb.select("vec_id",
+                        F.posexplode(F.expr(sim.as_double_array(
+                            "embedding"))).alias("pos", "x"))
+             .select("vec_id", (F.col("pos") + 1).alias("dim"),
+                     F.floor(F.col("x") * F.lit(_IVF_SCALE)).cast("bigint")
+                     .alias("qv"))
+             .localCheckpoint())
+        qa = (f"transform({sim.as_double_array('embedding')}, "
+              f"x -> CAST(FLOOR(x * {_IVF_SCALE!r}) AS DOUBLE))")
+        varr = (emb.select("vec_id", F.expr(qa).alias("qa"))
+                .withColumn("qq2", sim.dot_expr("qa", "qa"))
+                .localCheckpoint())
+        return {"v": v, "varr": varr}
+
+    return durable_memo("fixedpoint_table", emb.sparkSession, "", emb, build)
+
+
 def _fp_kmeans_index(emb: DataFrame, k: int, iters: int,
                      train_pred=None, pred_tag: str = "") -> dict:
-    """The full memoized k-means index: {v, cents, assign, varr},
-    where varr is the row-per-vector quantized ARRAY table
-    (vec_id, qa DOUBLE[], qq2 = exact |q|² integer) — the stored form
-    exact re-rankers consume so they never re-explode to per-dim rows
-    (round 14)."""
+    """The full memoized k-means index: {v, cents, assign, varr}, where
+    v and varr are the corpus's fixed-point table (`_fp_table`) and
+    cents/assign are this config's trained parts."""
     from pyspark.sql import Window
 
     from iq_to_hdl_migration_spark.sources.memo import durable_memo
@@ -844,30 +871,24 @@ def _fp_kmeans_index(emb: DataFrame, k: int, iters: int,
     assert train_pred is None or pred_tag, \
         "train_pred requires a distinct pred_tag (memo key collision)"
     spark = emb.sparkSession
+    table = _fp_table(emb)
 
     def train() -> dict:
-        return _fp_kmeans_train(emb, k, iters, train_pred, Window)
+        return _fp_kmeans_train(table["v"], k, iters, train_pred, Window)
 
-    # "p2" stamps the part-set generation (varr added round 14): a
-    # persisted pre-r14 index has the same fingerprint but no varr
-    # part, so the key must miss it and rebuild rather than serve a
-    # structure this code would KeyError on.
-    return durable_memo(
+    # "p3" stamps the part-set generation (v and varr moved to the
+    # shared fixed-point table): a persisted older index has the same
+    # fingerprint but a different part set, so the key must miss it
+    # and rebuild rather than serve it.
+    return {**table, **durable_memo(
         "kmeans_index", spark, "", emb, train,
         extra=(k, iters, pred_tag if train_pred is not None else "",
-               "p2"),
-        single_live=False)
+               "p3"),
+        single_live=False)}
 
 
-def _fp_kmeans_train(emb: DataFrame, k: int, iters: int,
+def _fp_kmeans_train(v: DataFrame, k: int, iters: int,
                      train_pred, Window) -> dict:
-    v = (emb.select("vec_id",
-                    F.posexplode(F.expr(sim.as_double_array("embedding")))
-                    .alias("pos", "x"))
-         .select("vec_id", (F.col("pos") + 1).alias("dim"),
-                 F.floor(F.col("x") * F.lit(_IVF_SCALE)).cast("bigint")
-                 .alias("qv"))
-         .cache())
     if train_pred is None:
         tv = v
         cents = (v.where(F.col("vec_id") < k)
@@ -900,17 +921,7 @@ def _fp_kmeans_train(emb: DataFrame, k: int, iters: int,
                  .select("cid", "dim",
                          F.coalesce("ucq", "cq").alias("cq"))
                  .localCheckpoint())
-    # row-per-vector quantized array table for exact re-ranking: the
-    # same floor(x * 2^20) integers as `v`, shaped as one DOUBLE[]
-    # row per vector with its exact squared norm (every value and
-    # every 64-term partial sum < 2^53, so double ops on them are
-    # exact in any order)
-    qa = (f"transform({sim.as_double_array('embedding')}, "
-          f"x -> CAST(FLOOR(x * {_IVF_SCALE!r}) AS DOUBLE))")
-    varr = (emb.select("vec_id", F.expr(qa).alias("qa"))
-            .withColumn("qq2", sim.dot_expr("qa", "qa"))
-            .localCheckpoint())
-    return {"v": v, "cents": cents, "assign": assign, "varr": varr}
+    return {"cents": cents, "assign": assign}
 
 
 @register(
@@ -1668,7 +1679,8 @@ def _pq_oracle() -> str:
 
 def _pq_index(spark: SparkSession, sf_dir: str) -> dict:
     """Memoized PQ index {v, cents, codes} — the stored index format
-    sim_pq_adc_topk serves queries from; extracted so the registry
+    sim_pq_adc_topk serves queries from (v is the corpus's fixed-point
+    table with each dim's subspace `sub`); extracted so the registry
     warm-up (`queries.warm.warm_all_memos`) builds it inside the
     stamped ingest region with exactly the query's own config."""
     from pyspark.sql import Window
@@ -1678,6 +1690,10 @@ def _pq_index(spark: SparkSession, sf_dir: str) -> dict:
     emb = load_table(spark, sf_dir, "embeddings")
     m, k, iters = _PQ_M, _PQ_K, _PQ_ITERS
     dsub = sim.DIM // m
+    # the corpus's fixed-point table, with each dim's subspace
+    v = _fp_table(emb)["v"].select(
+        "vec_id", "dim", ((F.col("dim") - 1) / dsub).cast("int")
+        .alias("sub"), "qv")
 
     def train():
         # PQ codebooks + corpus codes are the stored index format —
@@ -1686,15 +1702,6 @@ def _pq_index(spark: SparkSession, sf_dir: str) -> dict:
         # fingerprint-guarded snapshot tables, and a NEW session
         # warm-starts from them instead of re-running Lloyd
         # (tests/test_session_memo.py locks the round trip)
-        v = (emb.select(
-                "vec_id",
-                F.posexplode(F.expr(sim.as_double_array("embedding")))
-                .alias("pos", "x"))
-             .select("vec_id", (F.col("pos") + 1).alias("dim"),
-                     (F.col("pos") / dsub).cast("int").alias("sub"),
-                     F.floor(F.col("x") * F.lit(_IVF_SCALE))
-                     .cast("bigint").alias("qv"))
-             .localCheckpoint())
         cents = (v.where(F.col("vec_id") < k)
                  .select("sub", F.col("vec_id").alias("cid"), "dim",
                          F.col("qv").alias("cq")))
@@ -1718,10 +1725,12 @@ def _pq_index(spark: SparkSession, sf_dir: str) -> dict:
                      .select("sub", "cid", "dim",
                              F.coalesce("ucq", "cq").alias("cq"))
                      .localCheckpoint())
-        return {"v": v, "cents": cents, "codes": codes}
+        return {"cents": cents, "codes": codes}
 
-    return durable_memo("pq_index", spark, sf_dir, emb, train,
-                        extra=(m, k, iters))
+    # "p2" stamps the part-set generation (v moved to the shared
+    # fixed-point table), so an older persisted index misses
+    return {"v": v, **durable_memo("pq_index", spark, sf_dir, emb, train,
+                                   extra=(m, k, iters, "p2"))}
 
 
 @register(
@@ -3074,8 +3083,9 @@ def sim_ivf_balance_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def warm_similarity_memos(spark: SparkSession, sf_dir: str) -> None:
     """Build every durable memo this module's headline queries serve
-    from — the quantized corpus, the three trained k-means index
-    configs, and the PQ index — exactly as the queries themselves
+    from — the quantized corpus, the fixed-point table, the three
+    trained k-means index configs, and the PQ index (all four train on
+    the one fixed-point table) — exactly as the queries themselves
     would on first call. Part of the registry-level ingest warm-up
     (`queries.warm.warm_all_memos`, r14 verdict #2) so the bench's
     `memo_build_sec` stamp covers the FULL stored-structure build,

@@ -456,8 +456,9 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
 
     Harness: the base index and its 60%-of-max-doc_id cut are the
     batch query's own memoized index (`dedup_queries.
-    _incremental_lsh_index`, built once per corpus and shared by both
-    twins); the documents above the cut are written as
+    _incremental_lsh_index`: the corpus's one LSH index restricted to
+    the cut, built once per corpus and shared by both twins and the
+    pair graph); the documents above the cut are written as
     `_INC_DEDUP_BATCHES` id-contiguous parquet files drained one per
     micro-batch (maxFilesPerTrigger=1, availableNow). foreachBatch runs
     operators.dedup.lsh_batch_deltas: emit the batch's pairs, append
@@ -517,6 +518,10 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str,
         index_digests = _index(base_digests, digests_dir, batch_id)
         pairs, bands_delta, digests_delta = lsh_batch_deltas(
             batch_df, index_bands, index_digests)
+        # the pairs and the deltas are written by separate actions over
+        # the same batch postings: persisted, the batch is digested and
+        # signed once, not once per write
+        bands_delta.persist()
         # belt-and-braces: a digest self-match (only possible if the
         # index somehow contains this batch) must never emit (X, X)
         pairs = (pairs.where(F.col("id_a") != F.col("id_b"))

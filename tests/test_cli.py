@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-
 from iq_to_hdl_migration_spark.cli import main
 from iq_to_hdl_migration_spark.operators.planning import suggest_partitions
 

@@ -149,6 +149,31 @@ def test_login_policy_defaults_come_from_rule_table(tmp_path, monkeypatch):
     assert clones() == []
 
 
+def test_rule_hit_summary_follows_rule_table_edits(spark, sf_dir, tmp_path,
+                                                   monkeypatch):
+    """ddl_rule_hit_summary runs the engine on every call: after the
+    rule tables are edited in the same process, the query reports the
+    edited tables' hits, not a result remembered from the first call."""
+    import shutil
+
+    from iq_to_hdl_migration_spark.queries import load_all
+    from iq_to_hdl_migration_spark.sources import rule_tables
+
+    fn = load_all()["ddl_rule_hit_summary"].fn
+
+    def hits():
+        return {(r["rule"], r["action"]) for r in fn(spark, sf_dir).collect()}
+
+    assert ("LOGIN POLICY", "clone_c_root") in hits()
+    data = tmp_path / "data"
+    shutil.copytree(rule_tables._DATA, data)
+    table = data / "login_policy.csv"
+    table.write_text(table.read_text().replace(
+        "max_connections=UNLIMITED", "max_connections=50"))
+    monkeypatch.setattr(rule_tables, "_DATA", data)
+    assert ("LOGIN POLICY", "clone_c_root") not in hits()
+
+
 def test_create_dbspace_commented(result):
     assert '-- CREATE DBSPACE "user_dsp3"' in _txt(result)
 

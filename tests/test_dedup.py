@@ -101,16 +101,18 @@ def test_ppjoin_matches_bruteforce_on_random_corpora(spark):
 
 
 def test_incremental_lsh_equals_full_recompute(spark, sf_dir):
-    """build_lsh_index(batch1) + lsh_incremental_pairs(batch2) must
+    """build_lsh_index(batch1) + lsh_batch_deltas(batch2) pairs must
     reproduce exactly the pairs of a full-corpus recompute (old-old
     pairs from batch1's own run, everything touching batch2 from the
     incremental pass), with identical est_jaccard values — valid
     whenever no bucket exceeds the cap and ids are monotone in arrival
-    order (both asserted/true here)."""
+    order (both asserted/true here). The corpus-wide index restricted
+    to the cut is row for row the batch1 index: the stored index
+    serves both the pair graph and the incremental query."""
     import pyspark.sql.functions as F
 
     from iq_to_hdl_migration_spark.operators.dedup import (
-        BUCKET_CAP, build_lsh_index, lsh_incremental_pairs)
+        BUCKET_CAP, build_lsh_index, lsh_batch_deltas)
     from iq_to_hdl_migration_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -126,10 +128,18 @@ def test_incremental_lsh_equals_full_recompute(spark, sf_dir):
             for r in dedup.lsh_candidate_pairs(docs).collect()}
     old = {(r.id_a, r.id_b): r.est_jaccard
            for r in dedup.lsh_candidate_pairs(batch1).collect()}
-    bands, digests = build_lsh_index(batch1)
+    bands, digests, _links = build_lsh_index(batch1)
+    all_bands, all_digests, _all_links = build_lsh_index(docs)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    assert rows(all_bands.where(F.col("id") <= cut)) == rows(bands)
+    assert (rows(all_digests.where(F.col("keep_id") <= cut))
+            == rows(digests))
     inc = {(r.id_a, r.id_b): r.est_jaccard
-           for r in lsh_incremental_pairs(
-               batch2, bands, digests, bucket_cap=BUCKET_CAP).collect()}
+           for r in lsh_batch_deltas(
+               batch2, bands, digests, bucket_cap=BUCKET_CAP)[0].collect()}
     # incremental pairs all touch batch2
     assert all(b > cut for _, b in inc)
     combined = dict(old)
@@ -199,6 +209,27 @@ def test_lsh_index_persistence_and_staleness_guard(spark, sf_dir, tmp_path,
     assert pairs() == want
     assert builds == [1, 1, 1]
     memo._MEMOS.pop("lsh_incremental_index", None)
+
+
+def test_dedup_ingest_signs_the_corpus_once(spark, sf_dir, monkeypatch):
+    """From a cold memo, the dedup ingest computes minhash signatures
+    in ONE pass: the pair graph and the incremental index read the
+    same stored LSH index instead of each signing the corpus."""
+    from iq_to_hdl_migration_spark.queries.dedup_queries import (
+        warm_dedup_memos)
+    from iq_to_hdl_migration_spark.sources import memo
+
+    monkeypatch.delenv("SPARK_GRAFT_MEMO_DIR", raising=False)
+    tags = ("lsh_incremental_index", "lsh_pair_graph", "dedup_components")
+    for tag in tags:
+        memo._MEMOS.pop(tag, None)
+    signs = []
+    real_sign = dedup.with_minhash
+    monkeypatch.setattr(
+        dedup, "with_minhash",
+        lambda *a, **k: signs.append(1) or real_sign(*a, **k))
+    warm_dedup_memos(spark, sf_dir)
+    assert signs == [1]
 
 
 def test_containment_matches_bruteforce_on_random_corpora(spark):

@@ -79,7 +79,6 @@ def test_kcore_delta_census_matches_bruteforce(spark):
     must census exactly like brute-force induced-subgraph
     recomputation, including a round that empties the core (the
     SUM-over-empty edge count must be 0, not NULL)."""
-    import itertools
     from iq_to_hdl_migration_spark.queries.sequence_queries import (
         kcore_delta_census)
 

@@ -159,3 +159,51 @@ def test_keep_list_entries_exist():
     defined = {(m, n) for m, n in KEEP
                if hasattr(__import__(m, fromlist=[n]), n)}
     assert defined == KEEP, f"stale KEEP entries: {sorted(KEEP - defined)}"
+
+
+def _unused_imports(tree: ast.Module) -> list[tuple[int, str]]:
+    """(line, name) of each imported name never referenced as a bare
+    name in its scope: the whole file for a module-level import, the
+    enclosing function for an import inside one. `from __future__`
+    imports are directives, not bindings."""
+    out = []
+
+    def imports(stmts):
+        for stmt in stmts:
+            if isinstance(stmt, ast.Import):
+                yield from ((stmt.lineno, a.asname or a.name.split(".")[0])
+                            for a in stmt.names)
+            elif (isinstance(stmt, ast.ImportFrom)
+                  and stmt.module != "__future__"):
+                yield from ((stmt.lineno, a.asname or a.name)
+                            for a in stmt.names)
+
+    def import_stmts(node):
+        return [n for n in ast.walk(node)
+                if isinstance(n, (ast.Import, ast.ImportFrom))]
+
+    fns = [n for n in ast.walk(tree)
+           if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+    in_fn = {id(n) for fn in fns for n in import_stmts(fn)}
+    scopes = [(tree, [n for n in import_stmts(tree) if id(n) not in in_fn])]
+    scopes += [(fn, import_stmts(fn)) for fn in fns]
+    for scope, stmts in scopes:
+        used = {n.id for n in ast.walk(scope) if isinstance(n, ast.Name)}
+        out.extend((line, name) for line, name in imports(stmts)
+                   if name not in used)
+    return sorted(set(out))
+
+
+def test_no_unused_imports():
+    """Every imported name is referenced in its file (or, for an
+    import inside a function, in that function) across tests/,
+    scripts/, bench.py and the package; package `__init__.py`
+    re-exports are exempt."""
+    files = [*ROOT.glob("tests/**/*.py"), *ROOT.glob("scripts/**/*.py"),
+             ROOT / "bench.py",
+             *(p for p in (ROOT / PKG).rglob("*.py")
+               if p.name != "__init__.py")]
+    unused = [f"{p.relative_to(ROOT)}:{line}: {name}"
+              for p in sorted(files)
+              for line, name in _unused_imports(ast.parse(p.read_text()))]
+    assert not unused, unused

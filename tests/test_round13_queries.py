@@ -183,7 +183,6 @@ def test_fano_factor_spine_and_moments(spark, sf_dir):
     assert len({r.n_hours for r in rows}) == 1  # shared spine
     assert sum(r.n_events for r in rows) == ev.count()
     # independent recompute for one type via pandas
-    import pandas as pd
     t = rows[0].event_type
     pdf = (ev.filter(F.col("event_type") == t)
            .select((F.unix_micros(F.date_trunc("hour", "ts"))

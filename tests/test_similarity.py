@@ -125,7 +125,6 @@ def test_ivf_fixedpoint_recall_reasonable(spark, sf_dir):
     vectors should recover at least half the true neighbors on this
     corpus (the float IVF test asserts the same envelope)."""
     from iq_to_hdl_migration_spark.queries import load_all
-    import itertools
 
     got = {}
     for r in load_all()["sim_ivf_fixedpoint_topk"].fn(
@@ -146,3 +145,23 @@ def test_ivf_fixedpoint_recall_reasonable(spark, sf_dir):
         hits += len(true5 & got[q])
         total += 5
     assert hits / total >= 0.5, (hits, total)
+
+
+def test_similarity_ingest_builds_one_fixedpoint_table(spark, sf_dir,
+                                                       monkeypatch):
+    """From a cold memo, the similarity ingest explodes the embeddings
+    to per-dim fixed-point rows ONCE: the three k-means configs and
+    the PQ index all train on the same stored table."""
+    from iq_to_hdl_migration_spark.queries.similarity_queries import (
+        warm_similarity_memos)
+    from iq_to_hdl_migration_spark.sources import memo
+
+    monkeypatch.delenv("SPARK_GRAFT_MEMO_DIR", raising=False)
+    for tag in ("fixedpoint_table", "kmeans_index", "pq_index"):
+        memo._MEMOS.pop(tag, None)
+    explodes = []
+    real = F.posexplode
+    monkeypatch.setattr(
+        F, "posexplode", lambda *a: explodes.append(1) or real(*a))
+    warm_similarity_memos(spark, sf_dir)
+    assert explodes == [1]

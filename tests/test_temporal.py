@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pyspark.sql.functions as F
-
 from iq_to_hdl_migration_spark.operators.temporal import asof_join, bin_range_join
 
 
