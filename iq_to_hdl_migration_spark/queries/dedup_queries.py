@@ -143,10 +143,9 @@ def minhash_pairs(spark: SparkSession, sf_dir: str,
     return pairs
 
 
-def minhash_components(spark: SparkSession, sf_dir: str,
-                       threshold: float = 0.7) -> DataFrame:
+def minhash_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized connected components (id, component) of the near-dup
-    graph at `threshold` — shared by dedup_minhash_clusters and
+    graph at est_jaccard >= 0.7 — shared by dedup_minhash_clusters and
     mlprep_dedup_aware_weights, which report two views of the same
     cluster structure."""
     from iq_to_hdl_migration_spark.operators.components import (
@@ -157,10 +156,10 @@ def minhash_components(spark: SparkSession, sf_dir: str,
 
     def build() -> dict:
         return {"comp": connected_components(
-            minhash_pairs(spark, sf_dir, threshold)).localCheckpoint()}
+            minhash_pairs(spark, sf_dir, 0.7)).localCheckpoint()}
 
-    return durable_memo("dedup_components", spark, sf_dir, docs, build,
-                        extra=(threshold,))["comp"]
+    return durable_memo("dedup_components", spark, sf_dir, docs,
+                        build)["comp"]
 
 
 def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -203,7 +202,7 @@ def warm_dedup_memos(spark: SparkSession, sf_dir: str) -> float:
     _lsh_index(spark, sf_dir)
     minhash_pairs(spark, sf_dir)
     simhash_pairs(spark, sf_dir)
-    minhash_components(spark, sf_dir, threshold=0.7)
+    minhash_components(spark, sf_dir)
     return round(_time.perf_counter() - t0, 3)
 
 
@@ -285,7 +284,7 @@ def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "recursive-CTE closure over the same DuckDB pair list",
 )
 def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    comp = minhash_components(spark, sf_dir, threshold=0.7)
+    comp = minhash_components(spark, sf_dir)
     return (comp.groupBy(F.col("component").alias("cluster_id"))
             .agg(F.count(F.lit(1)).alias("n_members"))
             .where(F.col("n_members") > 1))
@@ -584,7 +583,7 @@ def mlprep_dedup_aware_weights(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text")
-    comp = minhash_components(spark, sf_dir, threshold=0.7)
+    comp = minhash_components(spark, sf_dir)
     sizes = comp.groupBy("component").agg(
         F.count(F.lit(1)).cast("bigint").alias("csize"))
     w = (docs.join(comp.withColumnRenamed("id", "doc_id"),
@@ -617,7 +616,7 @@ def mlprep_dedup_aware_weights(spark: SparkSession,
 def dedup_cluster_quality_report(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    comp = minhash_components(spark, sf_dir, threshold=0.7)
+    comp = minhash_components(spark, sf_dir)
     j = comp.withColumnRenamed("id", "doc_id").join(docs, "doc_id")
     return (j.groupBy(F.col("component").alias("cluster_id"))
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_members"),
@@ -1037,7 +1036,7 @@ def dedup_pair_degree_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_cluster_size_histogram(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
-    comp = minhash_components(spark, sf_dir, threshold=0.7)
+    comp = minhash_components(spark, sf_dir)
     sizes = (comp.groupBy("component")
              .agg(F.count(F.lit(1)).alias("n_members"))
              .where(F.col("n_members") > 1))

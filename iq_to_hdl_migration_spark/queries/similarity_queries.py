@@ -802,53 +802,30 @@ def _ivf_fixedpoint_oracle() -> str:
     return ",".join(parts)
 
 
-# Memo for trained fixed-point k-means indexes: an IVF index is a
-# persistent artifact trained ONCE and served to every query (exactly
-# like the persisted LSH index), not re-fit per invocation. Served
-# through durable_memo keyed on (source fingerprint, k, iters,
-# pred_tag) — a changed corpus misses; the three (k, iters, pred)
-# configs in this module coexist (single_live=False: the key space is
-# bounded by the config count, and each entry pins only k*DIM
-# centroid rows + one vec-sized assignment table). With
-# $SPARK_GRAFT_MEMO_DIR set, the trained index persists as
-# fingerprint-guarded snapshot tables.
-
-
-def _fp_kmeans_assign(emb: DataFrame, k: int, iters: int,
-                      train_pred=None, pred_tag: str = ""):
-    """Spark twin of _fp_kmeans_ctes: integer Lloyd iterations over
-    2^-20-quantized per-dim rows. Returns (v, cents, assign) where
-    assign is a{iters} (computed against c{iters-1}) and cents is
-    c{iters}. Centroid tables are k*DIM rows (broadcast); the per-
-    iteration shuffle is the vec-sized dist groupBy — linear in the
-    corpus, never pairwise. `train_pred` (a Column predicate)
-    restricts the training corpus and seeds to match the oracle's
-    train_pred; None trains on everything with vec_id < k seeds.
-    `pred_tag` names the predicate in the memo key (a Column isn't
-    hashable); callers with a train_pred MUST pass a distinct tag."""
-    idx = _fp_kmeans_index(emb, k, iters, train_pred, pred_tag)
-    return idx["v"], idx["cents"], idx["assign"]
+def _fp_rows(emb: DataFrame, *carry) -> DataFrame:
+    """The embeddings' per-dim fixed-point rows: the `carry` columns,
+    then dim (1-based) and qv = floor(x * 2^20) — the Spark twin of
+    the oracles' `v` CTE."""
+    return (emb.select(*carry, F.posexplode(F.expr(sim.as_double_array(
+                "embedding"))).alias("pos", "x"))
+            .withColumns({"dim": F.col("pos") + 1,
+                          "qv": F.floor(F.col("x") * F.lit(_IVF_SCALE))
+                          .cast("bigint")})
+            .drop("pos", "x"))
 
 
 def _fp_table(emb: DataFrame) -> dict:
     """The embeddings corpus's one fixed-point table, built once per
-    corpus: `v` is the per-dim row table (vec_id, dim, qv =
-    floor(x * 2^20)) every integer k-means config and the PQ index
-    train on; `varr` holds the same integers as one row per vector
-    (vec_id, qa DOUBLE[], qq2 = exact |q|²), the form exact re-rankers
-    read so they never re-explode to per-dim rows (every value and
-    every 64-term partial sum < 2^53, so double ops on them are exact
-    in any order)."""
+    corpus: `v` is the per-dim row table (vec_id, dim, qv) every
+    Lloyd config (`_kmeans_index`) trains on; `varr` holds the same
+    integers as one row per vector (vec_id, qa DOUBLE[], qq2 = exact
+    |q|²), the form exact re-rankers read so they never re-explode to
+    per-dim rows (every value and every 64-term partial sum < 2^53, so
+    double ops on them are exact in any order)."""
     from iq_to_hdl_migration_spark.sources.memo import durable_memo
 
     def build() -> dict:
-        v = (emb.select("vec_id",
-                        F.posexplode(F.expr(sim.as_double_array(
-                            "embedding"))).alias("pos", "x"))
-             .select("vec_id", (F.col("pos") + 1).alias("dim"),
-                     F.floor(F.col("x") * F.lit(_IVF_SCALE)).cast("bigint")
-                     .alias("qv"))
-             .localCheckpoint())
+        v = _fp_rows(emb, "vec_id").localCheckpoint()
         qa = (f"transform({sim.as_double_array('embedding')}, "
               f"x -> CAST(FLOOR(x * {_IVF_SCALE!r}) AS DOUBLE))")
         varr = (emb.select("vec_id", F.expr(qa).alias("qa"))
@@ -857,71 +834,6 @@ def _fp_table(emb: DataFrame) -> dict:
         return {"v": v, "varr": varr}
 
     return durable_memo("fixedpoint_table", emb.sparkSession, "", emb, build)
-
-
-def _fp_kmeans_index(emb: DataFrame, k: int, iters: int,
-                     train_pred=None, pred_tag: str = "") -> dict:
-    """The full memoized k-means index: {v, cents, assign, varr}, where
-    v and varr are the corpus's fixed-point table (`_fp_table`) and
-    cents/assign are this config's trained parts."""
-    from pyspark.sql import Window
-
-    from iq_to_hdl_migration_spark.sources.memo import durable_memo
-
-    assert train_pred is None or pred_tag, \
-        "train_pred requires a distinct pred_tag (memo key collision)"
-    spark = emb.sparkSession
-    table = _fp_table(emb)
-
-    def train() -> dict:
-        return _fp_kmeans_train(table["v"], k, iters, train_pred, Window)
-
-    # "p3" stamps the part-set generation (v and varr moved to the
-    # shared fixed-point table): a persisted older index has the same
-    # fingerprint but a different part set, so the key must miss it
-    # and rebuild rather than serve it.
-    return {**table, **durable_memo(
-        "kmeans_index", spark, "", emb, train,
-        extra=(k, iters, pred_tag if train_pred is not None else "",
-               "p3"),
-        single_live=False)}
-
-
-def _fp_kmeans_train(v: DataFrame, k: int, iters: int,
-                     train_pred, Window) -> dict:
-    if train_pred is None:
-        tv = v
-        cents = (v.where(F.col("vec_id") < k)
-                 .select(F.col("vec_id").alias("cid"), "dim",
-                         F.col("qv").alias("cq")))
-    else:
-        tv = v.where(train_pred)
-        seed_ids = (tv.select("vec_id").distinct()
-                    .orderBy("vec_id").limit(k))
-        cents = (tv.join(F.broadcast(seed_ids), "vec_id")
-                 .select(F.col("vec_id").alias("cid"), "dim",
-                         F.col("qv").alias("cq")))
-    v_train = tv
-    assign = None
-    for _ in range(iters):
-        dist = (v_train.join(cents.hint("broadcast"), "dim")
-                .groupBy("vec_id", "cid")
-                .agg(F.sum((F.col("qv") - F.col("cq"))
-                           * (F.col("qv") - F.col("cq"))).alias("d2")))
-        wa = Window.partitionBy("vec_id").orderBy("d2", "cid")
-        assign = (dist.withColumn("rn", F.row_number().over(wa))
-                  .where(F.col("rn") == 1).select("vec_id", "cid")
-                  .localCheckpoint())
-        upd = (assign.join(v_train, "vec_id")
-               .groupBy("cid", "dim")
-               .agg(F.floor(F.sum("qv").cast("double")
-                            / F.count(F.lit(1)).cast("double"))
-                    .cast("bigint").alias("ucq")))
-        cents = (cents.join(upd, ["cid", "dim"], "left")
-                 .select("cid", "dim",
-                         F.coalesce("ucq", "cq").alias("cq"))
-                 .localCheckpoint())
-    return {"cents": cents, "assign": assign}
 
 
 @register(
@@ -937,8 +849,9 @@ def sim_ivf_fixedpoint_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
-    k, iters, probe = _IVF_K, _IVF_ITERS, _IVF_PROBE
-    v, cents, assign = _fp_kmeans_assign(emb, k, iters)
+    probe = _IVF_PROBE
+    idx = _kmeans_index(emb, "ivf")
+    v, cents, assign = idx["v"], idx["cents"], idx["assign"]
     qdist = (v.where(F.col("vec_id") < _N_QUERIES)
              .join(cents.hint("broadcast"), "dim")
              .groupBy(F.col("vec_id").alias("query_id"), F.col("cid"))
@@ -1402,7 +1315,7 @@ def sim_mmr_diversified_topk(spark: SparkSession,
 # all-pairs scan, which is what makes semantic dedup feasible at
 # 100 TB (k grows with the corpus so per-cluster size stays bounded).
 # Made value-hash-checkable by reusing the integer fixed-point k-means
-# (_fp_kmeans_ctes / _fp_kmeans_assign): assignment is exact both
+# (_fp_kmeans_ctes / _kmeans_index): assignment is exact both
 # engines; pair cosine runs over the same quantized BIGINT vectors, so
 # dot/norm sums are exact integers (<= 64 * 2^40 < 2^53 — every
 # partial sum is exactly representable, hence order-invariant) and the
@@ -1512,10 +1425,7 @@ def dedup_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iq_to_hdl_migration_spark.operators.fanout import capped_fanout
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # One scalar count to derive k (the index-build step of a
-    # materialize-once structure — at 100 TB this is table metadata).
-    k = _sd_k(emb.count())
-    _, _, assign = _fp_kmeans_assign(emb, k, _SD_ITERS)
+    assign = _kmeans_index(emb, "semdedup")["assign"]
     # Shared flood-cap primitive (r14): rank members per cluster by
     # vec_id, scan only the first _SD_CAP; the census part is the
     # per-cluster membership/overflow frame the report joins below.
@@ -1677,62 +1587,6 @@ def _pq_oracle() -> str:
     return ",".join(parts)
 
 
-def _pq_index(spark: SparkSession, sf_dir: str) -> dict:
-    """Memoized PQ index {v, cents, codes} — the stored index format
-    sim_pq_adc_topk serves queries from (v is the corpus's fixed-point
-    table with each dim's subspace `sub`); extracted so the registry
-    warm-up (`queries.warm.warm_all_memos`) builds it inside the
-    stamped ingest region with exactly the query's own config."""
-    from pyspark.sql import Window
-
-    from iq_to_hdl_migration_spark.sources.memo import durable_memo
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    m, k, iters = _PQ_M, _PQ_K, _PQ_ITERS
-    dsub = sim.DIM // m
-    # the corpus's fixed-point table, with each dim's subspace
-    v = _fp_table(emb)["v"].select(
-        "vec_id", "dim", ((F.col("dim") - 1) / dsub).cast("int")
-        .alias("sub"), "qv")
-
-    def train():
-        # PQ codebooks + corpus codes are the stored index format —
-        # trained once per corpus and served through durable_memo:
-        # with $SPARK_GRAFT_MEMO_DIR set the trained parts commit as
-        # fingerprint-guarded snapshot tables, and a NEW session
-        # warm-starts from them instead of re-running Lloyd
-        # (tests/test_session_memo.py locks the round trip)
-        cents = (v.where(F.col("vec_id") < k)
-                 .select("sub", F.col("vec_id").alias("cid"), "dim",
-                         F.col("qv").alias("cq")))
-        codes = None
-        for _ in range(iters):
-            dist = (v.join(cents.hint("broadcast"), ["sub", "dim"])
-                    .groupBy("vec_id", "sub", "cid")
-                    .agg(F.sum((F.col("qv") - F.col("cq"))
-                               * (F.col("qv") - F.col("cq"))).alias("d2")))
-            wa = Window.partitionBy("vec_id", "sub").orderBy("d2", "cid")
-            codes = (dist.withColumn("rn", F.row_number().over(wa))
-                     .where(F.col("rn") == 1)
-                     .select("vec_id", "sub", "cid")
-                     .localCheckpoint())
-            upd = (codes.join(v, ["vec_id", "sub"])
-                   .groupBy("sub", "cid", "dim")
-                   .agg(F.floor(F.sum("qv").cast("double")
-                                / F.count(F.lit(1)).cast("double"))
-                        .cast("bigint").alias("ucq")))
-            cents = (cents.join(upd, ["sub", "cid", "dim"], "left")
-                     .select("sub", "cid", "dim",
-                             F.coalesce("ucq", "cq").alias("cq"))
-                     .localCheckpoint())
-        return {"cents": cents, "codes": codes}
-
-    # "p2" stamps the part-set generation (v moved to the shared
-    # fixed-point table), so an older persisted index misses
-    return {"v": v, **durable_memo("pq_index", spark, sf_dir, emb, train,
-                                   extra=(m, k, iters, "p2"))}
-
-
 @register(
     "sim_pq_adc_topk",
     oracle=_pq_oracle(),
@@ -1748,11 +1602,15 @@ def _pq_index(spark: SparkSession, sf_dir: str) -> dict:
 def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    idx = _pq_index(spark, sf_dir)
-    v, cents, codes = idx["v"], idx["cents"], idx["codes"]
+    # the codebooks (sub, cid, dim, cq) and the corpus codes (vec_id,
+    # sub, cid) are the PQ config's slice of the trained-index memo;
+    # a dim lies in exactly one subspace, so the query rows join the
+    # codebooks on dim alone
+    idx = _kmeans_index(load_table(spark, sf_dir, "embeddings"), "pq")
+    v, cents, codes = idx["v"], idx["cents"], idx["assign"]
     adctab = (v.where(F.col("vec_id") < _N_QUERIES)
               .withColumnRenamed("vec_id", "query_id")
-              .join(cents.hint("broadcast"), ["sub", "dim"])
+              .join(cents.hint("broadcast"), "dim")
               .groupBy("query_id", "sub", "cid")
               .agg(F.sum((F.col("qv") - F.col("cq"))
                          * (F.col("qv") - F.col("cq"))).alias("d2")))
@@ -1847,17 +1705,6 @@ def _ivf_incremental_oracle() -> str:
     return ",".join(parts)
 
 
-def _ivf_incremental_index(emb: DataFrame) -> dict:
-    """The incremental query's base-corpus-only k-means index — one
-    definition of the (train_pred, pred_tag) config shared by the
-    query and the registry warm-up so the two can never drift."""
-    base_pred = ((F.col("vec_id") >= _N_QUERIES)
-                 & (F.col("vec_id") % 5 != 0))
-    return _fp_kmeans_index(emb, _IVF_K, _IVF_ITERS,
-                            train_pred=base_pred,
-                            pred_tag="base_no_mod5")
-
-
 @register(
     "sim_ivf_incremental_topk",
     oracle=_ivf_incremental_oracle(),
@@ -1873,8 +1720,8 @@ def sim_ivf_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
-    k, iters, probe = _IVF_K, _IVF_ITERS, _IVF_PROBE
-    idx = _ivf_incremental_index(emb)
+    probe = _IVF_PROBE
+    idx = _kmeans_index(emb, "ivf_base")
     v, cents, assign, varr = (idx["v"], idx["cents"], idx["assign"],
                               idx["varr"])
     # Round-14 re-plan (guide §2.4): the arriving batch's
@@ -2086,14 +1933,7 @@ def rag_context_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_embedding_outlier_report(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    v = (emb.select(
-            "label",
-            F.col("vec_id"),
-            F.posexplode(F.expr(sim.as_double_array("embedding")))
-            .alias("pos", "x"))
-         .select("vec_id", "label", (F.col("pos") + 1).alias("dim"),
-                 F.floor(F.col("x") * F.lit(_IVF_SCALE)).cast("bigint")
-                 .alias("qv")))
+    v = _fp_rows(emb, "vec_id", "label")
     cent = (v.groupBy("label", "dim")
             .agg(F.floor(F.sum("qv").cast("double")
                          / F.count(F.lit(1)).cast("double"))
@@ -2330,14 +2170,7 @@ def sim_cosine_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_centroid_shift_report(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    v = (emb.select(
-            "label",
-            (F.col("vec_id") % 5 == 0).alias("is_arr"),
-            F.posexplode(F.expr(sim.as_double_array("embedding")))
-            .alias("pos", "x"))
-         .select("label", "is_arr", (F.col("pos") + 1).alias("dim"),
-                 F.floor(F.col("x") * F.lit(_IVF_SCALE)).cast("bigint")
-                 .alias("qv")))
+    v = _fp_rows(emb, "label", (F.col("vec_id") % 5 == 0).alias("is_arr"))
     half_mean_b = (F.floor(
         F.sum(F.when(~F.col("is_arr"), F.col("qv"))).cast("double")
         / F.sum(F.when(~F.col("is_arr"), 1).otherwise(0)).cast("double"))
@@ -2454,7 +2287,8 @@ def _ivf_fp_top5(spark: SparkSession, sf_dir: str, probe: int):
     from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
-    v, cents, assign = _fp_kmeans_assign(emb, _IVF_K, _IVF_ITERS)
+    idx = _kmeans_index(emb, "ivf")
+    v, cents, assign = idx["v"], idx["cents"], idx["assign"]
     qdist = (v.where(F.col("vec_id") < _N_QUERIES)
              .join(cents.hint("broadcast"), "dim")
              .groupBy(F.col("vec_id").alias("query_id"), F.col("cid"))
@@ -2572,10 +2406,10 @@ def _ivf_balance_oracle() -> str:
 )
 def sim_ivf_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    _, cents, assign = _fp_kmeans_assign(emb, _IVF_K, _IVF_ITERS)
-    sizes = assign.groupBy("cid").agg(
+    idx = _kmeans_index(emb, "ivf")
+    sizes = idx["assign"].groupBy("cid").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members"))
-    allc = cents.select("cid").distinct()
+    allc = idx["cents"].select("cid").distinct()
     filled = (allc.join(sizes, "cid", "left")
               .select("cid", F.coalesce("n_members", F.lit(0))
                       .cast("bigint").alias("n_members")))
@@ -3070,7 +2904,7 @@ def sim_quantized_l2_histogram(spark: SparkSession,
 )
 def sim_ivf_balance_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    _, _, assign = _fp_kmeans_assign(emb, _IVF_K, _IVF_ITERS)
+    assign = _kmeans_index(emb, "ivf")["assign"]
     sizes = assign.groupBy("cid").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vectors"))
     tot = sizes.agg(F.sum("n_vectors").cast("bigint").alias("_n"))
@@ -3081,18 +2915,131 @@ def sim_ivf_balance_census(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .cast("bigint").alias("share_ppm")))
 
 
+# ---------------------------------------------------------------------------
+# The trained-index memo. Every fixed-point Lloyd config in this module
+# — the IVF index, the incremental IVF's base-corpus index, SemDeDup's
+# clusters and the PQ codebooks — trains side by side in ONE loop over
+# the corpus's fixed-point table, keyed by config id, so each Lloyd
+# iteration runs one join and one groupBy for all of them (operator
+# fusion, ICDE 2025; PAPERS.md). The result is a persistent artifact
+# trained once per corpus and served to every query (REPOSE, ICDE
+# 2021), stored through durable_memo as tag `kmeans_index` with parts
+# cents (cfg, sub, cid, dim, cq) and assign (cfg, sub, vec_id, cid),
+# where cfg is the config's position in _LLOYD; with
+# $SPARK_GRAFT_MEMO_DIR set it persists as fingerprint-guarded
+# snapshot tables. Each config's slice is bit-identical to its DuckDB
+# chain (_fp_kmeans_ctes, _pq_oracle).
+# ---------------------------------------------------------------------------
+
+# (cfg, k, iters, train_pred, subspaces). k None is SemDeDup's
+# corpus-derived k (_sd_k). A train_pred restricts training to the
+# vectors it admits and seeds on the k lowest such ids, as the
+# oracle's train_pred does; without one the seeds are vec_id < k. A
+# config with m subspaces trains k centroids per block of DIM / m
+# dims: sub = (dim - 1) div (DIM / m), always 0 when m is 1.
+_LLOYD = (
+    ("ivf", _IVF_K, _IVF_ITERS, None, 1),
+    ("ivf_base", _IVF_K, _IVF_ITERS, _INC_BASE_PRED, 1),
+    ("semdedup", None, _SD_ITERS, None, 1),
+    ("pq", _PQ_K, _PQ_ITERS, None, _PQ_M),
+)
+
+
+def _kmeans_index(emb: DataFrame, cfg: str) -> dict:
+    """One config's slice of the trained-index memo: {v, varr} (the
+    corpus's fixed-point table) plus cents (cid, dim, cq) and assign
+    (vec_id, cid) — the centroids after the config's last iteration
+    and its last assignment. PQ keeps `sub` in both parts: they are
+    its codebooks and its corpus codes."""
+    from iq_to_hdl_migration_spark.sources.memo import durable_memo
+
+    table = _fp_table(emb)
+    # "p4" stamps the part layout (every config in one cents/assign
+    # pair, keyed by cfg): a persisted per-config index misses
+    idx = durable_memo("kmeans_index", emb.sparkSession, "", emb,
+                       lambda: _lloyd_train(emb, table["v"]),
+                       extra=("p4", _LLOYD, _SD_K_MIN, _SD_TARGET))
+    pos = [c[0] for c in _LLOYD].index(cfg)
+    drop = ("cfg",) if cfg == "pq" else ("cfg", "sub")
+    return {**table, **{
+        part: idx[part].where(F.col("cfg") == pos).drop(*drop)
+        for part in ("cents", "assign")}}
+
+
+def _lloyd_train(emb: DataFrame, v: DataFrame) -> dict:
+    """The one Lloyd loop — the Spark twin of _fp_kmeans_ctes and of
+    _pq_oracle's pd/pa/pu/pc chain, for every _LLOYD config at once:
+    iteration i joins the rows of the configs with iters >= i to the
+    centroids on (cfg, dim), assigns each (vec_id, cfg, sub) its
+    nearest centroid by (d2, cid), and floor-mean updates the
+    centroids per (cfg, sub, cid, dim). A config that is done keeps
+    its centroids through the left join and the assignment of its own
+    last iteration. The centroids are sum(k) * DIM rows (broadcast);
+    the per-iteration shuffle is the vec-sized dist groupBy — linear
+    in the corpus, never pairwise."""
+    from functools import reduce
+
+    from pyspark.sql import Window
+
+    def union(dfs):
+        return reduce(DataFrame.unionByName, dfs)
+
+    n = emb.count()  # SemDeDup's k; at 100 TB this is table metadata
+    train, seeds = [], []
+    for cfg, (_, k, iters, pred, m) in enumerate(_LLOYD):
+        k = _sd_k(n) if k is None else k
+        tv = (v if pred is None else v.where(pred)).select(
+            F.lit(cfg).alias("cfg"),
+            F.expr(f"CAST((dim - 1) div {sim.DIM // m} AS INT)")
+            .alias("sub"), "vec_id", "dim", "qv")
+        if pred is None:
+            seed = tv.where(F.col("vec_id") < k)
+        else:
+            ids = (tv.select("vec_id").distinct()
+                   .orderBy("vec_id").limit(k))
+            seed = tv.join(F.broadcast(ids), "vec_id")
+        train.append((cfg, iters, tv))
+        seeds.append(seed.select("cfg", "sub",
+                                 F.col("vec_id").alias("cid"), "dim",
+                                 F.col("qv").alias("cq")))
+    cents, assign = union(seeds), None
+    for i in range(1, max(iters for _, iters, _ in train) + 1):
+        live = [cfg for cfg, iters, _ in train if iters >= i]
+        tv = union([t for _, iters, t in train if iters >= i])
+        # (cfg, dim) fixes sub, and two INT keys pack into one long,
+        # so the probe is a LongHashedRelation lookup, not a generic
+        # row hash (about a third less task CPU at sf0.1 on 4 cores)
+        dist = (tv.join(cents.drop("sub").hint("broadcast"),
+                        ["cfg", "dim"])
+                .groupBy("vec_id", "cfg", "sub", "cid")
+                .agg(F.sum((F.col("qv") - F.col("cq"))
+                           * (F.col("qv") - F.col("cq"))).alias("d2")))
+        wa = Window.partitionBy("vec_id", "cfg", "sub").orderBy("d2", "cid")
+        step = (dist.withColumn("rn", F.row_number().over(wa))
+                .where(F.col("rn") == 1)
+                .select("cfg", "sub", "vec_id", "cid"))
+        if assign is not None:
+            step = step.unionByName(assign.where(~F.col("cfg").isin(live)))
+        assign = step.localCheckpoint()
+        upd = (assign.join(tv, ["cfg", "sub", "vec_id"])
+               .groupBy("cfg", "sub", "cid", "dim")
+               .agg(F.floor(F.sum("qv").cast("double")
+                            / F.count(F.lit(1)).cast("double"))
+                    .cast("bigint").alias("ucq")))
+        cents = (cents.join(upd, ["cfg", "sub", "cid", "dim"], "left")
+                 .select("cfg", "sub", "cid", "dim",
+                         F.coalesce("ucq", "cq").alias("cq"))
+                 .localCheckpoint())
+    return {"cents": cents, "assign": assign}
+
+
 def warm_similarity_memos(spark: SparkSession, sf_dir: str) -> None:
     """Build every durable memo this module's headline queries serve
-    from — the quantized corpus, the fixed-point table, the three
-    trained k-means index configs, and the PQ index (all four train on
-    the one fixed-point table) — exactly as the queries themselves
-    would on first call. Part of the registry-level ingest warm-up
-    (`queries.warm.warm_all_memos`, r14 verdict #2) so the bench's
-    `memo_build_sec` stamp covers the FULL stored-structure build,
-    not just the dedup structures."""
-    emb = load_table(spark, sf_dir, "embeddings")
+    from — the quantized corpus, the fixed-point table and the trained
+    index of every Lloyd config (which trains on that table) — exactly
+    as the queries themselves would on first call. Part of the
+    registry-level ingest warm-up (`queries.warm.warm_all_memos`, r14
+    verdict #2) so the bench's `memo_build_sec` stamp covers the FULL
+    stored-structure build, not just the dedup structures."""
     _quantized_corpus(spark, sf_dir)
-    _fp_kmeans_index(emb, _IVF_K, _IVF_ITERS)          # IVF family
-    _ivf_incremental_index(emb)                        # base-corpus IVF
-    _fp_kmeans_index(emb, _sd_k(emb.count()), _SD_ITERS)  # SemDeDup
-    _pq_index(spark, sf_dir)                           # PQ codebooks
+    _kmeans_index(load_table(spark, sf_dir, "embeddings"), "ivf")

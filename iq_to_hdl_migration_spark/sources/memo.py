@@ -49,13 +49,13 @@ def _tag_lock(tag: str) -> threading.Lock:
 
 
 def _memo(tag: str, spark: SparkSession, sf_dir: str, src: DataFrame,
-          extra: tuple, single_live: bool,
-          make: Callable[[str], object]):
+          extra: tuple, make: Callable[[str], object]):
     """The one lookup path under both memo kinds. The key is
     (applicationId, sf_dir, staged-warehouse env, source fingerprint,
     *extra); a miss runs `make(fingerprint)` under the tag's build
     lock, re-checking the store first (double-checked: a racer may
-    have built it while this thread waited)."""
+    have built it while this thread waited). Each tag keeps one live
+    entry — one corpus per session — so a new key evicts the old."""
     from iq_to_hdl_migration_spark.sources.bucketed import (
         _source_fingerprint)
 
@@ -69,22 +69,18 @@ def _memo(tag: str, spark: SparkSession, sf_dir: str, src: DataFrame,
             hit = store.get(key)
             if hit is None:
                 hit = make(fp)
-                if single_live:
-                    store.clear()
+                store.clear()
                 store[key] = hit
     return hit
 
 
 def session_memo(tag: str, spark: SparkSession, sf_dir: str,
                  src: DataFrame, build: Callable[[], object],
-                 extra: tuple = (), single_live: bool = True):
+                 extra: tuple = ()):
     """Return the memoized structure for (tag, corpus), building it on
     first use. `src` is the frame whose backing files fingerprint the
-    corpus; `extra` extends the key (e.g. hyperparameters);
-    `single_live=True` keeps one live entry per tag (the common case —
-    one corpus per session), False lets configs coexist."""
-    return _memo(tag, spark, sf_dir, src, extra, single_live,
-                 lambda _fp: build())
+    corpus; `extra` extends the key (e.g. hyperparameters)."""
+    return _memo(tag, spark, sf_dir, src, extra, lambda _fp: build())
 
 
 # A rebuild retains this many snapshot versions per part after vacuum:
@@ -97,9 +93,9 @@ _KEEP_VERSIONS = 2
 
 def _structure_dir(table_dir: str, tag: str, fkey: str) -> pathlib.Path:
     """On-disk home of one (tag, build-key) structure. The digest in
-    the path lets configs of the same tag (e.g. kmeans_index at three
-    (k, iters) settings, dedup_components per threshold) coexist as
-    independent snapshot tables instead of overwriting one pointer.
+    the path keeps builds of one tag under different keys (another
+    sf_dir, another hyperparameter stamp in `extra`) in independent
+    snapshot tables instead of overwriting one pointer.
 
     Layout changed in round 10 (digest level added). The memo dir is a
     CACHE — pre-r10 layouts are simply never matched (fail-closed miss
@@ -169,9 +165,9 @@ def _gc_superseded_digests(table_dir: str, tag: str, fkey: str,
     _KEEP_VERSIONS for in-flight readers; the deferral extends the
     same old-or-new guarantee across corpus regeneration — a reader
     that resolved the old corpus's meta survives the whole commit that
-    superseded it. Sibling configs (different extra, e.g. coexisting
-    kmeans settings) are untouched, as is anything unparseable (be
-    conservative: an unrecognized dir is never deleted)."""
+    superseded it. Sibling configs (different sf_dir or extra, e.g.
+    an older layout stamp) are untouched, as is anything unparseable
+    (be conservative: an unrecognized dir is never deleted)."""
     import shutil
 
     try:
@@ -237,8 +233,8 @@ def _load_structure(spark: SparkSession, table_dir: str, tag: str,
 
 def durable_memo(tag: str, spark: SparkSession, sf_dir: str,
                  src: DataFrame, build: Callable[[], dict[str, DataFrame]],
-                 extra: tuple = (), table_dir: str | None = None,
-                 single_live: bool = True) -> dict[str, DataFrame]:
+                 extra: tuple = (), table_dir: str | None = None
+                 ) -> dict[str, DataFrame]:
     """`session_memo` with a persisted-snapshot tier underneath — the
     100 TB swap promised above, mechanized. `build` must return a dict
     of named DataFrame parts (e.g. {"cents": ..., "codes": ...}).
@@ -267,4 +263,4 @@ def durable_memo(tag: str, spark: SparkSession, sf_dir: str,
                 _persist_structure(parts, tdir, tag, fkey)
         return parts
 
-    return _memo(tag, spark, sf_dir, src, extra, single_live, make)
+    return _memo(tag, spark, sf_dir, src, extra, make)

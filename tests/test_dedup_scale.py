@@ -161,6 +161,47 @@ def test_semdedup_k_grows_with_corpus():
         assert con.sql(f"SELECT {_SD_K_SQL}").fetchone()[0] == _sd_k(n)
 
 
+def test_semdedup_fused_assignment_past_k8(spark, tmp_path, monkeypatch):
+    """Every test corpus has n <= 2048, where SemDeDup's k is IVF's 8.
+    On a synthetic corpus with n just past 2048 (k = 9) SemDeDup's
+    slice of the fused Lloyd memo must still equal the DuckDB chain's
+    last assignment a2, row for row."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iq_to_hdl_migration_spark.queries.similarity_queries import (
+        _SD_ITERS, _SD_K_SQL, _fp_kmeans_ctes, _kmeans_index, _sd_k)
+    from iq_to_hdl_migration_spark.sources import memo
+
+    n = 2_100
+    assert _sd_k(n) == 9
+    vecs = np.random.default_rng(7).uniform(
+        -1.0, 1.0, (n, similarity.DIM)).astype(np.float32)
+    path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(pa.table({
+        "vec_id": pa.array(range(n), pa.int64()),
+        "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
+        "label": pa.array(np.zeros(n, np.int32))}), path)
+
+    monkeypatch.delenv("SPARK_GRAFT_MEMO_DIR", raising=False)
+    emb = spark.read.parquet(path)
+    got = sorted(tuple(r) for r in _kmeans_index(emb, "semdedup")[
+        "assign"].select("vec_id", "cid").collect())
+    for tag in ("fixedpoint_table", "kmeans_index"):
+        memo._MEMOS.pop(tag, None)  # drop the synthetic corpus's index
+
+    con = duckdb.connect()
+    con.execute("CREATE VIEW embeddings AS "
+                f"SELECT * FROM read_parquet('{path}')")
+    want = sorted(con.sql(
+        f"{_fp_kmeans_ctes(_SD_K_SQL, _SD_ITERS, final_update=False)} "
+        f"SELECT vec_id, cid FROM a{_SD_ITERS}").fetchall())
+    assert len(want) == n and {c for _, c in want} == set(range(9))
+    assert got == want
+
+
 def test_capped_plan_uses_window_group_limit(spark):
     """The row_number()<=cap filter must compile to WindowGroupLimit —
     the map-side partial top-k that keeps oversized buckets from ever

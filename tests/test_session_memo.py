@@ -189,23 +189,24 @@ def test_durable_memo_fail_closed_on_damaged_snapshot(spark, sf_dir,
 
 def test_pq_index_snapshot_serves_bit_identical(spark, sf_dir, tmp_path,
                                                 monkeypatch):
-    """End-to-end through the serving query: train+persist the PQ
-    index, kill the in-memory memo, reload from the snapshot table —
-    the served top-k must be bit-identical, and the warm start must
-    not write a single new snapshot version."""
+    """End-to-end through the serving query: train+persist the
+    trained-index memo the PQ codebooks and codes live in, kill the
+    in-memory memo, reload from the snapshot table — the served top-k
+    must be bit-identical, and the warm start must not write a single
+    new snapshot version."""
     from iq_to_hdl_migration_spark.queries.similarity_queries import (
         sim_pq_adc_topk)
     from iq_to_hdl_migration_spark.sources import memo, snapshots
 
     monkeypatch.setenv("SPARK_GRAFT_MEMO_DIR", str(tmp_path))
-    memo._MEMOS.pop("pq_index", None)
+    memo._MEMOS.pop("kmeans_index", None)
     r1 = sorted(tuple(r) for r in sim_pq_adc_topk(spark, sf_dir).collect())
-    for part in ("cents", "codes"):
-        dirs = _part_dirs(tmp_path, "pq_index", part)
+    for part in ("cents", "assign"):
+        dirs = _part_dirs(tmp_path, "kmeans_index", part)
         assert len(dirs) == 1
         assert snapshots.current_version(dirs[0]) == 1
 
-    memo._MEMOS.pop("pq_index", None)
+    memo._MEMOS.pop("kmeans_index", None)
 
     def poisoned_write(*a, **k):
         raise AssertionError("warm start must not rebuild/rewrite")
@@ -213,20 +214,23 @@ def test_pq_index_snapshot_serves_bit_identical(spark, sf_dir, tmp_path,
     monkeypatch.setattr(snapshots, "write_snapshot", poisoned_write)
     r2 = sorted(tuple(r) for r in sim_pq_adc_topk(spark, sf_dir).collect())
     assert r2 == r1
-    memo._MEMOS.pop("pq_index", None)  # leave no env-keyed entry behind
+    memo._MEMOS.pop("kmeans_index", None)  # no env-keyed entry leaks
 
 
 def test_memo_extra_key_separates_configs(spark, sf_dir, tmp_path):
     work = _copy_docs(sf_dir, tmp_path)
     docs = load_table(spark, work, "documents")
     a = session_memo("test_cfg", spark, work, docs,
-                     lambda: ("k4",), extra=(4,), single_live=False)
+                     lambda: ("k4",), extra=(4,))
     b = session_memo("test_cfg", spark, work, docs,
-                     lambda: ("k8",), extra=(8,), single_live=False)
+                     lambda: ("k8",), extra=(8,))
+    b2 = session_memo("test_cfg", spark, work, docs,
+                      lambda: ("rebuilt",), extra=(8,))
+    assert a == ("k4",) and b == ("k8",), "extra must separate keys"
+    assert b2 is b, "the same extra must hit"
     a2 = session_memo("test_cfg", spark, work, docs,
-                      lambda: ("rebuilt",), extra=(4,), single_live=False)
-    assert a == ("k4",) and b == ("k8",)
-    assert a2 is a, "coexisting configs must not evict each other"
+                      lambda: ("k4 again",), extra=(4,))
+    assert a2 == ("k4 again",), "one live entry per tag: k8 evicted k4"
 
 
 def test_lsh_pair_graph_snapshot_serves_bit_identical(spark, sf_dir,
@@ -271,6 +275,7 @@ _DURABLE_SERVING = [
     ("copurchase_edges", "graph_triangle_counts"),
     ("winnowing_index", "text_winnowing_similarity"),
     ("kmeans_index", "sim_ivf_fixedpoint_topk"),
+    ("kmeans_index", "sim_pq_adc_topk"),
     ("fixedpoint_table", "sim_ivf_fixedpoint_topk"),
     ("dedup_components", "dedup_minhash_clusters"),
     ("quantized_corpus", "sim_quantized_topk"),

@@ -150,14 +150,15 @@ def test_ivf_fixedpoint_recall_reasonable(spark, sf_dir):
 def test_similarity_ingest_builds_one_fixedpoint_table(spark, sf_dir,
                                                        monkeypatch):
     """From a cold memo, the similarity ingest explodes the embeddings
-    to per-dim fixed-point rows ONCE: the three k-means configs and
-    the PQ index all train on the same stored table."""
+    to per-dim fixed-point rows ONCE: every Lloyd config (the three
+    k-means configs and the PQ codebooks) trains on the same stored
+    table."""
     from iq_to_hdl_migration_spark.queries.similarity_queries import (
         warm_similarity_memos)
     from iq_to_hdl_migration_spark.sources import memo
 
     monkeypatch.delenv("SPARK_GRAFT_MEMO_DIR", raising=False)
-    for tag in ("fixedpoint_table", "kmeans_index", "pq_index"):
+    for tag in ("fixedpoint_table", "kmeans_index"):
         memo._MEMOS.pop(tag, None)
     explodes = []
     real = F.posexplode
@@ -165,3 +166,30 @@ def test_similarity_ingest_builds_one_fixedpoint_table(spark, sf_dir,
         F, "posexplode", lambda *a: explodes.append(1) or real(*a))
     warm_similarity_memos(spark, sf_dir)
     assert explodes == [1]
+
+
+def test_similarity_ingest_trains_every_config_in_one_loop(
+        spark, sf_dir, monkeypatch):
+    """From a cold memo, the similarity ingest checkpoints 3 times for
+    the quantized corpus and the fixed-point table, then twice per
+    Lloyd iteration of ONE loop that trains every config side by side
+    (max iters = 3) — not once per config and iteration (23 in all)."""
+    from pyspark.sql.classic.dataframe import DataFrame as CDF
+
+    from iq_to_hdl_migration_spark.queries.similarity_queries import (
+        warm_similarity_memos)
+    from iq_to_hdl_migration_spark.sources import memo
+
+    monkeypatch.delenv("SPARK_GRAFT_MEMO_DIR", raising=False)
+    for tag in ("quantized_corpus", "fixedpoint_table", "kmeans_index"):
+        memo._MEMOS.pop(tag, None)
+    eager = []
+    real = CDF.localCheckpoint
+
+    def spy(self, *a, **k):
+        eager.append(a[0] if a else k.get("eager", True))
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(CDF, "localCheckpoint", spy)
+    warm_similarity_memos(spark, sf_dir)
+    assert sum(eager) <= 3 + 2 * 3 + 1, eager

@@ -17,8 +17,8 @@ def test_warm_all_memos_builds_then_hits(spark):
     t0 = time.perf_counter()
     t_again = warm_all_memos(spark, SF_DIR)
     wall = time.perf_counter() - t0
-    # second pass is dict lookups plus the one scalar emb.count() the
-    # SemDeDup k derivation issues — far under the build cost (loose
-    # bound so a noisy host can't flake it)
+    # second pass is dict lookups (the source fingerprint's stat
+    # calls) — far under the build cost (loose bound so a noisy host
+    # can't flake it)
     assert wall < max(2.0, t_build / 5), (wall, t_build)
     assert t_again <= t_build
