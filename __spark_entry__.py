@@ -35,6 +35,10 @@ def entry(spark: SparkSession) -> DataFrame:
 # tests/test_registry_vs_oracle.py still covers the full registry at
 # whatever sf the suite runs.
 _SAMPLE_PRIORITY = [
+    # the three formerly rows-only queries, now reading the stored
+    # fixed-point PageRank trajectory and integer k-means index: their
+    # rows changed, so the driver hash-checks them first
+    "graph_user_pagerank_top20", "sim_ivf_topk", "sim_ann_recall",
     # round 15, tier 1: every query whose physical shape changed this
     # OPTIMIZATION round gets a driver slot so the restructure is
     # proven under the driver's own hash (see OPTIMIZATION_r15.md):
@@ -71,14 +75,7 @@ _SAMPLE_PRIORITY = [
     "text_winnowing_fingerprints", "text_winnowing_match_pairs",
     "text_winnowing_similarity", "text_dup_ngram_chars",
     "text_contamination_13gram", "events_haar_energy_profile",
-    "stream_haar_energy", "snapshot_version_diff",
-    "snapshot_time_travel_audit",
-    # round 15, tier 3: sketch_kmv_set_ops was the ONE r14
-    # restructure that missed the r14 sample window (committed after
-    # the list froze — r14 verdict); it closes the evidence gap here.
-    # The rotated-out r14 tier-4 names (q1, asof, scd2, langid,
-    # bruteforce, countmin, s7) all hold green rows from r11-r14.
-    "sketch_kmv_set_ops",
+    "stream_haar_energy",
 ]
 
 

@@ -1,16 +1,19 @@
 """Distributed PageRank over an edge-list DataFrame — the iterative
 join/aggregate pattern (same family as the transitive-closure A5 and
-connected-components operators, reference has nothing comparable).
+connected-components operators, reference has nothing comparable) —
+plus synchronous label propagation.
 
+PageRank is integer fixed point: ranks live in integer units of 2^-40
+and damping is the rational 17/20, so every iteration is exact BIGINT
+arithmetic — floor division only ever sheds deterministic dust, which
+the dangling-mass term absorbs. A 10-iteration run is therefore
+bit-identical on ANY engine that has 64-bit integers, which is what
+lets the registry carry a full DuckDB value-hash oracle for an
+ITERATIVE algorithm (float sums would be partition-order-dependent).
 Each iteration is one join (ranks x edges on src) + one groupBy(dst):
 both shuffle on node id, so a cluster co-partitions them and the
-per-iteration cost is linear in |edges|.  The contribution table is
-localCheckpoint-ed eagerly every iteration, which both truncates
-lineage (no O(iters)-deep plan) and makes the dangling-mass scalar —
-1 - sum(contrib), since ranks always sum to 1 — a near-free aggregate
-over materialized blocks instead of a second graph traversal.
-Dangling nodes' mass is redistributed uniformly (the standard
-correction), so ranks sum to 1 every iteration.
+per-iteration cost is linear in |edges|. Dangling nodes' mass is
+redistributed uniformly (the standard correction).
 """
 
 from __future__ import annotations
@@ -18,61 +21,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-
-def pagerank(edges: DataFrame, iters: int = 10, damping: float = 0.85,
-             src: str = "src", dst: str = "dst",
-             weight: str | None = None) -> DataFrame:
-    """Weighted PageRank. Returns (node, rank); ranks sum to 1."""
-    w = F.col(weight).cast("double") if weight else F.lit(1.0)
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"),
-                     w.alias("w"))
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select(F.col("dst").alias("node")))
-             .distinct().cache())
-    n = nodes.count()
-
-    out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
-    e_norm = (e.join(out_w, "src")
-              .select("src", "dst", (F.col("w") / F.col("out_w"))
-                      .alias("frac")).cache())
-
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    base = (1.0 - damping) / n
-    for _ in range(iters):
-        # One job per iteration: the eager localCheckpoint materializes
-        # the contributions AND truncates lineage, so the dangling-mass
-        # scalar below is a cheap agg over in-memory blocks instead of
-        # the extra left_anti traversal of `ranks` it used to be.
-        contrib = (
-            ranks.join(e_norm, ranks["node"] == e_norm["src"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("frac")).alias("c"))
-        ).localCheckpoint()
-        # ranks sum to 1 and every non-dangling node forwards its whole
-        # rank (frac sums to 1 per src), so the mass parked on dangling
-        # nodes is exactly 1 - sum(contrib) — no second graph traversal.
-        s = contrib.agg(F.sum("c")).collect()[0][0] or 0.0
-        dangling = 1.0 - s
-        ranks = (
-            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-            .select("node",
-                    (F.lit(base)
-                     + F.lit(damping)
-                     * (F.coalesce(F.col("c"), F.lit(0.0))
-                        + F.lit(dangling / n))).alias("rank"))
-        )
-    return ranks
-
-
-# Fixed-point integer PageRank: same dataflow as `pagerank`, but ranks
-# live in integer units of 2^-40 and damping is the rational 17/20, so
-# every iteration is exact BIGINT arithmetic — floor division only ever
-# sheds deterministic dust, which the dangling-mass term absorbs. The
-# point: a 10-iteration run is bit-identical on ANY engine that has
-# 64-bit integers, which is what lets the registry carry a full DuckDB
-# value-hash oracle for an ITERATIVE algorithm (the double-precision
-# `pagerank` stays NumPy-locked instead — float sums are
-# partition-order-dependent).
 PR_SCALE = 1 << 40
 PR_DAMP_NUM = 17
 PR_DAMP_DEN = 20

@@ -71,14 +71,26 @@ def with_norm(df: DataFrame, vec_col: str = "embedding",
               .withColumn("norm", F.sqrt(dot_expr(out, out))))
 
 
+def _top_by_cosine(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of scored (query_id, cand_id, cosine) rows,
+    ordered by (cosine DESC, cand_id ASC) — the tie-break every oracle
+    states."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
+                                               F.asc("cand_id"))
+    return (scored.withColumn("rnk", F.row_number().over(w))
+            .where(F.col("rnk") <= k)
+            .select("query_id", "cand_id", "cosine",
+                    F.col("rnk").cast("int").alias("rnk")))
+
+
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                      id_col: str = "vec_id",
                      vec_col: str = "embedding") -> DataFrame:
     """Exact top-k cosine neighbors per query (baseline). The query set
     is broadcast; corpus is scanned once; only the per-query top-k rows
     survive the window."""
-    from pyspark.sql import Window
-
     c = with_norm(corpus.select(F.col(id_col).alias("cand_id"),
                                 F.col(vec_col).alias("cemb")), "cemb", "cvec")
     q = with_norm(queries.select(F.col(id_col).alias("query_id"),
@@ -89,12 +101,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
         .withColumn("cosine",
                     dot_expr("qvec", "cvec") / (F.col("qnorm") * F.col("norm")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("cand_id"))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= k)
-            .select("query_id", "cand_id", "cosine",
-                    F.col("rnk").cast("int").alias("rnk")))
+    return _top_by_cosine(scored, k)
 
 
 def _bits_expr(vec_col: str) -> str:
@@ -191,107 +198,25 @@ def embedding_near_dup_pairs(corpus: DataFrame, min_cosine: float = 0.9,
     return pairs.unionByName(exact_pairs)
 
 
-# --------------------------- IVF (inverted file) ----------------------------
-
-def kmeans_centroids(corpus: DataFrame, k: int = 16, iters: int = 3,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> list[list[float]]:
-    """Deterministic Lloyd iterations: seeds = the k lowest-id vectors,
-    then `iters` assign/average rounds. Centroid fitting runs on a
-    sample/collected driver side (centroid count is tiny); assignment
-    stays distributed."""
-    seeds = [list(r.v) for r in
-             corpus.select(F.col(id_col).alias("i"),
-                           F.expr(as_double_array(vec_col)).alias("v"))
-             .orderBy("i").limit(k).collect()]
-    cents = seeds
-    for _ in range(iters):
-        assigned = _assign_centroid(corpus, cents, id_col, vec_col)
-        sums = (assigned
-                .select("centroid_id",
-                        F.posexplode(F.expr(as_double_array(vec_col)))
-                        .alias("pos", "x"))
-                .groupBy("centroid_id", "pos")
-                .agg(F.sum(F.col("x").cast("decimal(30,12)")).alias("s"),
-                     F.count(F.lit(1)).alias("n"))
-                .collect())
-        agg: dict[int, list[float]] = {}
-        cnt: dict[int, int] = {}
-        for r in sums:
-            agg.setdefault(r.centroid_id, [0.0] * DIM)[r.pos] = \
-                float(r.s) / r.n
-            cnt[r.centroid_id] = r.n
-        cents = [agg.get(i, cents[i]) for i in range(len(cents))]
-    return cents
-
-
-def _assign_centroid(df: DataFrame, centroids: list[list[float]],
-                     id_col: str, vec_col: str) -> DataFrame:
-    """Nearest centroid by cosine-free squared-distance argmin, fully
-    JVM-side (centroids inlined as a literal array)."""
-    cent_sql = "array(" + ", ".join(
-        "array(" + ", ".join(repr(x) + "D" for x in c) + ")"
-        for c in centroids) + ")"
-    dv = as_double_array(vec_col)
-    dist = ("aggregate(zip_with(c, v, (x, y) -> (x - y) * (x - y)), "
-            "CAST(0.0 AS DOUBLE), (acc, d) -> acc + d)")
-    return (df.withColumn("v", F.expr(dv))
-            .withColumn(
-                "centroid_id",
-                (F.expr(f"""
-                    array_position(
-                        transform({cent_sql}, c -> {dist}),
-                        array_min(transform({cent_sql}, c -> {dist})))
-                """).cast("int") - 1))
-            .drop("v"))
-
-
-def ivf_topk(corpus: DataFrame, queries: DataFrame,
-             centroids: list[list[float]], k: int = 5, n_probe: int = 2,
-             id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
-    """IVF ANN: corpus partitioned into centroid lists; each query
-    probes its n_probe nearest lists only. At scale the inverted lists
-    are partition keys — a probe touches n_probe/k of the data."""
-    from pyspark.sql import Window
-
-    c = with_norm(corpus.select(F.col(id_col).alias("cand_id"),
-                                F.col(vec_col).alias("cemb")), "cemb", "cvec")
-    c = _assign_centroid(c, centroids, "cand_id", "cemb") \
-        .withColumnRenamed("centroid_id", "list_id")
-
-    cent_sql = "array(" + ", ".join(
-        "array(" + ", ".join(repr(x) + "D" for x in cc) + ")"
-        for cc in centroids) + ")"
-    dist = ("aggregate(zip_with(c, qv, (x, y) -> (x - y) * (x - y)), "
-            "CAST(0.0 AS DOUBLE), (acc, d) -> acc + d)")
-    q = with_norm(queries.select(F.col(id_col).alias("query_id"),
-                                 F.col(vec_col).alias("qemb")), "qemb", "qvec")
-    q = (q.withColumnRenamed("norm", "qnorm")
-         .withColumn("qv", F.expr(as_double_array("qemb")))
-         .withColumn("probe_lists", F.expr(f"""
-             slice(array_sort(transform({cent_sql}, (c, i) ->
-                       named_struct('d', {dist}, 'i', i)),
-                   (a, b) -> CASE WHEN a.d < b.d THEN -1
-                                  WHEN a.d > b.d THEN 1 ELSE 0 END),
-                   1, {n_probe})
-         """))
-         .select("query_id", "qvec", "qnorm",
-                 F.explode(F.expr("transform(probe_lists, p -> p.i)"))
-                 .alias("list_id")))
+def rerank_topk(corpus: DataFrame, queries: DataFrame, cands: DataFrame,
+                k: int = 5) -> DataFrame:
+    """Exact cosine top-k over an index's (query_id, cand_id) candidate
+    pairs: brute_force_topk's score and tie-break, restricted to the
+    pairs the index probed. The query set is broadcast; the corpus
+    joins the candidates on cand_id."""
+    c = with_norm(corpus.select(F.col("vec_id").alias("cand_id"),
+                                F.col("embedding").alias("cemb")),
+                  "cemb", "cvec")
+    q = with_norm(queries.select(F.col("vec_id").alias("query_id"),
+                                 F.col("embedding").alias("qemb")),
+                  "qemb", "qvec")
+    q = q.withColumnRenamed("norm", "qnorm")
     scored = (
-        c.join(F.broadcast(q), ["list_id"])
-        .where(F.col("query_id") != F.col("cand_id"))
-        .dropDuplicates(["query_id", "cand_id"])
+        cands.join(F.broadcast(q), "query_id").join(c, "cand_id")
         .withColumn("cosine",
                     dot_expr("qvec", "cvec") / (F.col("qnorm") * F.col("norm")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("cand_id"))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= k)
-            .select("query_id", "cand_id", "cosine",
-                    F.col("rnk").cast("int").alias("rnk")))
+    return _top_by_cosine(scored, k)
 
 
 def ann_lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -309,8 +234,6 @@ def ann_lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     substantially higher recall at the same corpus layout, still a
     broadcast equi-join (probe expansion happens on the tiny query
     side only)."""
-    from pyspark.sql import Window
-
     c = with_norm(corpus.select(F.col(id_col).alias("cand_id"),
                                 F.col(vec_col).alias("cemb")), "cemb", "cvec")
     c = exploded_buckets(c, "cemb")
@@ -337,9 +260,4 @@ def ann_lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     )
     scored = cands.withColumn(
         "cosine", dot_expr("qvec", "cvec") / (F.col("qnorm") * F.col("norm")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("cand_id"))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= k)
-            .select("query_id", "cand_id", "cosine",
-                    F.col("rnk").cast("int").alias("rnk")))
+    return _top_by_cosine(scored, k)

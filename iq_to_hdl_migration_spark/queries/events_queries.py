@@ -299,25 +299,6 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "graph_user_pagerank_top20",
-    oracle=None,  # iterative fixpoint; locked vs a dense NumPy
-                  # reference in tests/test_graph.py
-    doc="PageRank over the user interaction graph (directed edges "
-        "user_a -> user_b when a purchase by b follows a click by a in "
-        "the same hour bucket, weight = co-occurrence count); iterative "
-        "join+agg per round, lineage checkpointed — top 20 by rank",
-)
-def graph_user_pagerank_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from iq_to_hdl_migration_spark.operators.graph import pagerank
-
-    ranks = pagerank(_copurchase_click_edges(spark, sf_dir),
-                     iters=10, weight="weight")
-    return (ranks.orderBy(F.desc("rank"), F.asc("node"))
-            .limit(20)
-            .select(F.col("node").alias("user_id"), "rank"))
-
-
-@register(
     "events_churn_gaps",
     oracle=f"""
     WITH g AS (
@@ -446,9 +427,9 @@ def events_session_windows_native(spark: SparkSession,
 # ---------------------------------------------------------------------------
 # fixed-point PageRank with a FULL value-hash oracle: the iterative
 # fixpoint is exact BIGINT arithmetic (operators/graph.py
-# pagerank_fixedpoint), so its 10 iterations UNROLL into a generated
-# DuckDB CTE chain — refuting "iterative algorithms can only be
-# rows-only" for any algorithm that can be cast to integer updates.
+# pagerank_fixedpoint_trajectory), so its 10 iterations UNROLL into a
+# generated DuckDB CTE chain — refuting "iterative algorithms can only
+# be rows-only" for any algorithm that can be cast to integer updates.
 # ---------------------------------------------------------------------------
 
 # Flood cap for the click->purchase co-occurrence edge builder (r12
@@ -694,9 +675,8 @@ def graph_pagerank_convergence_report(spark: SparkSession,
     doc="integer fixed-point PageRank (2^-40 units, damping 17/20) over "
         "the click->purchase co-occurrence graph, top 20 — every "
         "iteration exact BIGINT arithmetic, so the 10-step fixpoint "
-        "value-hash-matches a generated 10-stage DuckDB CTE chain; the "
-        "double-precision variant stays NumPy-locked (float sums are "
-        "partition-order-dependent)",
+        "value-hash-matches a generated 10-stage DuckDB CTE chain; "
+        "graph_user_pagerank_top20 is its (user_id, rank) view",
 )
 def graph_user_pagerank_fixedpoint_top20(spark: SparkSession,
                                          sf_dir: str) -> DataFrame:
@@ -709,6 +689,25 @@ def graph_user_pagerank_fixedpoint_top20(spark: SparkSession,
     return (ranks.orderBy(F.desc("rank_q"), F.asc("node"))
             .limit(20)
             .select(F.col("node").alias("user_id"), "rank_q", "rank"))
+
+
+@register(
+    "graph_user_pagerank_top20",
+    oracle=f"""
+    SELECT user_id, rank FROM ({_pagerank_fixedpoint_oracle(iters=10)}) t
+    """,
+    doc="PageRank over the user interaction graph (directed edges "
+        "user_a -> user_b when a purchase by b follows a click by a in "
+        "the same hour bucket, weight = co-occurrence count), top 20 "
+        "by rank: the (user_id, rank = q / 2^40) view of the stored "
+        "10-iteration integer fixed-point trajectory, so it value-hash-"
+        "matches the same generated DuckDB CTE chain. Its rows changed "
+        "when the former float PageRank run went: ranks moved by at "
+        "most ~3e-11, the top-20 order did not",
+)
+def graph_user_pagerank_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return graph_user_pagerank_fixedpoint_top20(spark, sf_dir).select(
+        "user_id", "rank")
 
 
 # shared with the streaming twin (stream_gap_histogram)

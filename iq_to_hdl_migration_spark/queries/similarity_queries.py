@@ -3,9 +3,9 @@
 Everything LSH-shaped is hash-checked against DuckDB: the oracles
 re-implement the same sequential-fold double math via list_dot_product
 over DOUBLE[] casts and the same literal plane constants, so codes,
-cosines and rank orders are bit-identical across engines. Only the
-IVF probe (k-means fit) and the recall dashboard that includes it stay
-rows-only, with semantics locked by tests/test_similarity.py.
+cosines and rank orders are bit-identical across engines. The k-means
+paths (IVF, SemDeDup, PQ) train in integer fixed point, so their
+unrolled Lloyd chains hash-check too: every query here has an oracle.
 """
 
 from __future__ import annotations
@@ -60,12 +60,21 @@ def _lsh_topk_oracle(qcodes: str) -> str:
           ON q.table_idx = c.table_idx AND q.code = c.code
         WHERE q.vec_id != c.vec_id
     ),
+    {_rerank_oracle("cand", "v")}"""
+
+
+def _rerank_oracle(cand: str, vecs: str) -> str:
+    """The exact re-rank tail: the `cand` CTE's (query_id, cand_id)
+    pairs scored by float cosine over the `vecs` CTE's (vec_id, vec,
+    norm) rows, then top-5 by (cosine DESC, cand_id) — the
+    sim_bruteforce_topk score restricted to an index's candidates."""
+    return f"""
     scored AS (
-        SELECT cand.query_id, cand.cand_id,
+        SELECT c.query_id, c.cand_id,
                list_dot_product(qv.vec, cv.vec) / (qv.norm * cv.norm) AS cosine
-        FROM cand
-        JOIN v qv ON qv.vec_id = cand.query_id
-        JOIN v cv ON cv.vec_id = cand.cand_id
+        FROM {cand} c
+        JOIN {vecs} qv ON qv.vec_id = c.query_id
+        JOIN {vecs} cv ON cv.vec_id = c.cand_id
     )
     SELECT query_id, cand_id, cosine, CAST(rnk AS INTEGER) AS rnk
     FROM (
@@ -282,20 +291,6 @@ def dedup_embedding_cosine_pairs(spark: SparkSession,
 
 
 @register(
-    "sim_ivf_topk",
-    oracle=None,  # probe-set depends on k-means fit; recall asserted
-                  # vs brute force in tests/test_similarity.py
-    doc="IVF ANN: deterministic k-means(16) inverted lists, n_probe=2 "
-        "— each query touches ~1/8 of the corpus (brief: IVF variant)",
-)
-def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = sim.kmeans_centroids(emb, k=16, iters=2)
-    queries = emb.where(F.col("vec_id") < _N_QUERIES)
-    return sim.ivf_topk(emb, queries, cents, k=5, n_probe=2)
-
-
-@register(
     "sim_embedding_stats",
     oracle="""
     SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vecs,
@@ -323,40 +318,6 @@ def sim_embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                   / F.count(F.lit(1)).cast("double")).alias("avg_first"),
                  F.min(first).cast("double").alias("min_first"),
                  F.max(first).cast("double").alias("max_first")))
-
-
-@register(
-    "sim_ann_recall",
-    oracle=None,  # LSH/IVF candidate sets aren't SQL-expressible; the
-                  # recall numbers themselves are the semantic check
-    doc="self-measuring ANN quality: joins the LSH-ANN and IVF top-5 "
-        "sets against the exact brute-force top-5 and reports "
-        "recall@5 per method — the accept/reject dashboard a 100 TB "
-        "ANN deployment runs before trusting the approximate path. "
-        "On this synthetic corpus (i.i.d. random vectors, no cluster "
-        "structure) single-probe hyperplane LSH is the documented "
-        "worst case (~4%); IVF with nprobe=2 holds ~80%. Real "
-        "embedding corpora are clustered, which is what both methods "
-        "exploit — the query exists precisely to measure that before "
-        "switching off the exact path",
-)
-def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bf = sim_bruteforce_topk(spark, sf_dir).select("query_id", "cand_id")
-    k = 5
-    out = None
-    for method, fn in [("lsh", sim_ann_lsh_topk),
-                   ("lsh_multiprobe", sim_ann_multiprobe_topk),
-                   ("ivf", sim_ivf_topk)]:
-        approx = fn(spark, sf_dir).select("query_id", "cand_id")
-        hits = bf.join(approx, ["query_id", "cand_id"]).groupBy().count()
-        n_q = bf.select("query_id").distinct().count()
-        row = hits.select(
-            F.lit(method).alias("method"),
-            F.lit(n_q).cast("bigint").alias("n_queries"),
-            (F.col("count").cast("double") / F.lit(float(n_q * k)))
-            .alias("recall_at_5"))
-        out = row if out is None else out.unionByName(row)
-    return out
 
 
 @register(
@@ -482,11 +443,7 @@ def sim_embedding_quantize_stats(spark: SparkSession,
         "the centroids bit-exact across engines",
 )
 def sim_label_centroid_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = (emb.select("label", F.posexplode("embedding").alias("pos", "v"))
-         .select("label", (F.col("pos") + 1).alias("dim"),
-                 F.floor(F.col("v").cast("double") * 1048576.0)
-                 .cast("bigint").alias("qv")))
+    q = _fp_rows(load_table(spark, sf_dir, "embeddings"), "label")
     cent = (q.groupBy("label", "dim")
             .agg(((F.sum("qv").cast("double")
                    / F.count(F.lit(1)).cast("double"))
@@ -678,9 +635,9 @@ def sim_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # floor(sum/count) (numerator < 2^53 so the double division is exact
 # to the unit). Three unrolled iterations + the probe stage generate a
 # MATERIALIZED DuckDB CTE chain — same technique as the fixed-point
-# PageRank oracle. The float `sim_ivf_topk` stays rows-only (decimal
-# sums collected driver-side are not portable); THIS variant is the
-# cross-engine-verifiable twin.
+# PageRank oracle. The trained index is stored once per corpus
+# (`_kmeans_index`); sim_ivf_fixedpoint_topk re-ranks its probed
+# candidates by integer distance, sim_ivf_topk by exact float cosine.
 # ---------------------------------------------------------------------------
 
 _IVF_K = 8          # clusters; seeds = vec_id 0..7 quantized
@@ -759,10 +716,14 @@ def _fp_kmeans_ctes(k: int | str, iters: int, final_update: bool,
     return ",".join(parts)
 
 
-def _ivf_fixedpoint_oracle() -> str:
-    k, iters, probe = _IVF_K, _IVF_ITERS, _IVF_PROBE
-    parts = [_fp_kmeans_ctes(k, iters, final_update=True)]
-    parts.append(f"""
+def _ivf_probe_ctes(probe: int) -> str:
+    """WITH-chain prefix of every oracle that probes the trained `ivf`
+    lists: the Lloyd chain, then qdist (each probe vector's integer
+    distance to every final centroid), probes (its `probe` nearest
+    lists by (d2, cid)) and cand (the members of those lists, the
+    probe vector itself excluded)."""
+    iters = _IVF_ITERS
+    return _fp_kmeans_ctes(_IVF_K, iters, final_update=True) + f""",
     qdist AS MATERIALIZED (
         SELECT v.vec_id AS query_id, c.cid,
                SUM((v.qv - c.cq) * (v.qv - c.cq)) AS d2
@@ -781,7 +742,11 @@ def _ivf_fixedpoint_oracle() -> str:
         SELECT p.query_id, a.vec_id AS cand_id
         FROM probes p JOIN a{iters} a ON a.cid = p.cid
         WHERE a.vec_id != p.query_id
-    ),
+    )"""
+
+
+def _ivf_fixedpoint_oracle() -> str:
+    return _ivf_probe_ctes(_IVF_PROBE) + """,
     pair AS MATERIALIZED (
         SELECT c.query_id, c.cand_id,
                SUM((q.qv - x.qv) * (q.qv - x.qv)) AS qdist
@@ -798,8 +763,18 @@ def _ivf_fixedpoint_oracle() -> str:
                                   ORDER BY qdist, cand_id) AS rnk
         FROM pair) t
     WHERE rnk <= 5
-    """)
-    return ",".join(parts)
+    """
+
+
+def _ivf_topk_oracle() -> str:
+    return _ivf_probe_ctes(_IVF_PROBE) + f""",
+    fv AS (
+        SELECT vec_id, embedding::DOUBLE[] AS vec,
+               sqrt(list_dot_product(embedding::DOUBLE[],
+                                     embedding::DOUBLE[])) AS norm
+        FROM embeddings
+    ),
+    {_rerank_oracle("cand", "fv")}"""
 
 
 def _fp_rows(emb: DataFrame, *carry) -> DataFrame:
@@ -836,21 +811,12 @@ def _fp_table(emb: DataFrame) -> dict:
     return durable_memo("fixedpoint_table", emb.sparkSession, "", emb, build)
 
 
-@register(
-    "sim_ivf_fixedpoint_topk",
-    oracle=_ivf_fixedpoint_oracle(),
-    doc="IVF ANN with INTEGER k-means (2^-20 quantized vectors, "
-        "BIGINT distances, floor-mean centroid updates, deterministic "
-        "tie-breaks): 3 Lloyd iterations + 2-probe top-5, value-hash-"
-        "checked against an unrolled MATERIALIZED DuckDB CTE chain — "
-        "the cross-engine-verifiable twin of the float sim_ivf_topk",
-)
-def sim_ivf_fixedpoint_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ivf_candidates(idx: dict, probe: int) -> DataFrame:
+    """The Spark twin of _ivf_probe_ctes over a trained index slice
+    (`_kmeans_index(emb, "ivf")`): (query_id, cand_id) for every
+    member of each probe vector's `probe` nearest lists."""
     from pyspark.sql import Window
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    probe = _IVF_PROBE
-    idx = _kmeans_index(emb, "ivf")
     v, cents, assign = idx["v"], idx["cents"], idx["assign"]
     qdist = (v.where(F.col("vec_id") < _N_QUERIES)
              .join(cents.hint("broadcast"), "dim")
@@ -860,15 +826,29 @@ def sim_ivf_fixedpoint_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     wp = Window.partitionBy("query_id").orderBy("d2", "cid")
     probes = (qdist.withColumn("rn", F.row_number().over(wp))
               .where(F.col("rn") <= probe).select("query_id", "cid"))
-    cand = (probes.join(assign.withColumnRenamed("vec_id", "cand_id"),
+    return (probes.join(assign.withColumnRenamed("vec_id", "cand_id"),
                         "cid")
             .where(F.col("cand_id") != F.col("query_id"))
             .select("query_id", "cand_id"))
+
+
+def _ivf_fp_topk(spark: SparkSession, sf_dir: str,
+                 probe: int) -> DataFrame:
+    """Integer-IVF retrieval with nprobe as an argument: the probed
+    candidates re-ranked by exact integer squared distance, top 5.
+    Every IVF query and the nprobe curve's legs serve from the same
+    memoized trained index."""
+    from pyspark.sql import Window
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    idx = _kmeans_index(emb, "ivf")
+    v = idx["v"]
     qv_q = v.select(F.col("vec_id").alias("query_id"), "dim",
                     F.col("qv").alias("qq"))
     qv_c = v.select(F.col("vec_id").alias("cand_id"), "dim",
                     F.col("qv").alias("qc"))
-    pair = (cand.join(qv_q.hint("broadcast"), "query_id")
+    pair = (_ivf_candidates(idx, probe)
+            .join(qv_q.hint("broadcast"), "query_id")
             .join(qv_c, ["cand_id", "dim"])
             .groupBy("query_id", "cand_id")
             .agg(F.sum((F.col("qq") - F.col("qc"))
@@ -881,34 +861,77 @@ def sim_ivf_fixedpoint_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("rnk").cast("int").alias("rnk")))
 
 
+@register(
+    "sim_ivf_fixedpoint_topk",
+    oracle=_ivf_fixedpoint_oracle(),
+    doc="IVF ANN with INTEGER k-means (2^-20 quantized vectors, "
+        "BIGINT distances, floor-mean centroid updates, deterministic "
+        "tie-breaks): 3 Lloyd iterations + 2-probe top-5, value-hash-"
+        "checked against an unrolled MATERIALIZED DuckDB CTE chain",
+)
+def sim_ivf_fixedpoint_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _ivf_fp_topk(spark, sf_dir, _IVF_PROBE)
+
+
+@register(
+    "sim_ivf_topk",
+    oracle=_ivf_topk_oracle(),
+    doc="IVF ANN: probes the 2 nearest of the stored integer k-means "
+        "index's 8 lists (the `ivf` config sim_ivf_fixedpoint_topk "
+        "probes) and re-ranks the probed candidates by the exact float "
+        "cosine of sim_bruteforce_topk — each query touches ~1/4 of the "
+        "corpus (brief: IVF variant). Its rows changed when the former "
+        "float k-means(16) index went (new candidate lists; recall@5 "
+        "0.88 / 0.92 at sf0.001 / sf0.01, was 0.84 / 0.80)",
+)
+def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    cands = _ivf_candidates(_kmeans_index(emb, "ivf"), _IVF_PROBE)
+    return sim.rerank_topk(emb, emb.where(F.col("vec_id") < _N_QUERIES),
+                           cands, k=5)
+
+
 # ---------------------------------------------------------------------------
-# fully hash-checked ANN recall matrix: every method in the comparison
-# (bucket LSH, Hamming-1 multi-probe, integer IVF) now has a
-# value-exact oracle, so the recall dashboard itself can be an oracled
-# row set — each method's top-5 is recomputed as a subquery of the
-# SAME oracle SQL registered for that method and joined against the
-# exact float top-5. (The older sim_ann_recall stays rows-only: it
-# includes the float k-means IVF.) Integer hit counts -> one division.
+# fully hash-checked ANN recall dashboards: every method in the
+# comparison (bucket LSH, multi-probe, integer IVF, the IVF re-rank)
+# has a value-exact oracle, so a recall dashboard is itself an
+# oracled row set — each method's top-5 is recomputed as a subquery of
+# the SAME oracle SQL registered for that method and left-joined to
+# the exact float top-5. Integer hit counts -> one division.
 # ---------------------------------------------------------------------------
+
+def _leg_recall_oracle(select: str, leg_sql: str) -> str:
+    """One leg of a recall dashboard's oracle: `select` over the exact
+    top-5 (f) left-joined to the leg's top-5 (q). Reads REGISTRY
+    directly (load_all() would re-enter this module's import); every
+    leg is registered earlier in this module."""
+    return f"""
+        SELECT {select}
+        FROM ({REGISTRY["sim_bruteforce_topk"].oracle}) f
+        LEFT JOIN ({leg_sql}) q
+          ON q.query_id = f.query_id AND q.cand_id = f.cand_id"""
+
+
+def _leg_hits(exact: DataFrame, leg: DataFrame) -> DataFrame:
+    """The Spark twin of _leg_recall_oracle's join: one row of n_hits
+    (exact pairs the leg found), n_exact (exact pairs) and n_queries."""
+    q = leg.select(F.col("query_id").alias("qq"),
+                   F.col("cand_id").alias("qc"))
+    return (exact.join(q, (F.col("query_id") == F.col("qq"))
+                       & (F.col("cand_id") == F.col("qc")), "left")
+            .agg(F.count("qc").cast("bigint").alias("n_hits"),
+                 F.count(F.lit(1)).cast("bigint").alias("n_exact"),
+                 F.countDistinct("query_id").cast("bigint")
+                 .alias("n_queries")))
+
 
 def _recall_matrix_oracle() -> str:
-    # REGISTRY direct (not load_all(): that would re-enter module
-    # loading during THIS module's import); every input is registered
-    # earlier in this same module, so the entries exist by now
-    from iq_to_hdl_migration_spark.queries import REGISTRY
-
-    exact = REGISTRY["sim_bruteforce_topk"].oracle
-    parts = []
-    for m, sql, role in _RECALL_LEGS():
-        parts.append(f"""
-        SELECT '{m}' AS method, '{role}' AS role,
+    return " UNION ALL ".join(_leg_recall_oracle(f"""
+               '{m}' AS method, '{role}' AS role,
                CAST(COUNT(q.cand_id) AS BIGINT) AS n_hits,
                CAST(COUNT(q.cand_id) AS DOUBLE)
-                   / CAST(COUNT(*) AS DOUBLE) AS recall_at_5
-        FROM ({exact}) f
-        LEFT JOIN ({sql}) q
-          ON q.query_id = f.query_id AND q.cand_id = f.cand_id""")
-    return " UNION ALL ".join(parts)
+                   / CAST(COUNT(*) AS DOUBLE) AS recall_at_5""", sql)
+        for m, sql, role in _RECALL_LEGS())
 
 
 def _RECALL_LEGS():
@@ -951,28 +974,65 @@ def _raw_recall_legs():
     doc="recall@5 vs exact float cosine for every oracled ANN method "
         "(bucket LSH, Hamming-1/-2 multi-probe, integer fixed-point "
         "IVF, PQ-ADC, incremental IVF — 6 legs) with the honest role "
-        "column; unlike sim_ann_recall (rows-only, includes float "
-        "k-means), every leg of this dashboard is value-hash-checked "
+        "column; every leg of this dashboard is value-hash-checked "
         "end-to-end",
 )
 def sim_ann_recall_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = (sim_bruteforce_topk(spark, sf_dir)
              .select("query_id", "cand_id"))
-    # leg registry names double as this module's function names
-    methods = {m: (globals()[name](spark, sf_dir), role)
-               for m, name, role in _raw_recall_legs()}
     out = None
-    for m, (df, role) in methods.items():
-        q = df.select(F.col("query_id").alias("qq"),
-                      F.col("cand_id").alias("qc"))
-        row = (exact.join(q, (F.col("query_id") == F.col("qq"))
-                          & (F.col("cand_id") == F.col("qc")), "left")
-               .agg(F.count("qc").cast("bigint").alias("n_hits"),
-                    (F.count("qc").cast("double")
-                     / F.count(F.lit(1)).cast("double"))
-                    .alias("recall_at_5"))
+    # leg registry names double as this module's function names
+    for m, name, role in _raw_recall_legs():
+        row = (_leg_hits(exact, globals()[name](spark, sf_dir))
                .select(F.lit(m).alias("method"), F.lit(role).alias("role"),
-                       "n_hits", "recall_at_5"))
+                       "n_hits",
+                       (F.col("n_hits").cast("double")
+                        / F.col("n_exact").cast("double"))
+                       .alias("recall_at_5")))
+        out = row if out is None else out.unionByName(row)
+    return out
+
+
+# (method, leg query) of the three-method dashboard
+_ANN_RECALL_LEGS = (("lsh", "sim_ann_lsh_topk"),
+                    ("lsh_multiprobe", "sim_ann_multiprobe_topk"),
+                    ("ivf", "sim_ivf_topk"))
+
+
+def _ann_recall_oracle() -> str:
+    return " UNION ALL ".join(_leg_recall_oracle(f"""
+               '{m}' AS method,
+               CAST(COUNT(DISTINCT f.query_id) AS BIGINT) AS n_queries,
+               CAST(COUNT(q.cand_id) AS DOUBLE)
+                   / CAST(COUNT(DISTINCT f.query_id) * 5 AS DOUBLE)
+                   AS recall_at_5""", REGISTRY[n].oracle)
+        for m, n in _ANN_RECALL_LEGS)
+
+
+@register(
+    "sim_ann_recall",
+    oracle=_ann_recall_oracle(),
+    doc="self-measuring ANN quality: joins the LSH-ANN, multi-probe "
+        "and IVF top-5 sets against the exact brute-force top-5 and "
+        "reports recall@5 per method — the accept/reject dashboard a "
+        "100 TB ANN deployment runs before trusting the approximate "
+        "path. On this synthetic corpus (i.i.d. random vectors, no "
+        "cluster structure) single-probe hyperplane LSH is the "
+        "documented worst case (~4%); the IVF re-rank with nprobe=2 "
+        "holds ~90%. Real embedding corpora are clustered, which is "
+        "what both methods exploit — the query exists precisely to "
+        "measure that before switching off the exact path",
+)
+def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    exact = (sim_bruteforce_topk(spark, sf_dir)
+             .select("query_id", "cand_id"))
+    out = None
+    for m, name in _ANN_RECALL_LEGS:
+        row = (_leg_hits(exact, globals()[name](spark, sf_dir))
+               .select(F.lit(m).alias("method"), "n_queries",
+                       (F.col("n_hits").cast("double")
+                        / (F.col("n_queries") * 5).cast("double"))
+                       .alias("recall_at_5")))
         out = row if out is None else out.unionByName(row)
     return out
 
@@ -2280,41 +2340,6 @@ def _nprobe_curve_oracle() -> str:
             + "\nUNION ALL\n".join(legs))
 
 
-def _ivf_fp_top5(spark: SparkSession, sf_dir: str, probe: int):
-    """Parameterized integer-IVF retrieval (the sim_ivf_fixedpoint_topk
-    pipeline with nprobe as an argument); serves the curve's legs from
-    the same memoized trained index."""
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = _kmeans_index(emb, "ivf")
-    v, cents, assign = idx["v"], idx["cents"], idx["assign"]
-    qdist = (v.where(F.col("vec_id") < _N_QUERIES)
-             .join(cents.hint("broadcast"), "dim")
-             .groupBy(F.col("vec_id").alias("query_id"), F.col("cid"))
-             .agg(F.sum((F.col("qv") - F.col("cq"))
-                        * (F.col("qv") - F.col("cq"))).alias("d2")))
-    wp = Window.partitionBy("query_id").orderBy("d2", "cid")
-    probes = (qdist.withColumn("rn", F.row_number().over(wp))
-              .where(F.col("rn") <= probe).select("query_id", "cid"))
-    cand = (probes.join(assign.withColumnRenamed("vec_id", "cand_id"),
-                        "cid")
-            .where(F.col("cand_id") != F.col("query_id"))
-            .select("query_id", "cand_id"))
-    qv_q = v.select(F.col("vec_id").alias("query_id"), "dim",
-                    F.col("qv").alias("qq"))
-    qv_c = v.select(F.col("vec_id").alias("cand_id"), "dim",
-                    F.col("qv").alias("qc"))
-    pair = (cand.join(qv_q.hint("broadcast"), "query_id")
-            .join(qv_c, ["cand_id", "dim"])
-            .groupBy("query_id", "cand_id")
-            .agg(F.sum((F.col("qq") - F.col("qc"))
-                       * (F.col("qq") - F.col("qc"))).alias("qd")))
-    wr = Window.partitionBy("query_id").orderBy("qd", "cand_id")
-    return (pair.withColumn("rnk", F.row_number().over(wr))
-            .where(F.col("rnk") <= 5).select("query_id", "cand_id"))
-
-
 @register(
     "sim_ivf_nprobe_recall_curve",
     oracle=_nprobe_curve_oracle(),
@@ -2333,7 +2358,7 @@ def sim_ivf_nprobe_recall_curve(spark: SparkSession,
         .select("query_id", "cand_id"))
     legs = []
     for p in _NPROBE_LEGS:
-        got = (_ivf_fp_top5(spark, sf_dir, p)
+        got = (_ivf_fp_topk(spark, sf_dir, p)
                .select(F.col("query_id").alias("g_q"),
                        F.col("cand_id").alias("g_c")))
         j = exact.join(

@@ -45,14 +45,10 @@ _BARRIER_GRANDFATHER = {
     # per-iteration dangling-mass scalar (10 rounds) x2 for the audit
     "graph_pagerank_convergence_report": 20,
     "graph_user_pagerank_fixedpoint_top20": 10,
-    "graph_user_pagerank_top20": 10,
     # driver-side DDL TEXT generation (bounded catalog rows -> SQL
     # strings) — not a data-path query
     "ddl_fk_statements": 8,
     "s7_generated_ddl": 9,
-    # float k-means trains with a per-iteration centroid collect
-    "sim_ann_recall": 3,
-    "sim_ivf_topk": 3,
 }
 
 

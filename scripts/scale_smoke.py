@@ -182,14 +182,10 @@ def sweep_names(reg) -> list[str]:
 
 
 def time_queries(spark, sf_dir: str, names: list[str]) -> dict[str, float]:
-    """Warm-up + one timed collect per name, after the untimed
-    stored-structure ingest (same contract as bench): pair-table
-    consumers are measured on their warm read."""
-    from iq_to_hdl_migration_spark.queries.warm import warm_all_memos
-    memo_sec = warm_all_memos(spark, sf_dir)
-    print(json.dumps({"memo_build_sec": memo_sec, "dir": sf_dir}),
-          file=sys.stderr)
-
+    """Warm-up + one timed collect per name. The untimed warm-up
+    collect builds the stored structures each name reads, so memo
+    consumers are measured on their warm read without warming the
+    families no name in the slice reads."""
     reg = load_all()
     return {name: round(bench.best_of(spark, reg[name], sf_dir, n=1), 3)
             for name in names}

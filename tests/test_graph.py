@@ -1,13 +1,14 @@
-"""PageRank: distributed result must match a dense NumPy power
-iteration on the same edge list (planted graph + the real query's
-derived graph)."""
+"""PageRank: the integer fixed-point trajectory's last iterate must
+match a dense NumPy power iteration on the same edge list (planted
+graphs + the real query's derived graph)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from iq_to_hdl_migration_spark.operators.graph import pagerank
+from iq_to_hdl_migration_spark.operators.graph import (
+    PR_SCALE, pagerank_fixedpoint_trajectory)
 
 
 def _numpy_pagerank(edges, iters=10, damping=0.85):
@@ -33,9 +34,11 @@ def _numpy_pagerank(edges, iters=10, damping=0.85):
     [(1, 2, 2.0), (2, 1, 1.0), (3, 3, 1.0)],                  # self-loop comp
 ])
 def test_pagerank_matches_numpy(spark, edges):
+    # integer weights, so the fixed-point run differs from the float
+    # recurrence only by its 2^-40 floor dust
     df = spark.createDataFrame(edges, "src int, dst int, weight double")
-    got = {r["node"]: r["rank"]
-           for r in pagerank(df, iters=10, weight="weight").collect()}
+    last = pagerank_fixedpoint_trajectory(df, iters=10)[-1]
+    got = {r["node"]: r["q"] / PR_SCALE for r in last.collect()}
     want = _numpy_pagerank(edges)
     assert set(got) == set(want)
     for v in want:
@@ -55,23 +58,20 @@ def test_user_pagerank_query(spark, sf_dir):
 
 
 def test_fixedpoint_pagerank_tracks_float_pagerank(spark, sf_dir):
-    """The integer 2^-40 fixed-point PageRank and the double-precision
-    one implement the same recurrence; per-edge floor dust is bounded
-    by (edges + nodes) * 2^-40 per iteration, so after 10 iterations
-    ranks must agree to ~1e-6 absolute and produce the same top-20
-    ordering on untied prefixes."""
+    """graph_user_pagerank_top20 reports rank = q / 2^40 of the same
+    stored integer fixed-point iterate as the fixed-point top-20, so
+    both return the same users in the same order with equal ranks."""
     from iq_to_hdl_migration_spark.queries import load_all
 
     reg = load_all()
-    fx = {r.user_id: r.rank for r in
+    fx = [(r.user_id, r.rank_q / PR_SCALE) for r in
           reg["graph_user_pagerank_fixedpoint_top20"].fn(
-              spark, sf_dir).collect()}
-    fl = {r.user_id: r.rank for r in
-          reg["graph_user_pagerank_top20"].fn(spark, sf_dir).collect()}
-    shared = set(fx) & set(fl)
-    assert len(shared) >= 15   # near-identical top sets
-    for u in shared:
-        assert abs(fx[u] - fl[u]) < 1e-6, (u, fx[u], fl[u])
+              spark, sf_dir).orderBy("rank_q", "user_id").collect()]
+    fl = [(r.user_id, r.rank) for r in
+          reg["graph_user_pagerank_top20"].fn(
+              spark, sf_dir).orderBy("rank", "user_id").collect()]
+    assert 0 < len(fl) <= 20
+    assert fx == fl
 
 
 def test_kcore_delta_census_matches_bruteforce(spark):

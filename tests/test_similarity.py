@@ -1,4 +1,5 @@
-"""Semantic tests for ANN operators — locks the rows-only LSH probe."""
+"""Semantic tests for ANN operators: brute force, the LSH probe, the
+exact re-rank and the fixed-point k-means index they serve from."""
 
 from __future__ import annotations
 
@@ -72,27 +73,31 @@ def test_embedding_near_dup_finds_planted_duplicate(spark, emb):
 
 
 def test_ivf_topk_recall_vs_bruteforce(spark, emb):
+    """The exact re-rank of the stored IVF lists: over every pair it is
+    brute force row for row; over 3 probed lists it returns k results
+    per query with brute force's cosines."""
+    from iq_to_hdl_migration_spark.queries.similarity_queries import (
+        _ivf_candidates, _kmeans_index)
+
     queries = emb.where(F.col("vec_id") < 5)
-    cents = sim.kmeans_centroids(emb, k=8, iters=2)
-    ivf = sim.ivf_topk(emb, queries, cents, k=5, n_probe=3)
     bf = sim.brute_force_topk(emb, queries, k=5)
-    ivf_sets = {}
+    every = (queries.select(F.col("vec_id").alias("query_id"))
+             .crossJoin(emb.select(F.col("vec_id").alias("cand_id")))
+             .where(F.col("query_id") != F.col("cand_id")))
+    assert (sorted(sim.rerank_topk(emb, queries, every, k=5).collect())
+            == sorted(bf.collect()))
+    cands = _ivf_candidates(_kmeans_index(emb, "ivf"), 3)
+    ivf = sim.rerank_topk(emb, queries, cands, k=5)
+    ivf_sets, bf_sets = {}, {}
     for r in ivf.collect():
         ivf_sets.setdefault(r.query_id, set()).add(r.cand_id)
-    bf_sets = {}
     for r in bf.collect():
         bf_sets.setdefault(r.query_id, set()).add(r.cand_id)
     # every query returns k results; recall vs exact top-5 >= 20% on
-    # random vectors (ANN trades recall for the 1/k scan)
+    # random vectors (ANN trades recall for the 3/8 scan)
     recalls = [len(ivf_sets[q] & bf_sets[q]) / 5 for q in bf_sets]
     assert all(len(ivf_sets[q]) == 5 for q in bf_sets)
     assert sum(recalls) / len(recalls) >= 0.2
-
-
-def test_kmeans_deterministic(emb):
-    a = sim.kmeans_centroids(emb, k=4, iters=2)
-    b = sim.kmeans_centroids(emb, k=4, iters=2)
-    assert a == b
 
 
 def test_bucket_codes_in_range(emb):
